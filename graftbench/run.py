@@ -9,14 +9,16 @@ from the current engine; `--mode dump --dump DIR` writes the dashboard
 and curation results plus their oracle SQL for tools/check.py.
 
 Run from the repository root. The first run builds the engine and the
-harness with sbt (offline) and caches the classpath under
-graftbench/.build; later runs reuse it while no source file changed.
+harness with sbt (offline), caching the classpath and the engine
+build's JVM options under graftbench/.build, and writes the corpus
+under graftbench/.work; later runs reuse both while no source changed.
 The harness JVM does all the work; this wrapper only builds, launches,
 enforces the time limit and relays the result. The last line of stdout
 is the result object; the line before it is the run's provenance and
 full report. See graftbench/README.md for workloads and metrics.
 """
 import argparse
+import glob
 import hashlib
 import json
 import os
@@ -32,6 +34,9 @@ WORK = os.path.join(BENCH, ".work")
 BUILD = os.path.join(BENCH, ".build")
 # Corpus scale factor (sf 0.01 = 60k lineitem rows); see README.md.
 SF = "0.01"
+# A run (after the build and the corpus) ends within this many seconds.
+# The harness stops its ops and checks inside this limit; the wrapper
+# kills a JVM that outlives it.
 RUN_LIMIT_S = 172
 
 
@@ -76,17 +81,28 @@ def corpus_key():
         return hashlib.sha256(f.read()).hexdigest()[:16]
 
 
+def driver_mem():
+    """The heap the engine build gives its JVMs (SPARK_DRIVER_MEM), set
+    as the repository's tier-1 test command in ROADMAP.md sets it: half
+    of RAM, clamped to 2..8 GiB."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{min(8, max(2, kb // 2097152))}g"
+
+
 def build():
-    """Compile with sbt and return the runtime classpath."""
-    key = source_key()
-    cp_file = os.path.join(BUILD, "classpath")
-    key_file = os.path.join(BUILD, "key")
-    if os.path.exists(cp_file) and os.path.exists(key_file):
-        with open(key_file) as f:
-            if f.read() == key:
-                with open(cp_file) as f:
-                    return f.read()
-    env = dict(os.environ, COURSIER_MODE="offline")
+    """Compile with sbt; return the runtime classpath and the JVM options
+    the engine build gives its forked JVMs."""
+    key = source_key() + " " + driver_mem()
+    cache = os.path.join(BUILD, "build.json")
+    if os.path.exists(cache):
+        with open(cache) as f:
+            built = json.load(f)
+        if built["key"] == key:
+            return built["classpath"], built["java_options"]
+    env = dict(os.environ, COURSIER_MODE="offline", SPARK_DRIVER_MEM=driver_mem())
     opts = env.get("SBT_OPTS", "")
     for flag in ("-Dsbt.offline=true", "-Dsbt.override.build.repos=true"):
         if flag.split("=")[0] not in opts:
@@ -96,91 +112,67 @@ def build():
     t0 = time.time()
     p = subprocess.run(
         ["sbt", "-batch", "-Dsbt.log.noformat=true", "compile",
-         "export Runtime/fullClasspath"],
+         "export Runtime/fullClasspath", "print javaOptions"],
         cwd=BENCH, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
         stdin=subprocess.DEVNULL, text=True, timeout=800)
-    if p.returncode != 0:
+    out = p.stdout.splitlines()
+    cp = [ln.strip() for ln in out if ".jar" in ln and not ln.startswith(("[", "*"))]
+    java_options = [ln[2:].strip() for ln in out if ln.startswith("* ")]
+    if p.returncode != 0 or not cp or not java_options:
         sys.stderr.write(p.stdout[-4000:])
         raise SystemExit("build failed")
-    lines = [ln for ln in p.stdout.splitlines()
-             if ".jar" in ln and not ln.startswith("[")]
-    if not lines:
-        sys.stderr.write(p.stdout[-4000:])
-        raise SystemExit("build printed no classpath")
-    cp = lines[-1].strip()
     os.makedirs(BUILD, exist_ok=True)
-    with open(cp_file, "w") as f:
-        f.write(cp)
-    with open(key_file, "w") as f:
-        f.write(key)
+    with open(cache, "w") as f:
+        json.dump({"key": key, "classpath": cp[-1], "java_options": java_options}, f)
     log(f"built in {time.time() - t0:.0f} s")
-    return cp
+    return cp[-1], java_options
 
 
-def heap():
-    """The heap the repository's test command gives the engine: half of
-    RAM, clamped to 2..8 GiB, unless SPARK_DRIVER_MEM says otherwise."""
-    if os.environ.get("SPARK_DRIVER_MEM"):
-        return os.environ["SPARK_DRIVER_MEM"]
-    try:
-        with open("/proc/meminfo") as f:
-            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
-        return f"{min(8, max(2, kb // 2097152))}g"
-    except (OSError, StopIteration):
-        return "2g"
-
-
-JAVA_OPTS = [
-    # what build.sbt passes to forked engine JVMs
-    *[x for p in ("java.base/java.lang", "java.base/java.lang.invoke",
-                  "java.base/java.lang.reflect", "java.base/java.io",
-                  "java.base/java.net", "java.base/java.nio",
-                  "java.base/java.util", "java.base/java.util.concurrent",
-                  "java.base/java.util.concurrent.atomic",
-                  "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-                  "java.base/sun.security.action",
-                  "java.base/sun.util.calendar")
-      for x in ("--add-opens", f"{p}=ALL-UNNAMED")],
-    "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-    "-XX:ReservedCodeCacheSize=1g", "-XX:+UseCodeCacheFlushing",
-    "-XX:CICompilerCount=6", "-XX:+UnlockDiagnosticVMOptions",
-    "-XX:GCLockerRetryAllocationCount=100",
-]
-
-
-def run_jvm(cp, args, deadline):
-    """One harness JVM; returns its result file's lines or None."""
-    for d in ("tmp", "spark-local"):
-        os.makedirs(os.path.join(WORK, d), exist_ok=True)
-    out = os.path.join(WORK, "result.json")
-    if os.path.exists(out):
-        os.remove(out)
-    cores = len(os.sched_getaffinity(0))
+def harness(built, args, mode, deadline, baseline=""):
+    """The command line of one harness JVM that must end by `deadline`."""
+    cp, java_options = built
     java = shutil.which("java") or os.path.join(os.environ.get("JAVA_HOME", ""), "bin", "java")
     expected = os.path.join(BENCH, "expected", "digests.json")
-    cmd = [java, f"-Xmx{heap()}", *JAVA_OPTS,
-           f"-Djava.io.tmpdir={os.path.join(WORK, 'tmp')}",
-           "-cp", cp, "graftbench.Main", "--mode", args.mode,
-           "--workload", str(args.workload), "--seed", str(args.seed),
-           "--seconds", str(args.seconds), "--trace", str(args.trace),
-           "--work", WORK, "--cores", str(cores), "--sf", SF,
-           "--corpus-key", corpus_key(), "--expected", expected, "--dump", os.path.abspath(args.dump),
-           "--out", expected if args.mode == "digests" else out]
+    return [java, *java_options,
+            f"-Djava.io.tmpdir={os.path.join(WORK, 'tmp')}",
+            "-cp", cp, "graftbench.Main", "--mode", mode,
+            "--workload", str(args.workload), "--seed", str(args.seed),
+            "--seconds", str(args.seconds), "--trace", str(args.trace),
+            "--work", WORK, "--cores", str(len(os.sched_getaffinity(0))), "--sf", SF,
+            "--corpus-key", f"{corpus_key()} sf{SF}", "--expected", expected,
+            "--dump", os.path.abspath(args.dump), "--baseline", baseline,
+            "--deadline-ms", str(int(deadline * 1000)),
+            "--out", expected if mode == "digests" else os.path.join(WORK, "result.json")]
+
+
+def run_jvm(cmd, deadline):
+    """Run one harness JVM, killing it at `deadline`; returns its exit
+    code, or None when it had to be killed."""
+    for d in ("tmp", "spark-local"):
+        os.makedirs(os.path.join(WORK, d), exist_ok=True)
     env = dict(os.environ, SPARK_LOCAL_DIRS=os.path.join(WORK, "spark-local"))
     p = subprocess.Popen(cmd, cwd=ROOT, env=env, stdin=subprocess.DEVNULL,
                          stdout=sys.stderr, stderr=sys.stderr,
                          start_new_session=True)
     try:
-        code = p.wait(timeout=max(1.0, deadline - time.time()))
+        return p.wait(timeout=max(1.0, deadline - time.time()))
     except subprocess.TimeoutExpired:
         log("run exceeded its time limit; stopping the JVM")
         os.killpg(p.pid, signal.SIGKILL)
         p.wait()
         return None
-    if args.mode != "run":
-        return [] if code == 0 else None
-    if code != 0 or not os.path.exists(out):
-        log(f"harness exited with code {code}")
+
+
+def measured_run(built, args, deadline, baseline):
+    """One measured run; returns its result file's lines, or None. The
+    harness writes the file whole as its last step, so a result written
+    by a JVM that then failed to stop still counts."""
+    out = os.path.join(WORK, "result.json")
+    if os.path.exists(out):
+        os.remove(out)
+    code = run_jvm(harness(built, args, "run", deadline, baseline), deadline)
+    if not os.path.exists(out):
+        log(f"harness wrote no result (exit code {code})")
         return None
     with open(out) as f:
         return f.read().splitlines()
@@ -201,18 +193,32 @@ def main():
             and os.path.isdir(os.path.join(ROOT, "src", "main", "scala"))):
         log("no engine sources next to the benchmark; nothing to run")
         return 2
-    cp = build()
-    start = time.time()
-    deadline = start + RUN_LIMIT_S
-    if args.trace == 1 and not os.path.exists(
-            os.path.join(WORK, f"e2e_{args.workload}.txt")):
-        # trace overhead is measured against an untraced run
-        untraced = argparse.Namespace(**{**vars(args), "trace": 0})
-        if run_jvm(cp, untraced, start + 100) is None:
+    built = build()
+    key_file = os.path.join(WORK, "corpus", "_KEY")
+    want = f"{corpus_key()} sf{SF}"
+    if not (os.path.exists(key_file) and open(key_file).read() == want):
+        if run_jvm(harness(built, args, "corpus", time.time() + 600), time.time() + 600) != 0:
+            log("writing the corpus failed")
             return 1
     if args.mode != "run":
-        return 0 if run_jvm(cp, args, time.time() + 3600) is not None else 1
-    lines = run_jvm(cp, args, deadline)
+        deadline = time.time() + 3600
+        return 0 if run_jvm(harness(built, args, args.mode, deadline), deadline) == 0 else 1
+
+    start = time.time()
+    deadline = start + RUN_LIMIT_S
+    # the untraced figures of this workload, seed and build, which the
+    # traced run's trace.overhead_pct.* compare against
+    key = source_key()[:16]
+    baseline = os.path.join(WORK, f"e2e_{args.workload}_{args.seed}_{key}.txt")
+    for stale in glob.glob(os.path.join(WORK, "e2e_*.txt")):
+        if not stale.endswith(f"_{key}.txt"):
+            os.remove(stale)
+    if args.trace == 1 and not os.path.exists(baseline):
+        # the untraced run may take 60% of the limit; a traced run after
+        # a slow one has less time before its ops are stopped
+        untraced = argparse.Namespace(**{**vars(args), "trace": 0})
+        measured_run(built, untraced, start + 0.6 * RUN_LIMIT_S, baseline)
+    lines = measured_run(built, args, deadline, baseline)
     if not lines:
         return 1
     report, result = json.loads(lines[0]), lines[-1]

@@ -15,6 +15,16 @@ final case class Op(id: String, name: String, kind: String, startNs: Long,
   def ok: Boolean = error.isEmpty
 }
 
+object Watchdog {
+  /** Longest any one op may run. */
+  val OpTimeoutNs: Long = 60L * 1000000000L
+
+  /** Deadline of an op starting now: its own timeout, but never past
+    * `stopNs`, so a hung op is cancelled (and counted) while the run
+    * still has time to check and report. */
+  def deadline(stopNs: Long): Long = math.min(System.nanoTime() + OpTimeoutNs, stopNs)
+}
+
 /** Cancels an op that outlives its deadline: a timed-out op counts as
   * failed and its Spark jobs are cancelled, so one hung query cannot
   * stall the run. */
@@ -36,8 +46,8 @@ final class Watchdog(spark: SparkSession) extends AutoCloseable {
   thread.setDaemon(true)
   thread.start()
 
-  def arm(group: String, timeoutS: Double, onExpire: () => Unit = () => ()): Unit = {
-    armed.put(group, (System.nanoTime() + (timeoutS * 1e9).toLong, onExpire)); ()
+  def arm(group: String, deadlineNs: Long, onExpire: () => Unit = () => ()): Unit = {
+    armed.put(group, (deadlineNs, onExpire)); ()
   }
   def disarm(group: String): Boolean = armed.remove(group) != null
   def close(): Unit = thread.interrupt()
@@ -60,7 +70,7 @@ object MemoLog {
   * result digest observed in the same pass, check the digest. */
 final class QueryRunner(spark: SparkSession, corpus: String,
     expected: Map[String, String], trace: Option[Trace], watchdog: Watchdog,
-    timeoutS: () => Double) {
+    hardStopNs: Long) {
   private val queries = graft.SparkEntry.queries
 
   /** The digest of one query's result, unchecked (the digest-refresh
@@ -75,13 +85,13 @@ final class QueryRunner(spark: SparkSession, corpus: String,
   def run(id: String, name: String, kind: String): Op = {
     val sc = spark.sparkContext
     sc.setJobGroup(id, name, interruptOnCancel = true)
-    watchdog.arm(id, timeoutS())
+    watchdog.arm(id, Watchdog.deadline(hardStopNs))
     val t0 = System.nanoTime()
     var tc = t0
     var rows = 0L
     var wrong = false
     var early = Seq.empty[(String, String, Boolean, Double)]
-    val result = try {
+    val outcome = try {
       graft.SessionMemo.attributing(id) {
         val df: DataFrame = queries(name)(spark, corpus)
         tc = System.nanoTime()
@@ -100,10 +110,9 @@ final class QueryRunner(spark: SparkSession, corpus: String,
     } catch {
       case e: Throwable => Some(e.getClass.getSimpleName + ": " +
         Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
-    } finally {
-      watchdog.disarm(id)
-      sc.clearJobGroup()
-    }
+    } finally sc.clearJobGroup()
+    // a result that came after the watchdog fired still counts as failed
+    val result = if (watchdog.disarm(id)) outcome else outcome.orElse(Some("timed out"))
     val t1 = System.nanoTime()
     result.foreach(e => System.err.println(s"[graftbench] $name failed: ${e.take(300)}"))
     val memo = early ++ MemoLog.take(id)

@@ -8,25 +8,46 @@ import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.types._
 
-/** The only writing workload: a closed loop of one client. Each tick
-  * lands one seeded file of order changes (Zipf-skewed updates of
-  * existing orders plus new orders) into the stream feeding
-  * `Ingest.upsertSink`, and one seeded events file (a few rows out of
-  * order, inside the watermark) into the stream feeding
-  * `Events.sessionizeStream`; the tick's write is done when both
-  * streams have processed their file. `Ingest.compactSnapshot` runs
-  * every [[CompactEvery]] ticks. The tick ends with seeded point and
-  * range reads of the snapshot, each checked against an in-harness
-  * last-write-wins fold of everything landed. */
+/** The only writing workload: a closed loop of one client. Its ticks
+  * have the shape of the reference's refresh (`BASELINE.md`,
+  * `SURVEY.md` S4): each payroll release appends the newest month to a
+  * series of about [[SeriesMonths]] months and revises the
+  * [[RevisedReleases]] months before it, and the ETL upserts the
+  * changed rows by key. Here one tick is one release over the orders
+  * table: it appends 1/[[SeriesMonths]] of the base orders as new keys
+  * and revises every key the previous [[RevisedReleases]] ticks
+  * appended. The snapshot is range-partitioned on the key (new keys are
+  * the highest, as new months are the latest), into [[SnapParts]]
+  * partitions over the base keys, so a tick's merge touches one or two
+  * partitions and leaves the rest unopened.
+  *
+  * Each tick lands its order changes into the stream feeding
+  * `Ingest.upsertSink`, and the next slice of events into the stream
+  * feeding `Events.sessionizeStream`; the tick's write is done when
+  * both streams have processed their file. `Ingest.compactSnapshot`
+  * runs every [[CompactEvery]] ticks. The tick ends with the reads the
+  * reference's dashboard makes after a refresh: the whole series
+  * rolled up, a year of it, and a single month, each checked against
+  * an in-harness last-write-wins fold of everything landed. */
 object IngestLoad extends Workload {
-  val CompactEvery = 3
-  val PointReads = 3
-  val RangeWidth = 300
+  /** Months in the reference's series (2019-01 to 2025-10). */
+  val SeriesMonths = 85
+  /** Months each release revises before the one it appends. */
+  val RevisedReleases = 2
+  /** The engine's default snapshot partition count. */
+  val SnapParts = 16
+  /** Ticks per pass; the pass is what `batch_s` times. */
+  val Ticks = 12
+  /** Untimed ticks at the end of set-up: a session's first writes run
+    * up to twice as slow while the JVM compiles the write and read paths,
+    * and level off after about four ticks. */
+  val WarmUpTicks = 4
+  val CompactEvery = 4
   private val Statuses = Vector("F", "O", "P")
   private val ChangeSchema = StructType(Seq(StructField("o_orderkey", LongType),
     StructField("o_custkey", LongType), StructField("o_orderstatus", StringType),
@@ -38,16 +59,20 @@ object IngestLoad extends Workload {
     def row: Row = Row(key, cust, status, price, java.sql.Date.valueOf(date), version)
   }
 
-  /** Per-session state, rebuilt by every [[prepare]]. */
+  /** Per-session state, built by [[prepare]]. */
   private final class State(val c: Ctx) {
     val spark: SparkSession = c.spark
     val snap = s"${c.run}/snapshot"
     val landOrders = s"${c.run}/land_orders"
     val landEvents = s"${c.run}/land_events"
     val fold = mutable.HashMap.empty[Long, Order]
-    val baseKeys = ArrayBuffer.empty[Long]
+    /** keys one release appends, and the width of one partition */
+    var perRelease, partWidth = 1L
+    /** keys appended by the latest releases, newest last */
+    val releases = ArrayBuffer.empty[Seq[Long]]
     var nextKey = 0L
     var nextVersion = 1L
+    var eventsPerTick = 1
     var nextEventId = 0L
     var maxEventTs: LocalDateTime = Corpus.EventsStart
     var landedBytes, landedRows, writtenBytes = 0L
@@ -55,9 +80,11 @@ object IngestLoad extends Workload {
     var snapFiles = Map.empty[String, Long]
     var upsert: StreamingQuery = _
     var sessions: StreamingQuery = _
-    val progress = new java.util.concurrent.ConcurrentLinkedQueue[(String, org.apache.spark.sql.streaming.StreamingQueryProgress)]
-    var zipfCdf: Array[Double] = Array.empty
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[(String, StreamingQueryProgress)]
     var users = 1
+    var liveBytes = 0L
+    /** the warm-up ticks' ops: untimed, but checked and counted */
+    var warmUpOps = Seq.empty[Op]
 
     /** Write `rows` as one parquet file and move it into `dir` whole,
       * so a stream never lists a half-written file. */
@@ -87,11 +114,16 @@ object IngestLoad extends Workload {
       }
     }
 
-    /** Bytes of snapshot files that appeared since the last call. */
-    def noteWrites(): Unit = {
+    /** Adds the bytes of snapshot files that appeared since the last
+      * call to `writtenBytes`; returns the share of the snapshot's
+      * partitions that hold such a file. */
+    def noteWrites(): Double = {
       val now = listSnapshot()
-      writtenBytes += now.collect { case (p, b) if !snapFiles.contains(p) => b }.sum
+      val fresh = now.keySet -- snapFiles.keySet
+      writtenBytes += fresh.toSeq.map(now).sum
       snapFiles = now
+      def part(f: String) = Paths.get(f).getParent.toString
+      fresh.map(part).size.toDouble / math.max(1, now.keySet.map(part).size)
     }
 
     def awaitBoth(): Unit = { upsert.processAllAvailable(); sessions.processAllAvailable() }
@@ -100,20 +132,22 @@ object IngestLoad extends Workload {
   private var st: State = _
 
   override def prepare(c: Ctx): Unit = {
-    Main.deleteTree(Paths.get(c.run))
     val s = new State(c)
     st = s
     val spark = c.spark
-    s.users = Corpus.sizes(c.sf).users
+    val z = Corpus.sizes(c.sf)
+    s.users = z.users
     // base snapshot: the corpus orders at version 0
     val base = Corpus.orders(c.sf).map(r => Order(r.getLong(0), r.getLong(1),
       r.getString(2), r.getDouble(3), r.getAs[LocalDateTime](4).toLocalDate, 0L))
     base.foreach(o => s.fold(o.key) = o)
-    s.baseKeys ++= Seeds.shuffle(base.map(_.key).toSeq.sorted, Seeds.rng(c.seed, 7))
     s.nextKey = base.map(_.key).max + 1
-    // Zipf(1.1) over base keys: rank i is drawn with weight 1/i^1.1
-    val w = (1 to s.baseKeys.size).map(i => 1.0 / math.pow(i, 1.1))
-    s.zipfCdf = w.scanLeft(0.0)(_ + _).tail.map(_ / w.sum).toArray
+    s.perRelease = math.max(1L, math.round(base.size.toDouble / SeriesMonths))
+    s.partWidth = (base.size + SnapParts - 1) / SnapParts
+    s.eventsPerTick = math.max(1, math.round(z.events.toDouble / SeriesMonths).toInt)
+    // the base's newest keys stand for the releases before the first tick
+    (RevisedReleases to 1 by -1).foreach(i =>
+      s.releases += (s.nextKey - i * s.perRelease until s.nextKey - (i - 1) * s.perRelease))
     s.land(s.landOrders, "orders_base.parquet", ChangeSchema, base.map(_.row).toSeq)
     // base events: the corpus events file, named as the reader expects
     Files.createDirectories(Paths.get(s.landEvents))
@@ -129,8 +163,10 @@ object IngestLoad extends Workload {
       def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         s.progress.add(e.progress.name -> e.progress)
     })
+    val width = s.partWidth
     val orders = spark.readStream.schema(ChangeSchema).parquet(s.landOrders)
-    s.upsert = graft.sources.Ingest.upsertSink(orders, s.snap, "o_orderkey", "version")
+    s.upsert = graft.sources.Ingest.upsertSink(orders, s.snap, "o_orderkey", "version",
+        (k: Column) => floor(k / lit(width)))
       .option("checkpointLocation", s"${c.run}/ckpt_upsert")
       .queryName("ingest_upsert").start()
     s.sessions = graft.streaming.Events.sessionizeStream(spark, s.landEvents)
@@ -139,139 +175,126 @@ object IngestLoad extends Workload {
       .queryName("ingest_sessions").start()
     s.awaitBoth()
     s.noteWrites()
+    s.warmUpOps = (0 until WarmUpTicks).flatMap(t => runTick(c, s, t, ArrayBuffer.empty))
     s.writtenBytes = 0L
+    s.landedBytes = 0L
+    s.landedRows = 0L
   }
 
-  private def zipfKey(s: State, r: SplittableRandom): Long = {
-    val i = java.util.Arrays.binarySearch(s.zipfCdf, r.nextDouble())
-    s.baseKeys(math.min(s.baseKeys.size - 1, if (i >= 0) i else -i - 1))
+  private def newOrder(s: State, r: SplittableRandom, key: Long, cust: Long): Order = {
+    val o = Order(key, cust, Statuses(r.nextInt(3)),
+      math.round((1000 + r.nextDouble() * 499000) * 100) / 100.0,
+      LocalDate.of(1995, 1, 1).plusDays(r.nextInt(2404).toLong), s.nextVersion)
+    s.nextVersion += 1
+    o
   }
 
-  /** One tick's seeded order changes: 90% updates, 10% new orders. */
-  private def changes(s: State, r: SplittableRandom, n: Int): Seq[Order] =
-    (0 until n).map { _ =>
-      val key = if (r.nextInt(10) == 0) { s.nextKey += 1; s.nextKey - 1 } else zipfKey(s, r)
-      val cust = s.fold.get(key).map(_.cust).getOrElse(r.nextInt(1000).toLong)
-      val o = Order(key, cust, Statuses(r.nextInt(3)),
-        math.round((1000 + r.nextDouble() * 499000) * 100) / 100.0,
-        LocalDate.of(1995, 1, 1).plusDays(r.nextInt(2404).toLong), s.nextVersion)
-      s.nextVersion += 1
-      o
-    }
+  /** One release: new values for every key of the previous
+    * [[RevisedReleases]] releases, then [[State.perRelease]] new keys. */
+  private def release(s: State, r: SplittableRandom): Seq[Order] = {
+    val revised = s.releases.takeRight(RevisedReleases).flatten.map(k =>
+      newOrder(s, r, k, s.fold(k).cust))
+    val appended = (s.nextKey until s.nextKey + s.perRelease).map(k =>
+      newOrder(s, r, k, r.nextInt(1000).toLong))
+    s.nextKey += s.perRelease
+    s.releases += appended.map(_.key)
+    if (s.releases.size > RevisedReleases) s.releases.remove(0)
+    revised.toSeq ++ appended
+  }
 
-  /** One tick's seeded events: time moves on about two hours; one row
-    * in twenty lands up to 20 minutes before the previous maximum,
-    * inside the sessionizer's 30-minute watermark. */
+  /** One tick's events: the next slice of the corpus's own arrival
+    * process (same mean gap, [[State.eventsPerTick]] rows). The stream
+    * must also take rows that arrive out of order: one row in twenty
+    * carries a time up to 20 minutes before the latest one already
+    * landed, inside the sessionizer's 30-minute watermark. The
+    * reference has no event stream, so this share and delay are this
+    * workload's choice. */
   private def events(s: State, r: SplittableRandom, n: Int): Seq[Row] = {
+    val meanGapS = Corpus.EventsSpanSeconds.toDouble / Corpus.sizes(s.c.sf).events
     val prevMax = s.maxEventTs
     var t = prevMax
     (0 until n).map { _ =>
       val ts = if (r.nextInt(20) == 0) prevMax.minusSeconds(r.nextInt(1200).toLong)
-        else { t = t.plusNanos((-math.log(1 - r.nextDouble()) * 24e9).toLong + 1000); t }
+        else { t = t.plusNanos((-math.log(1 - r.nextDouble()) * meanGapS * 1e9).toLong + 1000); t }
       if (ts.isAfter(s.maxEventTs)) s.maxEventTs = ts
       s.nextEventId += 1
       Corpus.eventRow(r, s.nextEventId - 1, ts.withNano(ts.getNano / 1000 * 1000), s.users)
     }
   }
 
-  private def readOp(c: Ctx, id: String, name: String)(f: => Option[String]): Op = {
+  private def readOp(c: Ctx, id: String, name: String, stopNs: Long)(f: => Option[String]): Op = {
     c.spark.sparkContext.setJobGroup(id, name, interruptOnCancel = true)
-    c.watchdog.arm(id, 60)
+    c.watchdog.arm(id, Watchdog.deadline(stopNs))
     val t0 = System.nanoTime()
-    val err = try f catch { case e: Throwable => Some(e.toString.take(300)) }
-      finally { c.watchdog.disarm(id); c.spark.sparkContext.clearJobGroup() }
+    val err = timed(c, id, try f catch { case e: Throwable => Some(e.toString.take(300)) })
+    c.spark.sparkContext.clearJobGroup()
     val t1 = System.nanoTime()
     err.foreach(e => System.err.println(s"[graftbench] $id failed: $e"))
     c.trace.foreach(_.spans.add(Span("ingest.read", id, "", t0, t1)))
     Op(id, name, "read", t0, t1, err, wrong = err.exists(_.startsWith("mismatch")))
   }
 
-  private def snapshotRows(s: State, filter: org.apache.spark.sql.Column) =
+  /** `err` of an op the watchdog armed for, or a timeout if the
+    * watchdog fired first (a late success still counts as failed). */
+  private def timed(c: Ctx, id: String, err: Option[String]): Option[String] =
+    if (c.watchdog.disarm(id)) err else err.orElse(Some("timed out"))
+
+  private def snapshotRows(s: State, filter: Column) =
     s.spark.read.parquet(s.snap).filter(filter)
+
+  private def orderOf(r: Row): Order = Order(r.getLong(0), r.getLong(1), r.getString(2),
+    r.getDouble(3), r.getDate(4).toLocalDate, r.getLong(5))
+
+  /** Row count, version sum and price sum (in cents) of `keys`' rows,
+    * from the snapshot and from the fold. */
+  private def rollUp(s: State, id: String, keys: Column, want: Iterable[Order]): Option[String] = {
+    val row = snapshotRows(s, keys)
+      .agg(count(lit(1)), coalesce(sum("version"), lit(0L)),
+        coalesce(sum(round(col("o_totalprice") * 100).cast("long")), lit(0L)))
+      .head()
+    val w = (want.size.toLong, want.map(_.version).sum, want.map(o => math.round(o.price * 100)).sum)
+    if ((row.getLong(0), row.getLong(1), row.getLong(2)) == w) None
+    else Some(s"mismatch in $id: $row vs $w")
+  }
 
   def measure(c: Ctx): Measured = {
     val s = st
     val ops = ArrayBuffer.empty[Op]
-    val cycles = ArrayBuffer.empty[Double]
+    val passes = ArrayBuffer.empty[Double]
     val compactMs = ArrayBuffer.empty[Double]
+    val touched = ArrayBuffer.empty[Double]
     var compacted = 0L
     s.progress.clear()
-    val rowsPerTick = math.max(200, (100000 * c.sf).toInt)
-    val eventsPerTick = math.max(100, (30000 * c.sf).toInt)
     val t0 = System.nanoTime()
     val deadline = t0 + (c.seconds * 1e9).toLong
     var tick = 0
-    var cycleStart = t0
-    while (System.nanoTime() < deadline ||
-        (tick % CompactEvery != 0 && System.nanoTime() < c.hardStopNs)) {
-      val r = Seeds.rng(c.seed, tick)
-      val batch = changes(s, r, rowsPerTick)
-      val evRows = events(s, r, eventsPerTick)
-      // stage both files, then land them together and time to visible
-      val stageO = s.land(s"${c.run}/ready", f"orders_$tick%06d.parquet", ChangeSchema, batch.map(_.row))
-      val stageE = s.land(s"${c.run}/ready", f"events_$tick%06d.parquet", Corpus.EventSchema, evRows)
-      s.landedBytes += Files.size(stageO)
-      s.landedRows += batch.size + evRows.size
-      val id = s"ingest-w$tick"
-      c.watchdog.arm(id, 60, () => { s.upsert.stop(); s.sessions.stop() })
-      val w0 = System.nanoTime()
-      Files.move(stageO, Paths.get(s.landOrders, stageO.getFileName.toString), StandardCopyOption.ATOMIC_MOVE)
-      Files.move(stageE, Paths.get(s.landEvents, stageE.getFileName.toString), StandardCopyOption.ATOMIC_MOVE)
-      val err = try { s.awaitBoth(); None } catch { case e: Throwable => Some(e.toString.take(300)) }
-      c.watchdog.disarm(id)
-      val w1 = System.nanoTime()
-      err.foreach(e => System.err.println(s"[graftbench] $id failed: $e"))
-      c.trace.foreach(_.spans.add(Span("ingest.write", id, "", w0, w1)))
-      ops += Op(id, "write", "write", w0, w1, err)
-      s.eventFiles += s"${s.landEvents}/${stageE.getFileName}"
-      batch.foreach(o => s.fold(o.key) = o)
-      s.noteWrites()
-
-      // seeded reads: recently changed keys, a cold key, one key range
-      val keys = Seq.fill(PointReads - 1)(batch(r.nextInt(batch.size)).key) :+
-        s.baseKeys(r.nextInt(s.baseKeys.size))
-      keys.zipWithIndex.foreach { case (k, i) =>
-        ops += readOp(c, s"ingest-r$tick-$i", "point_read") {
-          val got = snapshotRows(s, col("o_orderkey") === k)
-            .select(ChangeSchema.fieldNames.map(col).toIndexedSeq: _*).collect()
-            .map(r => Order(r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3),
-              r.getDate(4).toLocalDate, r.getLong(5))).toSeq
-          if (got == s.fold.get(k).toSeq) None else Some(s"mismatch at key $k: $got")
+    while (System.nanoTime() < math.min(deadline, c.hardStopNs)) {
+      val ps = System.nanoTime()
+      for (_ <- 0 until Ticks if System.nanoTime() < c.hardStopNs) {
+        ops ++= runTick(c, s, WarmUpTicks + tick, touched)
+        tick += 1
+        if (tick % CompactEvery == 0 && System.nanoTime() < c.hardStopNs) {
+          val cid = s"ingest-compact$tick"
+          c.spark.sparkContext.setJobGroup(cid, "compact", interruptOnCancel = true)
+          c.watchdog.arm(cid, Watchdog.deadline(c.hardStopNs))
+          val k0 = System.nanoTime()
+          val cerr = timed(c, cid,
+            try { compacted += graft.sources.Ingest.compactSnapshot(c.spark, s.snap); None }
+            catch { case e: Throwable => Some(e.toString.take(300)) })
+          c.spark.sparkContext.clearJobGroup()
+          val k1 = System.nanoTime()
+          compactMs += (k1 - k0) / 1e6
+          c.trace.foreach(_.spans.add(Span("ingest.compact", cid, "", k0, k1)))
+          ops += Op(cid, "compact", "compact", k0, k1, cerr)
+          s.noteWrites()
         }
       }
-      val lo = s.baseKeys(r.nextInt(s.baseKeys.size))
-      ops += readOp(c, s"ingest-r$tick-range", "range_read") {
-        val row = snapshotRows(s, col("o_orderkey").between(lo, lo + RangeWidth - 1))
-          .agg(count(lit(1)), coalesce(sum("version"), lit(0L)),
-            coalesce(sum(round(col("o_totalprice") * 100).cast("long")), lit(0L)))
-          .head()
-        val want = (lo until lo + RangeWidth).flatMap(s.fold.get)
-        val w = (want.size.toLong, want.map(_.version).sum,
-          want.map(o => math.round(o.price * 100)).sum)
-        if ((row.getLong(0), row.getLong(1), row.getLong(2)) == w) None
-        else Some(s"mismatch in range [$lo, ${lo + RangeWidth}): $row vs $w")
-      }
-      tick += 1
-      if (tick % CompactEvery == 0) {
-        val cid = s"ingest-compact$tick"
-        c.spark.sparkContext.setJobGroup(cid, "compact", interruptOnCancel = true)
-        val k0 = System.nanoTime()
-        val cerr = try { compacted += graft.sources.Ingest.compactSnapshot(c.spark, s.snap); None }
-          catch { case e: Throwable => Some(e.toString.take(300)) }
-          finally c.spark.sparkContext.clearJobGroup()
-        val k1 = System.nanoTime()
-        compactMs += (k1 - k0) / 1e6
-        c.trace.foreach(_.spans.add(Span("ingest.compact", cid, "", k0, k1)))
-        cerr.foreach(e => ops += Op(cid, "compact", "write", k0, k1, Some(e)))
-        s.noteWrites()
-        cycles += (k1 - cycleStart) / 1e9
-        cycleStart = k1
-      }
+      passes += (System.nanoTime() - ps) / 1e9
     }
     val wallS = (System.nanoTime() - t0) / 1e9
-    val writes = ops.filter(_.name == "write").map(_.ms)
+    val writes = ops.filter(_.kind == "write").map(_.ms)
     val reads = ops.filter(_.kind == "read").map(_.ms)
-    val snapBytes = s.listSnapshot().values.sum
+    val snapshot = s.listSnapshot()
     val extra = Map(
       "ingest.write_p50_ms" -> Stats.quantile(writes.toSeq, 0.5),
       "ingest.write_p95_ms" -> Stats.quantile(writes.toSeq, 0.95),
@@ -279,12 +302,65 @@ object IngestLoad extends Workload {
       "ingest.rows_per_s" -> s.landedRows / wallS,
       "ingest.write_amp" -> s.writtenBytes.toDouble / math.max(1L, s.landedBytes),
       "ingest.bytes_written_mb" -> s.writtenBytes / 1e6 / math.max(1, tick),
-      "ingest.snapshot_files" -> s.listSnapshot().size.toDouble,
-      "ingest.snapshot_mb" -> snapBytes / 1e6,
+      "ingest.touched_part_share" -> Stats.mean(touched.toSeq),
+      "ingest.snapshot_files" -> snapshot.size.toDouble,
+      "ingest.snapshot_mb" -> snapshot.values.sum / 1e6,
       "ingest.compact_ms" -> Stats.mean(compactMs.toSeq),
       "ingest.partitions_compacted" -> compacted.toDouble / math.max(1, compactMs.size),
       "ingest.ticks" -> tick.toDouble) ++ progressMetrics(s)
-    Measured(ops.toSeq, ops.map(_.ms).toSeq, cycles.toSeq, wallS, extra)
+    // the user-facing latencies are the writes and the reads
+    Measured(ops.toSeq, (writes ++ reads).toSeq, passes.toSeq, wallS, extra)
+  }
+
+  /** One release: land it, wait for both streams, then read. */
+  private def runTick(c: Ctx, s: State, tick: Int, touched: ArrayBuffer[Double]): Seq[Op] = {
+    val ops = ArrayBuffer.empty[Op]
+    val r = Seeds.rng(c.seed, tick)
+    val batch = release(s, r)
+    val evRows = events(s, r, s.eventsPerTick)
+    // stage both files, then land them together and time to visible
+    val stageO = s.land(s"${c.run}/ready", f"orders_$tick%06d.parquet", ChangeSchema, batch.map(_.row))
+    val stageE = s.land(s"${c.run}/ready", f"events_$tick%06d.parquet", Corpus.EventSchema, evRows)
+    s.landedBytes += Files.size(stageO)
+    s.landedRows += batch.size + evRows.size
+    val id = s"ingest-w$tick"
+    c.watchdog.arm(id, Watchdog.deadline(c.hardStopNs), () => { s.upsert.stop(); s.sessions.stop() })
+    val w0 = System.nanoTime()
+    Files.move(stageO, Paths.get(s.landOrders, stageO.getFileName.toString), StandardCopyOption.ATOMIC_MOVE)
+    Files.move(stageE, Paths.get(s.landEvents, stageE.getFileName.toString), StandardCopyOption.ATOMIC_MOVE)
+    val err = timed(c, id,
+      try { s.awaitBoth(); None } catch { case e: Throwable => Some(e.toString.take(300)) })
+    val w1 = System.nanoTime()
+    err.foreach(e => System.err.println(s"[graftbench] $id failed: $e"))
+    c.trace.foreach(_.spans.add(Span("ingest.write", id, "", w0, w1)))
+    ops += Op(id, "write", "write", w0, w1, err)
+    s.eventFiles += s"${s.landEvents}/${stageE.getFileName}"
+    batch.foreach(o => s.fold(o.key) = o)
+    touched += s.noteWrites()
+
+    // the dashboard after a refresh: the whole series, a year, a month;
+    // none starts past the hard stop
+    def read(id: String, name: String)(f: => Option[String]): Unit =
+      if (System.nanoTime() < c.hardStopNs) ops += readOp(c, id, name, c.hardStopNs)(f)
+    read(s"ingest-r$tick-all", "series_read") {
+      rollUp(s, "the whole snapshot", lit(true), s.fold.values)
+    }
+    val year = 12 * s.perRelease
+    val lo = r.nextLong(math.max(1L, s.nextKey - year))
+    read(s"ingest-r$tick-year", "range_read") {
+      rollUp(s, s"[$lo, ${lo + year})", col("o_orderkey").between(lo, lo + year - 1),
+        (lo until lo + year).flatMap(s.fold.get))
+    }
+    // a month just revised or just appended
+    val month = Seq(s.releases.head, s.releases.last)(r.nextInt(2))
+    val k = month(r.nextInt(month.size))
+    read(s"ingest-r$tick-month", "point_read") {
+      val got = snapshotRows(s, col("o_orderkey") === k)
+        .select(ChangeSchema.fieldNames.map(col).toIndexedSeq: _*).collect()
+        .map(orderOf).toSeq
+      if (got == s.fold.get(k).toSeq) None else Some(s"mismatch at key $k: $got")
+    }
+    ops.toSeq
   }
 
   private def progressMetrics(s: State): Map[String, Double] = {
@@ -306,15 +382,15 @@ object IngestLoad extends Workload {
   }
 
   /** After the window: flush the sessionizer with a far-future
-    * sentinel, then check the snapshot against the fold and the
-    * emitted sessions against the batch sessionizer over the same
-    * events. Also measures the snapshot's space amplification. */
+    * sentinel, then check the emitted sessions against the batch
+    * sessionizer over the same events, and the whole snapshot against
+    * the fold. Also measures the snapshot's space amplification. */
   override def finish(c: Ctx): (Seq[Op], Map[String, Double]) = {
     val s = st
     val spark = c.spark
     val sentinel = Row(-1L, s.maxEventTs.plusDays(10), -1L, "view", 0.0, "{}")
-    val ops = ArrayBuffer.empty[Op]
-    ops += readOp(c, "ingest-check-sessions", "check_sessions") {
+    val ops = ArrayBuffer.empty[Op] ++ s.warmUpOps
+    ops += readOp(c, "ingest-check-sessions", "check_sessions", c.checkStopNs) {
       val p = s.land(s"${c.run}/ready", "events_zz_sentinel.parquet", Corpus.EventSchema, Seq(sentinel))
       Files.move(p, Paths.get(s.landEvents, p.getFileName.toString), StandardCopyOption.ATOMIC_MOVE)
       s.sessions.processAllAvailable()
@@ -328,29 +404,28 @@ object IngestLoad extends Workload {
       else Some(s"mismatch: ${streamed.size} streamed sessions vs ${batch.size} batch; " +
         s"missing ${(batch -- streamed).take(2)} extra ${(streamed -- batch).take(2)}")
     }
-    ops += readOp(c, "ingest-check-snapshot", "check_snapshot") {
+    ops += readOp(c, "ingest-check-snapshot", "check_snapshot", c.checkStopNs) {
       val got = spark.read.parquet(s.snap).select(ChangeSchema.fieldNames.map(col).toIndexedSeq: _*)
-        .collect().map(r => Order(r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3),
-          r.getDate(4).toLocalDate, r.getLong(5)))
+        .collect().map(orderOf)
       val byKey = got.groupBy(_.key)
       val dups = byKey.count(_._2.length > 1)
       val diff = s.fold.count { case (k, o) => !byKey.get(k).exists(_.toSeq == Seq(o)) }
+      s.liveBytes = liveBytes(s)
       if (dups == 0 && diff == 0 && byKey.size == s.fold.size) None
       else Some(s"mismatch: snapshot ${byKey.size} keys ($dups duplicated), fold ${s.fold.size}, $diff differ")
     }
-    (ops.toSeq, Map("ingest.space_amp" -> spaceAmp(s)))
+    (ops.toSeq, Map("ingest.space_amp" ->
+      s.listSnapshot().values.sum.toDouble / math.max(1L, s.liveBytes)))
   }
 
-  /** Snapshot bytes over the bytes of its live rows written once as
-    * compact parquet. */
-  private def spaceAmp(s: State): Double = {
+  /** Bytes of the snapshot's live rows written once as compact parquet. */
+  private def liveBytes(s: State): Long = {
     val c = s.c
     val dir = s"${c.run}/compact_live"
     c.spark.createDataFrame(c.spark.sparkContext.parallelize(s.fold.values.map(_.row).toSeq, 1),
       ChangeSchema).coalesce(1).write.mode("overwrite").parquet(dir)
-    val live = Files.list(Paths.get(dir)).iterator().asScala
+    Files.list(Paths.get(dir)).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum
-    s.listSnapshot().values.sum.toDouble / live
   }
 
   override def teardown(): Unit = if (st != null) {

@@ -26,15 +26,20 @@ object Stats {
   * {{{
   * graftbench.Main --workload dashboard|curation|ingest --seed N
   *   --seconds S --trace 0|1 --work DIR --cores N --sf F
-  *   --expected FILE --out FILE
+  *   --expected FILE --baseline FILE --deadline-ms EPOCH_MS --out FILE
   * }}}
   *
-  * or, to refresh and validate the committed digests,
+  * `--mode corpus --corpus-key K` writes the corpus the runs read, or,
+  * to refresh and validate the committed digests,
   * `--mode digests` (prints every dashboard and curation digest) and
   * `--mode dump --dump DIR` (writes those results and their oracle SQL
   * for `tools/check.py`). */
 object Main {
-  val SetupReps = 3
+  /** Time kept back from the wrapper's deadline: ops stop this long
+    * before it, and the checks after the window end [[CheckReserveS]]
+    * before it, leaving time to report and stop the session. */
+  val OpReserveS = 25
+  val CheckReserveS = 8
 
   def deleteTree(p: Path): Unit = if (Files.exists(p)) {
     val s = Files.walk(p)
@@ -53,23 +58,27 @@ object Main {
     val cores = a("cores").toInt
     val sf = a("sf").toDouble
     val corpus = s"$work/corpus"
-    // the corpus is a fixed fixture: regenerated only when the generator
-    // or the scale changed since the last run in this work directory
-    val key = Paths.get(corpus, "_KEY")
-    val want = s"${a("corpus-key")} sf$sf"
-    if (!Files.exists(key) || new String(Files.readAllBytes(key), UTF_8) != want) {
-      val tg = System.nanoTime()
-      deleteTree(Paths.get(corpus))
-      Corpus.write(session(work, cores), corpus, sf)
-      Files.write(key, want.getBytes(UTF_8))
-      System.err.println(f"[graftbench] corpus sf$sf written in ${(System.nanoTime() - tg) / 1e9}%.2f s")
-    }
     a.getOrElse("mode", "run") match {
+      case "corpus" => writeCorpus(work, cores, sf, a("corpus-key"))
       case "digests" => digests(session(work, cores), corpus, a("out"))
       case "dump" => dump(session(work, cores), corpus, a("dump"))
       case _ => run(a, work, corpus, cores, sf)
     }
     SparkSession.getActiveSession.foreach(_.stop())
+  }
+
+  /** The corpus is a fixed fixture, written once per work directory and
+    * again only when the generator or the scale changed (`_KEY`). */
+  private def writeCorpus(work: String, cores: Int, sf: Double, key: String): Unit = {
+    val corpus = s"$work/corpus"
+    val keyFile = Paths.get(corpus, "_KEY")
+    if (!Files.exists(keyFile) || new String(Files.readAllBytes(keyFile), UTF_8) != key) {
+      val tg = System.nanoTime()
+      deleteTree(Paths.get(corpus))
+      Corpus.write(session(work, cores), corpus, sf)
+      Files.write(keyFile, key.getBytes(UTF_8))
+      System.err.println(f"[graftbench] corpus sf$sf written in ${(System.nanoTime() - tg) / 1e9}%.2f s")
+    }
   }
 
   /** A fresh engine session as `Sessions.builder` configures it, with
@@ -111,7 +120,7 @@ object Main {
   private def benchQueries: Seq[String] = Dashboard.all ++ Curation.names
 
   private def digests(spark: SparkSession, corpus: String, out: String): Unit = {
-    val runner = new QueryRunner(spark, corpus, Map.empty, None, new Watchdog(spark), () => 600)
+    val runner = new QueryRunner(spark, corpus, Map.empty, None, new Watchdog(spark), Long.MaxValue)
     val lines = benchQueries.sorted.map { n =>
       graft.SessionMemo.clear(spark)
       s"""  "$n": "${runner.digestOf(n)}""""
@@ -156,40 +165,39 @@ object Main {
       case "ingest" => IngestLoad
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
+    require(Files.exists(Paths.get(corpus, "_KEY")), s"no corpus in $corpus (run --mode corpus)")
     val expected = loadExpected(a("expected"))
     val runDir = Paths.get(work, "run").toAbsolutePath.toString
     val trace = if (traced) Some(new Trace) else None
 
-    // set-up, repeated: fresh session, hygiene, warm-up, seeded inputs
-    var ctx: Ctx = null
-    var watchdog: Watchdog = null
-    val setups = (1 to SetupReps).map { i =>
-      if (ctx != null) { workload.teardown(); watchdog.close() }
-      deleteTree(Paths.get(runDir))
-      val t0 = System.nanoTime()
-      val spark = session(work, cores)
-      graft.SessionMemo.clear(spark)
-      graft.sources.Ingest.dropBucketedTables(spark)
-      watchdog = new Watchdog(spark)
-      trace.foreach { t =>
-        t.clearCounts(); t.spans.clear()
-        spark.sparkContext.addSparkListener(t)
-        spark.listenerManager.register(t)
-      }
-      val wd = watchdog
-      val startedAt = System.nanoTime()
-      val runner = new QueryRunner(spark, corpus, expected, trace, wd,
-        () => math.max(10.0, 170 - (System.nanoTime() - startedAt) / 1e9))
-      ctx = Ctx(spark, corpus, runDir, seed, seconds, cores, sf, runner, wd, trace)
-      warmUp(spark, corpus)
-      workload.prepare(ctx)
-      val s = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[graftbench] set-up $i: $s%.3f s")
-      s
+    // the wrapper's deadline, as this JVM's clock
+    val deadlineNs = System.nanoTime() +
+      (a("deadline-ms").toLong - System.currentTimeMillis()) * 1000000L
+    val hardStopNs = deadlineNs - OpReserveS * 1000000000L
+    val checkStopNs = deadlineNs - CheckReserveS * 1000000000L
+
+    // set-up: fresh session, hygiene, warm-up, seeded inputs
+    deleteTree(Paths.get(runDir))
+    val spark = session(work, cores)
+    graft.SessionMemo.clear(spark)
+    graft.sources.Ingest.dropBucketedTables(spark)
+    val watchdog = new Watchdog(spark)
+    trace.foreach { t =>
+      spark.sparkContext.addSparkListener(t)
+      spark.listenerManager.register(t)
     }
-    val c = ctx.copy() // restarts the hard-stop clock at the window's start
+    val runner = new QueryRunner(spark, corpus, expected, trace, watchdog, hardStopNs)
+    val c = Ctx(spark, corpus, runDir, seed, seconds, cores, sf, runner, watchdog, trace,
+      hardStopNs, checkStopNs)
+    warmUp(spark, corpus)
+    workload.prepare(c)
+    // from the JVM's start, so class loading and JIT warm-up count
+    val setupS = (System.currentTimeMillis() -
+      ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
+    System.err.println(f"[graftbench] set-up $setupS%.3f s")
+
     graft.SessionMemo.drainAttribution()
-    trace.foreach(_.clearCounts())
+    trace.foreach { t => t.clearCounts(); t.spans.clear() }
     val gc0 = gcSeconds()
     val m = workload.measure(c)
     val gcS = gcSeconds() - gc0
@@ -205,14 +213,14 @@ object Main {
     val attempted = ops.size
     val failed = ops.count(!_.ok)
     val e2e = Map(
-      "setup_s" -> Stats.quantile(setups, 0.5),
+      "setup_s" -> setupS,
       "latency_p50_ms" -> Stats.quantile(timed, 0.5),
       "latency_p90_ms" -> Stats.quantile(timed, 0.9),
       "throughput_qps" -> m.ops.count(_.ok) / m.wallS,
       "batch_s" -> Stats.quantile(m.passes, 0.5))
 
     val peakRss = peakRssMb()
-    val baseline = Paths.get(work, s"e2e_$name.txt")
+    val baseline = Paths.get(a("baseline"))
     val metrics = trace.map(t => perLayer(t, c, m, gcS, e2e, e2eBaseline(baseline)) ++
       PerLayer.workloadNames.map(k => k -> extra.getOrElse(k, 0.0)) +
       ("jvm.peak_rss_mb" -> peakRss)).getOrElse(e2e)
@@ -227,8 +235,7 @@ object Main {
         .filter(kv => kv._1.startsWith("spark.sql.") || kv._1 == "spark.master")
         .map { case (k, v) => k -> Json.str(v) }),
       "samples" -> Json.obj(Seq("ops" -> m.ops.size.toString,
-        "passes" -> m.passes.size.toString, "setups" -> setups.size.toString)),
-      "setup_runs_s" -> setups.map(Json.num).mkString("[", ",", "]"),
+        "latencies" -> m.latenciesMs.size.toString, "passes" -> m.passes.size.toString)),
       "window_s" -> Json.num(m.wallS),
       "peak_rss_mb" -> Json.num(peakRss),
       "error_rate" -> Json.num(failed.toDouble / math.max(1, attempted)),
@@ -250,9 +257,13 @@ object Main {
       Files.write(Paths.get(work, s"trace_$name.jsonl"),
         (t.spanLines.mkString("\n") + "\n").getBytes(UTF_8))
     }
-    Files.write(Paths.get(a("out")), (report + "\n" + result + "\n").getBytes(UTF_8))
     if (!traced) Files.write(baseline,
       e2e.map { case (k, v) => s"$k=$v" }.mkString("\n").getBytes(UTF_8))
+    // whole or absent: the wrapper may kill this JVM once it is written
+    val out = Paths.get(a("out"))
+    val tmp = Paths.get(a("out") + ".tmp")
+    Files.write(tmp, (report + "\n" + result + "\n").getBytes(UTF_8))
+    Files.move(tmp, out, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** The traced run's per-layer table. Times and counts are per op
@@ -304,7 +315,8 @@ object Main {
       }
   }
 
-  /** The end-to-end figures of the last untraced run of this workload. */
+  /** The end-to-end figures of the untraced run of the same workload,
+    * seed and build. */
   private def e2eBaseline(p: Path): Map[String, Double] =
     if (!Files.exists(p)) Map.empty
     else new String(Files.readAllBytes(p), UTF_8).linesIterator
@@ -314,7 +326,8 @@ object Main {
 object PerLayer {
   /** Per-layer figures only the ingest workload produces; 0 elsewhere. */
   val workloadNames: Seq[String] = Seq("ingest.trigger_ms", "ingest.add_batch_ms",
-    "ingest.plan_ms", "ingest.bytes_written_mb", "ingest.snapshot_files",
+    "ingest.plan_ms", "ingest.bytes_written_mb", "ingest.touched_part_share",
+    "ingest.snapshot_files",
     "ingest.snapshot_mb", "ingest.compact_ms", "ingest.partitions_compacted",
     "ingest.write_p50_ms", "ingest.write_p95_ms", "ingest.read_p50_ms",
     "ingest.rows_per_s", "ingest.write_amp", "ingest.space_amp",
@@ -328,7 +341,8 @@ object PerLayer {
     else if (k.endsWith("_ms")) "ms"
     else if (k.endsWith("_s")) "s"
     else if (k.endsWith("_mb")) "MB"
-    else if (k.endsWith("_ratio") || k.endsWith("_amp") || k.endsWith("per_result")) "ratio"
+    else if (k.endsWith("_ratio") || k.endsWith("_amp") || k.endsWith("_share") ||
+      k.endsWith("per_result")) "ratio"
     else "count"
 }
 

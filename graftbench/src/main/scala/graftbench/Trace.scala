@@ -11,9 +11,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** One timed interval at a layer boundary. `op` groups the spans of
   * one benchmark operation; `parent` names the enclosing span. */
 final case class Span(name: String, op: String, parent: String,
-    startNs: Long, endNs: Long) {
-  def ms: Double = (endNs - startNs) / 1e6
-}
+    startNs: Long, endNs: Long)
 
 /** Per-job-group sums of what the scheduler reports. Every benchmark
   * op runs under its own job group, so these attribute engine work to
@@ -23,13 +21,13 @@ final case class Span(name: String, op: String, parent: String,
 final class Counts {
   var jobs, stages, tasks = 0L
   var runMs, cpuNs, shuffleWrite, shuffleRead, spill, inputBytes,
-    inputRows, outputBytes = 0L
+    inputRows = 0L
 
   def add(o: Counts): Unit = {
     jobs += o.jobs; stages += o.stages; tasks += o.tasks
     runMs += o.runMs; cpuNs += o.cpuNs; shuffleWrite += o.shuffleWrite
     shuffleRead += o.shuffleRead; spill += o.spill; inputBytes += o.inputBytes
-    inputRows += o.inputRows; outputBytes += o.outputBytes
+    inputRows += o.inputRows
   }
 }
 
@@ -43,11 +41,6 @@ final class Trace extends SparkListener with QueryExecutionListener {
   private val stageGroup = new ConcurrentHashMap[Int, String]
   /** planning ms per observation name (= op job group) */
   val planMs = new ConcurrentHashMap[String, java.lang.Double]
-
-  def span(name: String, op: String, parent: String)(f: => Unit): Unit = {
-    val t0 = System.nanoTime()
-    try f finally spans.add(Span(name, op, parent, t0, System.nanoTime()))
-  }
 
   private def counts(group: String): Counts =
     byGroup.computeIfAbsent(group, _ => new Counts)
@@ -77,7 +70,6 @@ final class Trace extends SparkListener with QueryExecutionListener {
         c.spill += m.diskBytesSpilled
         c.inputBytes += m.inputMetrics.bytesRead
         c.inputRows += m.inputMetrics.recordsRead
-        c.outputBytes += m.outputMetrics.bytesWritten
       }
     }
   }

@@ -12,14 +12,13 @@ import org.apache.spark.sql.SparkSession
 final case class Measured(ops: Seq[Op], latenciesMs: Seq[Double],
     passes: Seq[Double], wallS: Double, extra: Map[String, Double] = Map.empty)
 
-/** Everything a workload needs from the harness. */
+/** Everything a workload needs from the harness. No op starts after
+  * `hardStopNs`, and one still running then is cancelled and counted
+  * as failed; the checks after the window end by `checkStopNs`. Both
+  * lie inside the time the wrapper gives the JVM. */
 final case class Ctx(spark: SparkSession, corpus: String, run: String,
     seed: Long, seconds: Double, cores: Int, sf: Double, runner: QueryRunner,
-    watchdog: Watchdog, trace: Option[Trace]) {
-  /** Ops still in flight when the window closes may run this much
-    * past it before the run stops issuing new ones. */
-  val hardStopNs: Long = System.nanoTime() + ((seconds + 100) * 1e9).toLong
-}
+    watchdog: Watchdog, trace: Option[Trace], hardStopNs: Long, checkStopNs: Long)
 
 trait Workload {
   /** Seeded per-session preparation; timed as part of `setup_s`. */
@@ -84,7 +83,7 @@ object Dashboard extends Workload {
       new Thread(() => {
         var round = 0
         var n = 0
-        while (System.nanoTime() < deadline) {
+        while (System.nanoTime() < math.min(deadline, c.hardStopNs)) {
           val rs = System.nanoTime()
           for (name <- share(c.seed, round, client) if System.nanoTime() < c.hardStopNs) {
             ops.add(c.runner.run(s"dashboard-c$client-$n", name, "dashboard"))
@@ -124,7 +123,7 @@ object Curation extends Workload {
     val t0 = System.nanoTime()
     val deadline = t0 + (c.seconds * 1e9).toLong
     var b = 0
-    while (System.nanoTime() < deadline) {
+    while (System.nanoTime() < math.min(deadline, c.hardStopNs)) {
       graft.SessionMemo.clear(c.spark)
       val bs = System.nanoTime()
       for (name <- Seeds.shuffle(names, Seeds.rng(c.seed, b))
