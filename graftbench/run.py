@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
 """Run one graft benchmark workload and print its result line.
 
-    python3 graftbench/run.py --workload dashboard|curation|ingest \
+    python3 graftbench/run.py --workload analytics|ingest \
         --seed N --seconds S --trace 0|1
 
 Maintenance: `--mode digests` rewrites graftbench/expected/digests.json
-from the current engine; `--mode dump --dump DIR` writes the dashboard
-and curation results plus their oracle SQL for tools/check.py.
+from the current engine; `--mode dump --dump DIR` writes the analytics
+queries' results plus their oracle SQL for tools/check.py.
 
 Run from the repository root. The first run builds the engine and the
 harness with sbt (offline), caching the classpath and the engine
@@ -180,7 +180,7 @@ def measured_run(built, args, deadline, baseline):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", choices=["dashboard", "curation", "ingest"])
+    ap.add_argument("--workload", choices=["analytics", "ingest"])
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)

@@ -24,14 +24,14 @@ object Stats {
 /** Entry point of one benchmark run (see `README.md`):
   *
   * {{{
-  * graftbench.Main --workload dashboard|curation|ingest --seed N
+  * graftbench.Main --workload analytics|ingest --seed N
   *   --seconds S --trace 0|1 --work DIR --cores N --sf F
   *   --expected FILE --baseline FILE --deadline-ms EPOCH_MS --out FILE
   * }}}
   *
   * `--mode corpus --corpus-key K` writes the corpus the runs read, or,
   * to refresh and validate the committed digests,
-  * `--mode digests` (prints every dashboard and curation digest) and
+  * `--mode digests` (prints every analytics query's digest) and
   * `--mode dump --dump DIR` (writes those results and their oracle SQL
   * for `tools/check.py`). */
 object Main {
@@ -96,7 +96,7 @@ object Main {
   /** The untimed warm-up `graft.Bench` runs: parquet reader, broadcast
     * join, window, decimal aggregate and shuffled-hash join bring-up on
     * a 1k-row slice. */
-  private def warmUp(spark: SparkSession, corpus: String): Unit = {
+  def warmUp(spark: SparkSession, corpus: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val n = graft.Tables.nation(spark, corpus)
@@ -117,7 +117,7 @@ object Main {
       .map(m => m.group(1) -> m.group(2)).toMap
   }
 
-  private def benchQueries: Seq[String] = Dashboard.all ++ Curation.names
+  private def benchQueries: Seq[String] = Analytics.all
 
   private def digests(spark: SparkSession, corpus: String, out: String): Unit = {
     val runner = new QueryRunner(spark, corpus, Map.empty, None, new Watchdog(spark), Long.MaxValue)
@@ -160,8 +160,7 @@ object Main {
     val seconds = a("seconds").toDouble
     val traced = a("trace") == "1"
     val workload: Workload = name match {
-      case "dashboard" => Dashboard
-      case "curation" => Curation
+      case "analytics" => Analytics
       case "ingest" => IngestLoad
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
@@ -189,11 +188,12 @@ object Main {
     val runner = new QueryRunner(spark, corpus, expected, trace, watchdog, hardStopNs)
     val c = Ctx(spark, corpus, runDir, seed, seconds, cores, sf, runner, watchdog, trace,
       hardStopNs, checkStopNs)
-    warmUp(spark, corpus)
+    def sinceStart = (System.currentTimeMillis() - ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
+    System.err.println(f"[graftbench] session up at $sinceStart%.3f s since JVM start")
+    workload.warmUp(c)
     workload.prepare(c)
     // from the JVM's start, so class loading and JIT warm-up count
-    val setupS = (System.currentTimeMillis() -
-      ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
+    val setupS = sinceStart
     System.err.println(f"[graftbench] set-up $setupS%.3f s")
 
     graft.SessionMemo.drainAttribution()
@@ -214,8 +214,7 @@ object Main {
     val failed = ops.count(!_.ok)
     val e2e = Map(
       "setup_s" -> setupS,
-      "latency_p50_ms" -> Stats.quantile(timed, 0.5),
-      "latency_p90_ms" -> Stats.quantile(timed, 0.9),
+      "latency_mean_ms" -> Stats.mean(timed),
       "throughput_qps" -> m.ops.count(_.ok) / m.wallS,
       "batch_s" -> Stats.quantile(m.passes, 0.5))
 
@@ -234,6 +233,8 @@ object Main {
       "spark_conf" -> Json.obj(c.spark.conf.getAll.toSeq.sortBy(_._1)
         .filter(kv => kv._1.startsWith("spark.sql.") || kv._1 == "spark.master")
         .map { case (k, v) => k -> Json.str(v) }),
+      "latency_ms" -> Json.obj(Seq(0.5, 0.9, 0.95).map(q =>
+        s"p${(q * 100).round}" -> Json.num(Stats.quantile(timed, q)))),
       "samples" -> Json.obj(Seq("ops" -> m.ops.size.toString,
         "latencies" -> m.latenciesMs.size.toString, "passes" -> m.passes.size.toString)),
       "window_s" -> Json.num(m.wallS),
@@ -309,7 +310,7 @@ object Main {
       "ext.pipeline_s" -> extS("pipeline_", "pack_", "sample_"),
       "ext.graph_s" -> extS("graph_")) ++
       // traced minus untraced, as a percentage of the untraced value
-      Seq("latency_p50_ms", "latency_p90_ms", "throughput_qps", "batch_s").map { k =>
+      Seq("latency_mean_ms", "throughput_qps", "batch_s").map { k =>
         s"trace.overhead_pct.$k" -> untraced.get(k).filter(_ != 0)
           .map(b => (e2e(k) - b) / b * 100).getOrElse(0.0)
       }
