@@ -158,10 +158,10 @@ object Bench {
     // (paying the one-time cost) vs merely reused, per pass — the
     // accounting that explains why e.g. the first crossmodal query in
     // a pass carries ~90% family-build time. "built" maps each key to
-    // its build wall seconds (r11: max over the key's events — the
-    // timedBuild/eager-thunk measurement wins over the 0-second
-    // registration event), so layout builds are separable from query
-    // cost in the artifact. Keys sorted, reused events deduped.
+    // its build wall seconds (the one `SessionMemo.once` build event
+    // per key; max over events should a key build twice in a pass), so
+    // layout builds are separable from query cost in the artifact.
+    // Keys sorted, reused events deduped.
     def attrJson(attr: Seq[(String, String, Boolean, Double)]): String =
       attr.groupBy(_._1).toSeq.sortBy(_._1).map { case (q, evs) =>
         val built = evs.filter(_._3).groupBy(_._2).toSeq.sortBy(_._1)

@@ -2,104 +2,109 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared (session, sf dir, name)-keyed memoization of cached frames
-  * — the S5 "session result cache" primitive. One entry per key for
-  * the session's lifetime: re-invoking a query reuses the cached
-  * frame instead of stacking a fresh `.cache()` per call. Entries are
-  * keyed by session, so a stopped session's entries are inert (never
-  * reused, never re-materialized); `clear(session)` drops them
-  * eagerly if a long-lived process cycles many sessions. */
+/** The session lifetime manager — the S5 "session result cache"
+  * primitive. Everything a session builds once and releases when it
+  * ends (cached frames, k-means models, checkpointed graphs, physical
+  * layouts on disk) is a [[once]] entry keyed by (session, key);
+  * per-call state that is not a memo (a query's checkpointed result)
+  * hangs off [[onClear]]. Entries are keyed by session, so a stopped
+  * session's entries are inert (never reused, never re-materialized);
+  * [[clear]] is the one hygiene entry point a long-lived process
+  * calls between tenants. */
 object SessionMemo {
-  /** One lazy build slot per memo key: `putIfAbsent` publishes the
-    * HOLDER (cheap, no thunk run), and the `lazy val` body — which
-    * Scala guards with the holder's monitor — runs the build exactly
-    * once no matter how many first callers race. The r11 shape
-    * (`getOrElseUpdate`) evaluated the thunk OUTSIDE the CAS: two
-    * concurrent first callers both built, both logged `built=true`,
-    * and the loser's `cache()`-marked frame leaked unpersisted. */
-  private final class Slot(mk: () => DataFrame) {
-    // lets clear() unpersist only slots whose build actually ran —
-    // forcing an unbuilt slot just to unpersist it would BUILD it
-    @volatile var forced = false
-    lazy val df: DataFrame = { val b = mk(); forced = true; b }
+  /** One (session, key) slot. The build runs under the slot's
+    * monitor, so concurrent first callers wait for ONE build instead
+    * of racing their own: a racing loser's cached frame or checkpoint
+    * leaks unreleased, and a racing layout write overwrites files the
+    * winner is already reading. `dead` marks a slot [[clear]] took out
+    * of the map, so a caller that fetched it just before retries on a
+    * fresh slot instead of building into one nobody will release. */
+  private final class Entry(val release: Any => Unit) {
+    var value: Any = _
+    var built = false
+    var dead = false
   }
 
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Slot]
+  private val entries = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), Entry]
 
-  /** Session-keyed teardown hooks: operators that hold state OUTSIDE
-    * this memo (the IVF k-means model cache, bucketed layout tables)
-    * register a release action here so [[clear]] is the ONE hygiene
-    * entry point a long-lived process calls between tenants. */
-  private val cleanups = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), () => Unit]
+  private val hooks = new java.util.concurrent
+    .ConcurrentLinkedQueue[(SparkSession, () => Unit)]
 
+  /** `build` at most once per (session, key) and return the value;
+    * [[clear]] hands it to `release`. A build that throws leaves the
+    * slot unbuilt, so the next call retries. Records one attribution
+    * event per call: `built = true` with the build's wall seconds for
+    * the call that ran it (eager builds — model fits, checkpointed
+    * graphs, layout writes — are timed whole; lazy ones only their
+    * plan construction, since they materialize inside the consumer's
+    * own measured action), `built = false` for every reuse. */
+  @annotation.tailrec
+  def once[T](s: SparkSession, key: String)(build: => T)
+      (release: T => Unit): T = {
+    val mine = new Entry(v => release(v.asInstanceOf[T]))
+    val e = entries.putIfAbsent((s, key), mine).getOrElse(mine)
+    val got = e.synchronized {
+      if (e.dead) None
+      else if (e.built) { note(key, built = false, 0.0); Some(e.value) }
+      else {
+        val t0 = System.nanoTime()
+        e.value = build
+        e.built = true
+        note(key, built = true, (System.nanoTime() - t0) / 1e9)
+        Some(e.value)
+      }
+    }
+    got match {
+      case Some(v) => v.asInstanceOf[T]
+      case None    => once(s, key)(build)(release)
+    }
+  }
+
+  /** The cached frame memo: one `.cache()`d frame per (session, sf
+    * dir, name), unpersisted on [[clear]]. */
   def cached(s: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame = {
-    val key = (s, dir, name)
-    // `secs` is set by THIS call's closure, which only runs if this
-    // call's slot won the publish race AND its lazy val is the one
-    // forced — so at most one caller ever logs `built=true`, and the
-    // timing captures eager builds (CC fixpoints, checkpointed pair
-    // tables) but only plan-construction cost for lazy ones — those
-    // materialize inside the consumer's own measured action. Under a
-    // concurrent first access the build may run on the OTHER thread
-    // (whoever forces the winning slot's lazy val first); attribution
-    // then credits the slot-publisher's consumer — best-effort by
-    // design, while the build itself runs exactly once.
-    var secs = -1.0
-    val slot = new Slot({ () =>
-      val t0 = System.nanoTime()
-      val b = build.cache()
-      secs = (System.nanoTime() - t0) / 1e9
-      b
-    })
-    val winner = memo.putIfAbsent(key, slot).getOrElse(slot)
-    val df = winner.df
-    note(name, built = secs >= 0, math.max(secs, 0.0))
-    df
+      (build: => DataFrame): DataFrame =
+    once(s, s"$name:$dir")(build.cache())(_.unpersist())
+
+  /** Has (session, key) a built [[once]] entry? A test probe. */
+  private[graft] def isBuilt(s: SparkSession, key: String): Boolean =
+    entries.get((s, key)).exists(e => e.synchronized(e.built))
+
+  /** Run `f` on the next [[clear]] of `s` — for per-call state that is
+    * not a memo, such as a query's checkpointed result, whose blocks
+    * must outlive every consumer but not the session. Not a build: it
+    * records no attribution event. */
+  def onClear(s: SparkSession)(f: => Unit): Unit = {
+    hooks.add((s, () => f)); ()
   }
 
-  /** Single-flight memoization for values OUTSIDE the DataFrame memo
-    * (k-means models, multi-frame graph builds): `putIfAbsent`
-    * publishes the holder cheaply, and the `lazy val` body — guarded
-    * by the holder's monitor — runs the build exactly once no matter
-    * how many first callers race. The bare `TrieMap.getOrElseUpdate`
-    * these memos used through r13 evaluates the thunk OUTSIDE the
-    * CAS: two concurrent first callers both built, and the loser's
-    * checkpointed RDDs leaked while its `registerCleanup` overwrote
-    * the winner's hook (r13 ADVICE) — a live hazard now that
-    * independent family builds overlap on worker threads. */
-  final class LazySlot[T](mk: () => T) { lazy val value: T = mk() }
-
-  def singleFlight[K, T](
-      memo: scala.collection.concurrent.TrieMap[K, LazySlot[T]], key: K)
-      (build: => T): T = {
-    val slot = new LazySlot(() => build)
-    memo.putIfAbsent(key, slot).getOrElse(slot).value
+  /** `localCheckpoint` + the persistent-RDD ids it pinned, so callers
+    * can [[release]] exactly those blocks once a successor
+    * materializes (a checkpointed frame's lineage is truncated — its
+    * blocks must outlive every consumer, but not the whole session).
+    *
+    * The ids come from the checkpointed dataset's own `LogicalRDD` —
+    * NOT from diffing `getPersistentRDDs` around the call. The diff
+    * races: executing the checkpoint materializes every upstream
+    * `InMemoryRelation` that wasn't touched yet, and a session-
+    * memoized cache registering its RDD inside the window would be
+    * captured — and later UNPERSISTED — by the caller's release
+    * (this silently dropped the memoized embedding-pair cache, so
+    * every later pair query re-ran the whole candidate build). */
+  private[graft] def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
+    val cp = df.localCheckpoint()
+    val ids = cp.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(ids.nonEmpty, "localCheckpoint produced no LogicalRDD to track")
+    (cp, ids)
   }
 
-  /** Register (or replace) a named teardown action run by [[clear]].
-    * Idempotent per (session, name): re-registering overwrites.
-    * Every model/layout builder calls this exactly once when it
-    * BUILDS (inside its memo's getOrElseUpdate / guard branch), so
-    * registration doubles as the build event for attribution; wall
-    * seconds for the build come from the [[timedBuild]] wrapper at
-    * the guard site (events merge per key, max-seconds wins). */
-  def registerCleanup(s: SparkSession, name: String)(f: () => Unit): Unit = {
-    note(name, built = true, 0.0)
-    cleanups.put((s, name), f); ()
-  }
-
-  /** Time an eager one-time build (physical layout write, k-means
-    * model fit, bucketed-table save) and record the wall seconds
-    * against the current consumer under `name` — the accounting that
-    * separates layout-build cost from query cost in the bench
-    * artifact. Returns `f`'s result unchanged. */
-  def timedBuild[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    try f finally note(name, built = true, (System.nanoTime() - t0) / 1e9)
-  }
+  /** Unpersist the RDDs a [[checkpointTracked]] call pinned. */
+  private[graft] def release(s: SparkSession, ids: Set[Int]): Unit =
+    ids.foreach(id => s.sparkContext.getPersistentRDDs.get(id)
+      .foreach(_.unpersist(blocking = false)))
 
   // ── Build attribution ──────────────────────────────────────────
   // Which consumer (bench query) built vs reused which memoized
@@ -160,18 +165,22 @@ object SessionMemo {
     gauges.readOnlySnapshot().toMap.map { case (k, f) =>
       k -> (try f() catch { case _: Throwable => -1.0 }) }
 
-  /** Unpersist and forget every entry belonging to `s`, then run (and
-    * drop) every cleanup hook registered against `s`. After this the
-    * session holds no graft-cached frames, models, or layout tables. */
+  /** Release and forget every [[once]] entry belonging to `s` (only
+    * entries whose build ran — releasing never forces a build; an
+    * entry mid-build is released once its build finishes), then run
+    * and drop every [[onClear]] hook registered against `s`. After
+    * this the session holds no graft-cached frames, models,
+    * checkpoints or layout files. */
   def clear(s: SparkSession): Unit = {
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(slot =>
-        if (slot.forced)
-          try slot.df.unpersist() catch { case _: Throwable => () })
+    entries.keys.filter(_._1 eq s).foreach { k =>
+      entries.remove(k).foreach(e => e.synchronized {
+        e.dead = true
+        if (e.built) try e.release(e.value) catch { case _: Throwable => () }
+      })
     }
-    cleanups.keys.filter(_._1 eq s).foreach { k =>
-      cleanups.remove(k).foreach(f =>
-        try f() catch { case _: Throwable => () })
+    hooks.forEach { h =>
+      if ((h._1 eq s) && hooks.remove(h))
+        try h._2() catch { case _: Throwable => () }
     }
   }
 }

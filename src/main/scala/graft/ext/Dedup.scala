@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo.{checkpointTracked, release}
 import graft.Tables
 import graft.functions.Num.r4
 
@@ -1188,34 +1189,6 @@ object Dedup {
       sigs: DataFrame): DataFrame =
     graft.SessionMemo.cached(s, dir, "minhash_buckets")(minhashBuckets(sigs))
 
-  /** `localCheckpoint` + the persistent-RDD ids it pinned, so callers
-    * can release exactly those blocks once a successor materializes
-    * (a checkpointed frame's lineage is truncated — its blocks must
-    * outlive every consumer, but not the whole session).
-    *
-    * The ids come from the checkpointed dataset's own `LogicalRDD` —
-    * NOT from diffing `getPersistentRDDs` around the call. The diff
-    * races: executing the checkpoint materializes every upstream
-    * `InMemoryRelation` that wasn't touched yet, and a session-
-    * memoized cache registering its RDD inside the window would be
-    * captured — and later UNPERSISTED — by the CC loop's release
-    * (this silently dropped the memoized embedding-pair cache, so
-    * every later pair query re-ran the whole candidate build). */
-  private[ext] def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val cp = df.localCheckpoint()
-    val ids = cp.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
-    assert(ids.nonEmpty, "localCheckpoint produced no LogicalRDD to track")
-    (cp, ids)
-  }
-
-  private[ext] def release(s: SparkSession, ids: Set[Int]): Unit =
-    ids.foreach(id => s.sparkContext.getPersistentRDDs.get(id)
-      .foreach(_.unpersist(blocking = false)))
-
-  private val ccInstance = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Per-round wall seconds of the most recent CC run — a profiler /
     * test probe (the round count bounds assertion lives in DedupSpec). */
   private[graft] case class CcStats(rounds: Int, secs: Seq[Double])
@@ -1301,8 +1274,7 @@ object Dedup {
     // the result stands alone now — drop the loop's working set; the
     // result's own blocks release on SessionMemo.clear
     release(sess, bucketIds ++ edgeIds)
-    graft.SessionMemo.registerCleanup(sess,
-      s"cc_checkpoint:${ccInstance.incrementAndGet()}")(() => release(sess, outIds))
+    graft.SessionMemo.onClear(sess)(release(sess, outIds))
     out
   }
 
@@ -1392,8 +1364,7 @@ object Dedup {
         .select(col("doc_id"), col("cluster_rep"), col("cluster_size"))
         .orderBy("doc_id"))
     release(sess, hsIds ++ forestIds)
-    graft.SessionMemo.registerCleanup(sess,
-      s"cc_checkpoint:${ccInstance.incrementAndGet()}")(() => release(sess, outIds))
+    graft.SessionMemo.onClear(sess)(release(sess, outIds))
     out
   }
 
@@ -1789,7 +1760,7 @@ object Dedup {
     // checkpointTracked/release discipline the CC fixpoint uses —
     // each round's blocks release as the next materializes, the
     // loop-invariant base releases after the last round, and the
-    // final frame's blocks are handed to a SessionMemo cleanup
+    // final frame's blocks are handed to SessionMemo.onClear
     // (previously every invocation pinned PrIters+1 RDDs until a
     // GC-driven ContextCleaner pass happened to collect them).
     val (withN, withNIds) = checkpointTracked(nodes.crossJoin(broadcast(nDocs)))
@@ -1803,9 +1774,7 @@ object Dedup {
       prIds = nxtIds
     }
     release(s, withNIds)
-    graft.SessionMemo.registerCleanup(s,
-      s"pagerank_checkpoint:${ccInstance.incrementAndGet()}")(() =>
-      release(s, prIds))
+    graft.SessionMemo.onClear(s)(release(s, prIds))
     pr.select(col("doc_id"), round(col("pr"), 6).as("pagerank"))
       .orderBy("doc_id")
   }
@@ -1963,8 +1932,8 @@ object Dedup {
     * (supernode-sized) but their LINEAGE is the whole banded
     * candidate + verify pipeline, which an unfused DAG would replay
     * per consumer (~8× — profiled 26 s → 4 s at sf0.1). Each is
-    * `localCheckpoint`ed once and the pinned blocks are released via
-    * the session cleanup hook, the [[clustersFromBuckets]] pattern. */
+    * `localCheckpoint`ed once and the pinned blocks are released on
+    * `SessionMemo.clear`, the [[clustersFromBuckets]] pattern. */
   /** The collapsed signature graph shared by the graph-analytics
     * family: signature classes as weighted supernodes (`member`:
     * (sig, gid, w)) and the est ≥ 0.9 verified edges between DISTINCT
@@ -2008,49 +1977,27 @@ object Dedup {
     * rebuilt it independently (three banded candidate joins + three
     * signature verifies per session — the bench's pass attribution
     * showed the rebuild as each query's dominant cost); one build per
-    * (session, dir) now serves all three, the `kmeansMemo` pattern.
-    * Frames are localCheckpointed inside [[sigGraph]]; the cleanup
-    * hook releases their blocks and drops the memo entry on
-    * `SessionMemo.clear`. */
-  private val sigGraphMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      graft.SessionMemo.LazySlot[(DataFrame, DataFrame)]]
-
+    * (session, dir) now serves all three, a `SessionMemo.once` entry
+    * like every model. Frames are localCheckpointed inside
+    * [[sigGraph]]; `SessionMemo.clear` releases their blocks. */
   private def sigGraphCached(s: SparkSession, dir: String,
-      sigs: DataFrame): (DataFrame, DataFrame) =
-    // singleFlight (r14): the bare getOrElseUpdate could run the
-    // build twice under a concurrent first access, leaking the
-    // loser's checkpointed RDDs (r13 ADVICE)
-    graft.SessionMemo.singleFlight(sigGraphMemo, (s, dir)) {
-      graft.SessionMemo.timedBuild(s"sig_graph:$dir") {
-        val (member, gEdges, ids) = sigGraph(sigs)
-        graft.SessionMemo.registerCleanup(s, s"sig_graph:$dir") { () =>
-          sigGraphMemo.remove((s, dir)); release(s, ids)
-        }
-        (member, gEdges)
-      }
-    }
+      sigs: DataFrame): (DataFrame, DataFrame) = {
+    val (member, gEdges, _) = graft.SessionMemo.once(s, s"sig_graph:$dir")(
+      sigGraph(sigs))(g => release(s, g._3))
+    (member, gEdges)
+  }
 
   /** (session, dir)-memoized per-class triangle statistics — shared
     * by the triangle-count and clustering-coefficient faces (both
     * consume the identical closed-form stats; before r13 each ran its
     * own wedge listing). Rides [[sigGraphCached]]. */
-  private val triStatsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      graft.SessionMemo.LazySlot[(DataFrame, DataFrame)]]
-
   private def triStatsCached(s: SparkSession, dir: String,
-      sigs: DataFrame): (DataFrame, DataFrame) =
-    graft.SessionMemo.singleFlight(triStatsMemo, (s, dir)) {
-      graft.SessionMemo.timedBuild(s"sig_triangle_stats:$dir") {
-        val (member, gEdges) = sigGraphCached(s, dir, sigs)
-        val (perGroup, ids) = triangleStatsFrom(member, gEdges)
-        graft.SessionMemo.registerCleanup(s, s"sig_triangle_stats:$dir") { () =>
-          triStatsMemo.remove((s, dir)); release(s, ids)
-        }
-        (member, perGroup)
-      }
-    }
+      sigs: DataFrame): (DataFrame, DataFrame) = {
+    val (member, gEdges) = sigGraphCached(s, dir, sigs)
+    val (perGroup, _) = graft.SessionMemo.once(s, s"sig_triangle_stats:$dir")(
+      triangleStatsFrom(member, gEdges))(st => release(s, st._2))
+    (member, perGroup)
+  }
 
   /** Per-signature-class triangle statistics shared by
     * [[trianglesFromSigs]] and [[clusteringFromSigs]]: for every class
@@ -2148,9 +2095,7 @@ object Dedup {
     val sess = sigs.sparkSession
     val (member, perGroup, ids) = groupTriangleStats(sigs)
     val out = trianglesOut(sigs, member, perGroup)
-    graft.SessionMemo.registerCleanup(sess,
-      s"triangle_checkpoint:${ccInstance.incrementAndGet()}")(
-      () => release(sess, ids))
+    graft.SessionMemo.onClear(sess)(release(sess, ids))
     out
   }
 
@@ -2193,9 +2138,7 @@ object Dedup {
     val sess = sigs.sparkSession
     val (member, perGroup, ids) = groupTriangleStats(sigs)
     val out = clusteringOut(sigs, member, perGroup)
-    graft.SessionMemo.registerCleanup(sess,
-      s"clustering_checkpoint:${ccInstance.incrementAndGet()}")(
-      () => release(sess, ids))
+    graft.SessionMemo.onClear(sess)(release(sess, ids))
     out
   }
 
@@ -2253,9 +2196,7 @@ object Dedup {
     val sess = sigs.sparkSession
     val (_, gEdges, graphIds) = sigGraph(sigs)
     val out = adamicAdarOut(gEdges)
-    graft.SessionMemo.registerCleanup(sess,
-      s"aa_checkpoint:${ccInstance.incrementAndGet()}")(
-      () => release(sess, graphIds))
+    graft.SessionMemo.onClear(sess)(release(sess, graphIds))
     out
   }
 

@@ -542,23 +542,15 @@ object Multimodal {
     // cost at 100× bench scale. The frame is two longs per item at
     // ANY corpus size; localCheckpoint truncates the decode lineage
     // the same way the CC rounds do — and, like the CC rounds, the
-    // pinned blocks are registered for release via the session
-    // cleanup hook: repeated invocations (two bench passes, the pair
-    // and cluster faces of a family) must not accumulate executor
-    // storage until JVM GC notices the dropped frame.
+    // pinned blocks are released on `SessionMemo.clear`: repeated
+    // invocations (two bench passes, the pair and cluster faces of a
+    // family) must not accumulate executor storage until JVM GC
+    // notices the dropped frame.
     val sess = hashes.sparkSession
-    val hs = hashes.localCheckpoint()
-    val ids = hs.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
-    graft.SessionMemo.registerCleanup(sess,
-      s"mm_ckpt:${ckptInstance.incrementAndGet()}")(() =>
-      ids.foreach(id => sess.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = false))))
+    val (hs, ids) = graft.SessionMemo.checkpointTracked(hashes)
+    graft.SessionMemo.onClear(sess)(graft.SessionMemo.release(sess, ids))
     expandHashPairs(hs, hashPairsPlanned(hs, plan, maxHamming, population))
   }
-
-  private val ckptInstance = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** DISTINCT-SKETCH near pairs (0 < Hamming ≤ max) — the hash-level
     * half of the pairing. IDENTICAL-SKETCH COMPRESSION: mass

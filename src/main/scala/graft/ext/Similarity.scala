@@ -183,15 +183,9 @@ object Similarity {
 
   /** (session, dir)-memoized corpus count — one action over the
     * cached vector frame, shared by every width/cell derivation. */
-  private val corpusCountMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.SessionMemo.LazySlot[Long]]
   private def corpusCount(s: SparkSession, dir: String): Long =
-    graft.SessionMemo.singleFlight(corpusCountMemo, (s, dir)) {
-      graft.SessionMemo.registerCleanup(s, s"sim_corpus_count:$dir") { () =>
-        corpusCountMemo.remove((s, dir)); ()
-      }
-      vectors(s, dir).count()
-    }
+    graft.SessionMemo.once(s, s"sim_corpus_count:$dir")(
+      vectors(s, dir).count())(_ => ())
 
   private val Tables_ = 8  // independent hash tables (union of candidates)
 
@@ -268,14 +262,9 @@ object Similarity {
   /** (session, dir)-memoized model — an IVF index is built once and
     * queried many times; re-invoking the query must not re-run Lloyd.
     * The assignment frame is cached, the centroid literals are tiny.
-    * Evicted by `SessionMemo.clear(s)` via a registered cleanup hook
-    * (drops the entry AND unpersists the assignment frame), so a
-    * long-lived process that cycles sessions leaks neither cached
-    * blocks nor session references. */
-  private val kmeansMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), graft.SessionMemo.LazySlot[
-      (DataFrame, Seq[(Int, Seq[Double], Double)])]]
-
+    * `SessionMemo.clear(s)` drops the entry AND unpersists the
+    * assignment frame, so a long-lived process that cycles sessions
+    * leaks neither cached blocks nor session references. */
   private[graft] def kmeansModel(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, Seq[Double], Double)]) =
     kmeansModelK(s, dir, KCells)
@@ -283,27 +272,21 @@ object Similarity {
   /** Parametric-k variant of the memoized model build — the near-dup
     * candidate generator derives its cell count from the corpus size,
     * so the same deterministic Lloyd machinery must run at any k.
-    * singleFlight (r14): concurrent first callers — live now that
-    * crossmodal overlaps its family builds — run the Lloyd build
-    * exactly once. */
+    * Concurrent first callers — live now that crossmodal overlaps its
+    * family builds — run the Lloyd build exactly once. */
   private[graft] def kmeansModelK(s: SparkSession, dir: String, k: Int,
       iters: Int = KmIters): (DataFrame, Seq[(Int, Seq[Double], Double)]) =
-    graft.SessionMemo.singleFlight(kmeansMemo, (s, dir, k, iters)) {
-      graft.SessionMemo.timedBuild(s"ivf_kmeans:$dir:$k:$iters") {
-        val (assign, cents) = buildKmeans(s, dir, k, iters)
-        val cached = assign.cache()
-        graft.SessionMemo.registerCleanup(s, s"ivf_kmeans:$dir:$k:$iters") { () =>
-          kmeansMemo.remove((s, dir, k, iters)).foreach { slot =>
-            try slot.value._1.unpersist() catch { case _: Throwable => () }
-          }
-        }
-        (cached, cents)
-      }
-    }
+    graft.SessionMemo.once(s, kmeansKey(dir, k, iters)) {
+      val (assign, cents) = buildKmeans(s, dir, k, iters)
+      (assign.cache(), cents)
+    }(_._1.unpersist())
+
+  private def kmeansKey(dir: String, k: Int, iters: Int): String =
+    s"ivf_kmeans:$dir:$k:$iters"
 
   /** Test probe: is an IVF model memoized for (s, dir)? */
   private[graft] def kmeansMemoized(s: SparkSession, dir: String): Boolean =
-    kmeansMemo.contains((s, dir, KCells, KmIters))
+    graft.SessionMemo.isBuilt(s, kmeansKey(dir, KCells, KmIters))
 
   private def buildKmeans(s: SparkSession, dir: String, k: Int, iters: Int)
       : (DataFrame, Seq[(Int, Seq[Double], Double)]) =
@@ -467,7 +450,7 @@ object Similarity {
   }
 
   /** The IVF index as a PHYSICAL layout: the celled corpus written
-    * once per (process, sf dir) as a parquet table PARTITIONED BY the
+    * once per (session, sf dir) as a parquet table PARTITIONED BY the
     * cell id — the "at 100 TB the cell id becomes the table's
     * partition key" claim ([[ivfTopK]]) made real on disk. The probe
     * query's fact scan is then partition-PRUNED to the probed cells
@@ -483,19 +466,16 @@ object Similarity {
     import s.implicits._
     val (assign, cents) = kmeansModel(s, dir)
     val path = graft.sources.Ingest.ingestTmpPath("ivfcells", dir)
-    if (!graft.sources.SnapshotFs.hasSuccess(path))
-      graft.SessionMemo.timedBuild(s"ivf_layout:$dir") {
-        // one-time layout build: vector + norm per row, cell as the
-        // partition key (one directory per cell). At 100 TB this is the
-        // write-once index-build job; every later probe query reads
-        // only its cells. SessionMemo.clear deletes the layout (like
-        // the bucketed tables) so a cold bench pass repays the build.
-        graft.SessionMemo.registerCleanup(s, s"ivf_layout:$dir")(() =>
-          graft.sources.SnapshotFs.deleteTree(path))
-        vectors(s, dir).join(assign.hint("shuffle_hash"), Seq("vec_id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cell").parquet(path)
-      }
+    // one-time layout build: vector + norm per row, cell as the
+    // partition key (one directory per cell). At 100 TB this is the
+    // write-once index-build job; every later probe query reads only
+    // its cells. SessionMemo.clear deletes the layout (like the
+    // bucketed tables) so a cold bench pass repays the build.
+    graft.SessionMemo.once(s, s"ivf_layout:$dir") {
+      vectors(s, dir).join(assign.hint("shuffle_hash"), Seq("vec_id"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("cell").parquet(path)
+    }(_ => graft.sources.SnapshotFs.deleteTree(path))
     val fact = s.read.parquet(path)
       .select(col("vec_id").as("neighbor_id"), col("v").as("nv"),
         col("nrm").as("nnrm"), col("cell"))
@@ -580,28 +560,16 @@ object Similarity {
   /** The standing IVF model trained on the BASE corpus only
     * (vec_id % [[UpsertMod]] ≠ 0) — the frozen index state an upsert
     * routes into. Memoized separately from the full-corpus model
-    * (same Lloyd machinery via [[buildKmeansOf]]); evicted through
-    * the registered cleanup hook like every other model. */
-  private val baseKmeansMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.SessionMemo.LazySlot[
-      (DataFrame, Seq[(Int, Seq[Double], Double)])]]
-
+    * (same Lloyd machinery via [[buildKmeansOf]]); evicted by
+    * `SessionMemo.clear` like every other model. */
   private[graft] def baseKmeansModel(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, Seq[Double], Double)]) =
-    graft.SessionMemo.singleFlight(baseKmeansMemo, (s, dir)) {
-      graft.SessionMemo.timedBuild(s"ivf_base_kmeans:$dir") {
-        val (assign, cents) = buildKmeansOf(
-          vectors(s, dir).filter(col("vec_id") % UpsertMod =!= 0),
-          KCells, KmIters)
-        val cached = assign.cache()
-        graft.SessionMemo.registerCleanup(s, s"ivf_base_kmeans:$dir") { () =>
-          baseKmeansMemo.remove((s, dir)).foreach { slot =>
-            try slot.value._1.unpersist() catch { case _: Throwable => () }
-          }
-        }
-        (cached, cents)
-      }
-    }
+    graft.SessionMemo.once(s, s"ivf_base_kmeans:$dir") {
+      val (assign, cents) = buildKmeansOf(
+        vectors(s, dir).filter(col("vec_id") % UpsertMod =!= 0),
+        KCells, KmIters)
+      (assign.cache(), cents)
+    }(_._1.unpersist())
 
   /** IVF index UPSERT — the IVM face of the vector index, next to the
     * incremental aggregate/join/pair-index/cluster-map queries: a
@@ -647,26 +615,13 @@ object Similarity {
     * (md5-seeded init, decimal-mean centroids, min-L2 assignment with
     * smallest-code tie-break); the final per-subspace assignments ARE
     * the codes. Returns (codes frame `(vec_id, c0..c{M−1})` cached,
-    * per-subspace codebooks). Evicted via the registered
-    * `SessionMemo` cleanup hook. */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.SessionMemo.LazySlot[
-      (DataFrame, Seq[Seq[(Int, Seq[Double])]])]]
-
+    * per-subspace codebooks). Evicted by `SessionMemo.clear`. */
   private[graft] def pqModel(s: SparkSession, dir: String)
       : (DataFrame, Seq[Seq[(Int, Seq[Double])]]) =
-    graft.SessionMemo.singleFlight(pqMemo, (s, dir)) {
-      graft.SessionMemo.timedBuild(s"pq_model:$dir") {
-        val (codes, books) = buildPq(s, dir)
-        val cached = codes.cache()
-        graft.SessionMemo.registerCleanup(s, s"pq_model:$dir") { () =>
-          pqMemo.remove((s, dir)).foreach { slot =>
-            try slot.value._1.unpersist() catch { case _: Throwable => () }
-          }
-        }
-        (cached, books)
-      }
-    }
+    graft.SessionMemo.once(s, s"pq_model:$dir") {
+      val (codes, books) = buildPq(s, dir)
+      (codes.cache(), books)
+    }(_._1.unpersist())
 
   private def buildPq(s: SparkSession, dir: String)
       : (DataFrame, Seq[Seq[(Int, Seq[Double])]]) = {
@@ -976,9 +931,6 @@ object Similarity {
   private[graft] case class NearDupModel(k: Int, k1: Int, k2: Int,
       coarse: Seq[(Int, Seq[Double], Double)], subCents: DataFrame)
 
-  private val nearDupMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.SessionMemo.LazySlot[NearDupModel]]
-
   /** Build (or reuse — S5 memo) the two-level model.
     *
     * Coarse level: the existing deterministic Lloyd ([[kmeansModelK]],
@@ -996,8 +948,7 @@ object Similarity {
     * step (md5 init, DECIMAL means, index-order dot folds, cosine-desc
     * sub-asc argmax) is replayed bit-for-bit by the DuckDB oracle. */
   private[graft] def nearDupModel(s: SparkSession, dir: String): NearDupModel =
-    graft.SessionMemo.singleFlight(nearDupMemo, (s, dir)) {
-      graft.SessionMemo.timedBuild(s"neardup_model:$dir") {
+    graft.SessionMemo.once(s, s"neardup_model:$dir") {
       val vs = vectors(s, dir)
       // the count is one action over the cached vector frame; k/k1/k2
       // derive from it deterministically, replayed by the oracle from
@@ -1020,14 +971,8 @@ object Similarity {
         // they would induce is never consumed — skip it
         if (i < SubKmIters - 1) cur = assignSubByJoin(scn, cur)
       }
-      val cached = scn.cache()
-      graft.SessionMemo.registerCleanup(s, s"neardup_model:$dir") { () =>
-        nearDupMemo.remove((s, dir)).foreach { slot =>
-          try slot.value.subCents.unpersist() catch { case _: Throwable => () }
-        }
-      }
-      NearDupModel(k, k1, k2, coarseCents, cached)
-    }}
+      NearDupModel(k, k1, k2, coarseCents, scn.cache())
+    }(_.subCents.unpersist())
 
   /** (coarse, sub) decimal elementwise-mean centroids of the current
     * sub assignment — the distributed twin of [[buildKmeans]]'s
@@ -1196,8 +1141,6 @@ object Similarity {
   }
 
   private val KnnK = 5
-
-  private val mmrInstance = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Approximate k-NN GRAPH construction — every corpus vector's
     * top-[[KnnK]] neighbors among its two-level-cell mates, emitted as
@@ -1566,17 +1509,15 @@ object Similarity {
       // trivial job, and the plan stays step-sized. r14 (ADVICE):
       // tracked/released like the CC fixpoint — each step's blocks
       // release as the next materializes, the final frame's blocks
-      // go to a SessionMemo cleanup instead of waiting on the
+      // go to SessionMemo.onClear instead of waiting on the
       // ContextCleaner's GC cadence.
       val (nxt, nxtIds) =
-        Dedup.checkpointTracked(selected.unionByName(st))
-      Dedup.release(s, selIds)
+        graft.SessionMemo.checkpointTracked(selected.unionByName(st))
+      graft.SessionMemo.release(s, selIds)
       selected = nxt
       selIds = nxtIds
     }
-    graft.SessionMemo.registerCleanup(s,
-      s"mmr_checkpoint:${mmrInstance.incrementAndGet()}")(() =>
-      Dedup.release(s, selIds))
+    graft.SessionMemo.onClear(s)(graft.SessionMemo.release(s, selIds))
     selected
       .select(col("query_id"), col("mmr_rank"),
         col("nid").as("neighbor_id"), r4(col("score")).as("score"))

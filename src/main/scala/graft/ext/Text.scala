@@ -847,15 +847,6 @@ object Text {
     * Output: the learned merge table (rank, pair, merged symbol,
     * corpus pair count) — integer/string arithmetic only, replayed
     * bit-for-bit by the oracle's [[BpeMerges]] unrolled CTE rounds. */
-  /** (session, dir)-memoized trainer core: the merge table AND the
-    * final (word, cnt, syms) forms after all [[BpeMerges]] merges —
-    * [[bpeTrain]] reports the former, [[bpeEncode]] tokenizes with
-    * the latter; the [[graft.ext.Similarity]] kmeansMemo pattern
-    * (train once, query many). */
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.SessionMemo.LazySlot[
-      (Seq[(Long, String, String, String, Long)], DataFrame)]]
-
   /** Ranked pairs collected per round for batch selection — bounds
     * driver rows per round; NOT a correctness knob (selection falls
     * back to stricter, ultimately single-merge, batches whenever the
@@ -910,20 +901,21 @@ object Text {
     if (strict.isEmpty) ranked.take(1).toSeq else strict.toSeq
   }
 
+  /** (session, dir)-memoized trainer core: the merge table AND the
+    * final (word, cnt, syms) forms after all [[BpeMerges]] merges —
+    * [[bpeTrain]] reports the former, [[bpeEncode]] tokenizes with
+    * the latter; a `SessionMemo.once` entry like the IVF k-means model
+    * (train once, query many). */
   private def trainBpe(s: SparkSession, dir: String)
       : (Seq[(Long, String, String, String, Long)], DataFrame) =
-    graft.SessionMemo.singleFlight(bpeMemo, (s, dir)) {
-      graft.SessionMemo.timedBuild(s"bpe:$dir") {
+    graft.SessionMemo.once(s, s"bpe:$dir") {
       val words = fannedDocs(s, dir)
         .select(explode(tokens(col("text"))).as("word"))
         .filter(col("word").rlike("^[a-z]+$"))
         .groupBy("word").agg(count(lit(1)).as("cnt"))
       val (merges, forms, _) = trainBpeOn(words, BpeMerges)
-      graft.SessionMemo.registerCleanup(s, s"bpe:$dir") { () =>
-        bpeMemo.remove((s, dir)); ()
-      }
       (merges, forms)
-    }}
+    }(_ => ())
 
   /** Trainer core over a `(word, cnt)` frequency table: learn
     * `nMerges` BPE merges, BATCHING provably-independent merges per

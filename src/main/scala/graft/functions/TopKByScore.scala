@@ -54,16 +54,16 @@ case class TopKByScore(
   override def createAggregationBuffer(): TopKByScore.Buf =
     new TopKByScore.Buf(new Array[Double](k), new Array[Long](k), 0)
 
-  // strictly better = higher score, ties to the SMALLER id.
-  // java.lang.Double.compare, not primitive >/==: it orders NaN as
-  // the GREATEST double and -0.0 below 0.0 — exactly Spark's sort
-  // semantics for DoubleType (nanSafeCompareDoubles), so the
-  // aggregate stays bit-identical to the row_number window it
-  // replaced even on degenerate scores (a zero-norm vector's cosine
-  // is NaN); the primitive form silently ranked NaN WORST (r13
-  // ADVICE).
+  // strictly better = higher score, ties to the SMALLER id. The
+  // comparison is Spark's sort order for DoubleType
+  // (SQLOrderingUtil.compareDoubles): NaN is the GREATEST double and
+  // -0.0 EQUALS 0.0, so the aggregate stays bit-identical to the
+  // row_number window it replaced even on degenerate scores (a
+  // zero-norm vector's cosine is NaN). Primitive >/== ranks NaN
+  // worst; bare java.lang.Double.compare puts -0.0 below 0.0 and
+  // skips the id tie-break between them.
   private def better(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-    val c = java.lang.Double.compare(s1, s2)
+    val c = if (s1 == s2) 0 else java.lang.Double.compare(s1, s2)
     c > 0 || (c == 0 && i1 < i2)
   }
 

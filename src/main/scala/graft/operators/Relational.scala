@@ -1103,6 +1103,11 @@ object Relational {
 
   private val CboPriority = "1-URGENT"
   private val CboMaxSize = 10
+  /** Per-task build bytes the CBO join width targets — 32 MB, the
+    * figure the oracle's `parts_*` columns replay. Not the array
+    * joins' 16 MB target, which is halved for a reason specific to
+    * array payloads. */
+  private val CboBuildTarget = 32L << 20
 
   /** The order- and build-choosing join tree itself,
     * estimate-parameterized so `PlanSpec` can drive every choice both
@@ -1119,8 +1124,8 @@ object Relational {
       if (ordersFirst) nPart <= estOrders else nOrders <= estPart
     // Third CBO knob (r13): each join's shuffle WIDTH from the same
     // sketch state — the estimated BUILD side's bytes (48 B/row, the
-    // [[graft.ext.Dedup.arrayJoinPartitions]] fixed-row term; no
-    // array payloads here) over the 32 MB per-task build target.
+    // fixed-row term of the array joins' sizing; no array payloads
+    // here) over the [[CboBuildTarget]] per-task build target.
     // `parts_*` is the pure estimate-derived width (floor 1 — what
     // the statistics contribute, and what the oracle replays
     // arithmetically); the PHYSICAL exchange floors it at the
@@ -1133,8 +1138,10 @@ object Relational {
     val buildRows2 =
       if (buildDim2) (if (ordersFirst) nPart else nOrders)
       else (if (ordersFirst) estOrders else estPart)
-    val parts1 = graft.ext.Dedup.arrayJoinPartitions(buildRows1, 0L, 1)
-    val parts2 = graft.ext.Dedup.arrayJoinPartitions(buildRows2, 0L, 1)
+    def parts(rows: Long): Int =
+      math.max(1L, (48L * rows + CboBuildTarget - 1) / CboBuildTarget).toInt
+    val parts1 = parts(buildRows1)
+    val parts2 = parts(buildRows2)
     val sessionPar =
       li.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val w1 = math.max(sessionPar, parts1)

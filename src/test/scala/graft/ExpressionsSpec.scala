@@ -290,29 +290,37 @@ class ExpressionsSpec extends SparkSpec {
     // the knn-graph top-k rides this equivalence: (score DESC, id ASC)
     // emitted best-first must match the window's row_number selection
     // AND order exactly, including score ties (the fixture's 1/20
-    // rounding forces many)
+    // rounding forces many). Group 17 holds the degenerate scores: a
+    // NaN (Spark's sort ranks it greatest) and a -0.0 tied with 0.0
+    // (Spark's sort compares them equal, so the id breaks the tie) —
+    // with k = 4 the tie straddles the cut.
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(7)
-    val rows = for (g <- 0 until 17; i <- 0 until (3 + g % 9)) yield
-      (g.toLong, (g * 100 + i).toLong, math.rint(rnd.nextDouble() * 20) / 20)
+    val rows = (for (g <- 0 until 17; i <- 0 until (3 + g % 9)) yield
+      (g.toLong, (g * 100 + i).toLong, math.rint(rnd.nextDouble() * 20) / 20)) ++
+      Seq((17L, 1700L, 0.5), (17L, 1701L, -0.0), (17L, 1702L, Double.NaN),
+        (17L, 1703L, 0.25), (17L, 1704L, 0.0))
     val df = rows.toDF("g", "id", "score")
+    // scores compare by bits: NaN never equals itself under ==
+    def asKey(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getLong(3))
     val k = 4
     val w = Window.partitionBy("g").orderBy(col("score").desc, col("id").asc)
     val viaWindow = df
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("g", "id", "score", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .toSet
+      .collect().map(asKey).toSet
     val viaAgg = df.groupBy("g")
       .agg(graft.functions.TopKByScore.topKByScore(
         col("score"), col("id"), k).as("tk"))
       .select(col("g"), posexplode(col("tk")).as(Seq("pos", "t")))
       .select(col("g"), col("t.id"), col("t.score"),
         (col("pos") + 1).cast("long").as("rank"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .toSet
+      .collect().map(asKey).toSet
     assert(viaAgg == viaWindow)
+    assert(viaWindow.exists(_._3 == java.lang.Double.doubleToLongBits(Double.NaN)),
+      "the NaN row must make the top-k")
   }
 
   test("text kernels: null input yields null; interpreted == codegen") {
