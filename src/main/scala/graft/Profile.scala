@@ -26,7 +26,6 @@ object Profile {
       (System.nanoTime() - t0) / 1e9
     }
     names.foreach { name =>
-      graft.ext.Dedup.lastCcStats = graft.ext.Dedup.CcStats(0, Nil)
       val cold = run(name)
       val warm = run(name)
       // memo-cleared, codegen-warm: the state a Bench pass 2 query
@@ -35,10 +34,6 @@ object Profile {
       SessionMemo.clear(spark)
       val rebuilt = run(name)
       println(f"[profile] $name%-28s cold ${cold}%6.2f s   warm ${warm}%6.2f s   rebuilt ${rebuilt}%6.2f s")
-      val cc = graft.ext.Dedup.lastCcStats
-      if (cc.rounds > 0) println(
-        f"[profile]   cc rounds=${cc.rounds} " +
-          cc.secs.map(s => f"$s%.2f").mkString("[", ", ", "] s"))
       if (explain)
         SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SessionMemo.{checkpointTracked, release}
+import graft.SessionMemo.{Rounds, checkpointTracked, iterate, release}
 import graft.Tables
 import graft.functions.Num.r4
 
@@ -1189,11 +1189,6 @@ object Dedup {
       sigs: DataFrame): DataFrame =
     graft.SessionMemo.cached(s, dir, "minhash_buckets")(minhashBuckets(sigs))
 
-  /** Per-round wall seconds of the most recent CC run — a profiler /
-    * test probe (the round count bounds assertion lives in DedupSpec). */
-  private[graft] case class CcStats(rounds: Int, secs: Seq[Double])
-  @volatile private[graft] var lastCcStats: CcStats = CcStats(0, Nil)
-
   /** Is the edge list a proper star forest — every source node has
     * exactly ONE parent, and no parent is itself a source? (Both
     * checks are needed: a node with two root parents passes the
@@ -1235,10 +1230,9 @@ object Dedup {
     * 100 TB shape: every round shuffles only (long, long) edges —
     * never documents; edge count never grows (large-star emits
     * exactly one edge per input edge, small-star at most one per edge
-    * plus one per center). Lineage is truncated per round with
-    * `localCheckpoint` (swap for reliable `checkpoint` on a real
-    * cluster) and the prior round's blocks are released as soon as
-    * the next materializes, so executor storage is O(1) in rounds.
+    * plus one per center). Rounds run on [[graft.SessionMemo.iterate]]
+    * (per-round `localCheckpoint`; swap for reliable `checkpoint` on a
+    * real cluster), so executor storage is O(1) in rounds.
     * Convergence is the star-forest test (unique parent + no chains),
     * checked on the just-checkpointed edges. At the fixpoint each
     * component is one star rooted at its minimum member — both
@@ -1257,14 +1251,14 @@ object Dedup {
     // star contraction: every bucket member points at the bucket min;
     // singleton-bucket docs drop out here and return via `universe`
     val bmin = buckets.groupBy("bucket").agg(min("doc_id").as("v"))
-    val (edges, edgeIds) = ccFixpoint(
+    val forest = ccFixpoint(
       buckets.join(bmin.hint("shuffle_hash"), Seq("bucket"))
         .select(col("doc_id").as("u"), col("v"))
         .where(col("u") =!= col("v")).distinct())
     // star forest: edges = (member → component-min root); singletons
     // re-enter as their own rep via the left join on the universe
     val rep = universe
-      .join(edges.toDF("doc_id", "r").hint("shuffle_hash"), Seq("doc_id"), "left")
+      .join(forest.frame.toDF("doc_id", "r").hint("shuffle_hash"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("r"), col("doc_id")).as("rep"))
     val sizes = rep.groupBy("rep").agg(count(lit(1)).as("cluster_size"))
     val (out, outIds) = checkpointTracked(
@@ -1273,7 +1267,7 @@ object Dedup {
         .orderBy("doc_id"))
     // the result stands alone now — drop the loop's working set; the
     // result's own blocks release on SessionMemo.clear
-    release(sess, bucketIds ++ edgeIds)
+    release(sess, bucketIds ++ forest.ids)
     graft.SessionMemo.onClear(sess)(release(sess, outIds))
     out
   }
@@ -1281,20 +1275,14 @@ object Dedup {
   /** The large-star/small-star fixpoint itself (Kiveris et al.),
     * shared by [[clustersFromBuckets]] and [[clustersFromHashGraph]]:
     * takes an oriented exactly-once edge frame (u, v; v < u), returns
-    * the converged star forest (member u → component-min v) as an
-    * eagerly checkpointed frame plus its tracked RDD ids — the CALLER
-    * releases those once its derived result is materialized. Edge
-    * count never grows round-over-round; each round's frame is
-    * checkpointed and the prior round's blocks released immediately,
-    * so executor storage is O(1) in the round count. */
-  private def ccFixpoint(initialEdges: DataFrame): (DataFrame, Set[Int]) = {
+    * the converged star forest (member u → component-min v) as a
+    * checkpointed frame with its tracked RDD ids — the CALLER releases
+    * those once its derived result is materialized — and the round
+    * count. Edge count never grows round-over-round. */
+  private[graft] def ccFixpoint(initialEdges: DataFrame): Rounds = {
     val sess = initialEdges.sparkSession
-    var (edges, edgeIds) = checkpointTracked(initialEdges)
-    var converged = isStarForest(edges)
-    var iters = 0
-    val roundSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    while (!converged && iters < MaxCcIters) {
-      val t0 = System.nanoTime()
+    val (edges0, edgeIds0) = checkpointTracked(initialEdges)
+    val r = iterate(edges0, edgeIds0, MaxCcIters)(isStarForest) { (edges, _) =>
       // large-star: m = min of the closed neighborhood of u; every
       // neighbor v > u re-points at m. Output orientation stays
       // first > second (v > u >= m), and |output| = |edges| exactly
@@ -1308,26 +1296,19 @@ object Dedup {
       // small-star: all edges now point small; each center u and its
       // smaller neighbors re-point at the neighborhood min m.
       val sm = ls.groupBy("u").agg(min("v").as("m"))
-      val ss = ls.join(sm.hint("shuffle_hash"), Seq("u"))
+      ls.join(sm.hint("shuffle_hash"), Seq("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .where(col("u") =!= col("v"))
         .union(sm.where(col("u") =!= col("m"))
           .select(col("u"), col("m").as("v")))
         .distinct()
-      val (newEdges, newIds) = checkpointTracked(ss)
-      converged = isStarForest(newEdges)
-      roundSecs += (System.nanoTime() - t0) / 1e9
-      // newEdges materialized (eager checkpoint) — release the prior
-      // round NOW so executor storage stays O(1) in the round count
-      release(sess, edgeIds)
-      edges = newEdges
-      edgeIds = newIds
-      iters += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in $MaxCcIters rounds")
-    lastCcStats = CcStats(iters, roundSecs.toSeq)
-    (edges, edgeIds)
+    if (!r.done) {
+      release(sess, r.ids)
+      throw new IllegalStateException(
+        s"connected components did not converge in $MaxCcIters rounds")
+    }
+    r
   }
 
   /** Connected components where the graph is ALREADY HASH-LEVEL:
@@ -1349,11 +1330,11 @@ object Dedup {
       hashPairs: DataFrame): DataFrame = {
     val sess = idHash.sparkSession
     val (hs, hsIds) = checkpointTracked(idHash.toDF("doc_id", "hash"))
-    val (forest, forestIds) = ccFixpoint(
+    val forest = ccFixpoint(
       hashPairs.select(col("h_b").as("u"), col("h_a").as("v")))
     // hash → component-min hash; absent hashes are singleton nodes
     val withRoot = hs
-      .join(forest.toDF("hash", "root").hint("shuffle_hash"), Seq("hash"), "left")
+      .join(forest.frame.toDF("hash", "root").hint("shuffle_hash"), Seq("hash"), "left")
       .select(col("doc_id"), coalesce(col("root"), col("hash")).as("root"))
     // component-min DOC id is the rep the pair-graph oracle states —
     // one aggregate + one join over the id space, all long keys
@@ -1363,7 +1344,7 @@ object Dedup {
       withRoot.join(reps.hint("shuffle_hash"), Seq("root"))
         .select(col("doc_id"), col("cluster_rep"), col("cluster_size"))
         .orderBy("doc_id"))
-    release(sess, hsIds ++ forestIds)
+    release(sess, hsIds ++ forest.ids)
     graft.SessionMemo.onClear(sess)(release(sess, outIds))
     out
   }
@@ -1728,8 +1709,8 @@ object Dedup {
     * cluster-rep-by-min-id cannot). Classic power iteration done
     * Spark-first: each round is one edge join + one pre-combined
     * groupBy on the destination key, so a round shuffles O(|E|)
-    * (doc, contribution) pairs and nothing retains lineage across
-    * rounds beyond the [[PrIters]]-deep unrolled plan.
+    * (doc, contribution) pairs; rounds run on
+    * [[graft.SessionMemo.iterate]], so no lineage crosses rounds.
     *
     * Determinism discipline: per-edge contributions round to 12
     * decimals then sum through an exact DECIMAL(25,15) — accumulation
@@ -1745,37 +1726,16 @@ object Dedup {
     val edgesDeg = neardupEdgesDeg(s, dir, sigs)
     val nodes = sigs.select("doc_id")
     val nDocs = nodes.agg(count(lit(1)).as("n"))
-    // loop-invariant (node, 1/n) base — hoisted and checkpointed
-    // once; each round's output is localCheckpointed too: the r12
-    // form rebuilt nodes × nDocs inside every round with nothing
-    // truncating the unrolled lineage, and the 3-round plan
-    // snowballed to ~480 KB / 824 Exchange nodes (each round
-    // re-embedded the count subtree and the whole prior round). The
-    // checkpointed frames are |V| rows of (long, double) — the
-    // labelProp/MMR discipline. The per-round join shapes stay
-    // auditable via [[pagerankRoundForAudit]] (checkpoint-free), the
-    // memoized-builder device PlanSpec already uses for the embedding
-    // pair pipeline.
-    // r14 (ADVICE): the per-round checkpoints now follow the
-    // checkpointTracked/release discipline the CC fixpoint uses —
-    // each round's blocks release as the next materializes, the
-    // loop-invariant base releases after the last round, and the
-    // final frame's blocks are handed to SessionMemo.onClear
-    // (previously every invocation pinned PrIters+1 RDDs until a
-    // GC-driven ContextCleaner pass happened to collect them).
+    // loop-invariant (node, 1/n) base, hoisted and checkpointed once;
+    // the per-round join shapes stay auditable via
+    // [[pagerankRoundForAudit]] (checkpoint-free)
     val (withN, withNIds) = checkpointTracked(nodes.crossJoin(broadcast(nDocs)))
-    var pr = withN
-      .select(col("doc_id"), (lit(1.0) / col("n")).as("pr"))
-    var prIds = Set.empty[Int]
-    for (_ <- 1 to PrIters) {
-      val (nxt, nxtIds) = checkpointTracked(pagerankRound(withN, edgesDeg, pr))
-      release(s, prIds)
-      pr = nxt
-      prIds = nxtIds
-    }
-    release(s, withNIds)
-    graft.SessionMemo.onClear(s)(release(s, prIds))
-    pr.select(col("doc_id"), round(col("pr"), 6).as("pagerank"))
+    val last = try iterate(
+        withN.select(col("doc_id"), (lit(1.0) / col("n")).as("pr")),
+        Set.empty, PrIters)(_ => false) {
+      (pr, _) => pagerankRound(withN, edgesDeg, pr)
+    }.frame finally release(s, withNIds)
+    last.select(col("doc_id"), round(col("pr"), 6).as("pagerank"))
       .orderBy("doc_id")
   }
 
@@ -1859,8 +1819,9 @@ object Dedup {
     }
     val edges = neardupStarEdges(s, dir, sigs)
     val nodes = sigs.select("doc_id")
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("lab"))
-    for (_ <- 1 to LpaIters) {
+    iterate(
+        nodes.select(col("doc_id"), col("doc_id").as("lab")),
+        Set.empty, LpaIters)(_ => false) { (labels, _) =>
       val adopted = labels
         .join(edges.hint("shuffle_hash"), col("doc_id") === col("dst"))
         .groupBy(col("src").as("doc_id"), col("lab"))
@@ -1868,16 +1829,11 @@ object Dedup {
         .groupBy("doc_id")
         .agg(max(struct(col("n"), (-col("lab")).as("neg"))).as("m"))
         .select(col("doc_id"), (-col("m.neg")).as("newlab"))
-      labels = labels
+      labels
         .join(adopted.hint("shuffle_hash"), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("newlab"), col("lab")).as("lab"))
-        // labels feed BOTH next-round consumers (the adopt join and
-        // the keep-own fallback); materialize per round or the
-        // lineage re-executes ~2^rounds times (the BPE-trainer
-        // discipline — the frame is |V| rows, kilobytes per node)
-        .localCheckpoint()
-    }
-    labels.select(col("doc_id"), col("lab").as("community"))
+    }.frame
+      .select(col("doc_id"), col("lab").as("community"))
       .orderBy("doc_id")
   }
 

@@ -1440,10 +1440,10 @@ object Similarity {
     * Scale shape: the greedy loop is inherently sequential, but ONLY
     * over the [[MmrC]]-bounded per-query candidate list — so the
     * whole re-rank costs O(queries · C² · k) independent of corpus
-    * size, and the unrolled [[MmrK]] selection steps are static
-    * relational operators (anti-join remaining ∪ max-penalty join ∪
-    * per-query argmax window over ≤ C rows) — the deterministic-Lloyd
-    * unroll discipline, not a driver loop and not a UDF. Candidate
+    * size, and the [[MmrK]] selection steps are relational rounds on
+    * [[graft.SessionMemo.iterate]] (anti-join remaining ∪ max-penalty
+    * join ∪ per-query argmax window over ≤ C rows) — not a
+    * per-candidate driver loop and not a UDF. Candidate
     * generation composes any declared ANN surface ([[bruteForceTopK]]
     * here; [[lshAnn]]/[[ivfTopK]] at 100 TB). Similarities round to
     * 6 dp BEFORE every comparison, ties break on neighbor id — both
@@ -1455,7 +1455,7 @@ object Similarity {
     val w = Window.partitionBy("query_id")
       .orderBy(col("qcos").desc, col("nid").asc)
     // the candidate list and its pair-sim table are queries·C-bounded;
-    // memoized+cached so the 4 unrolled selection steps (each of which
+    // memoized+cached so the selection steps (each of which
     // branches on both frames) never re-run the corpus scan
     val cand = graft.SessionMemo.cached(s, dir, "sim_mmr_cand") {
       c.join(broadcast(q), col("nid") =!= col("query_id"))
@@ -1478,12 +1478,12 @@ object Similarity {
             .as("sim"))
     }
     val slim = cand.select("query_id", "nid", "qcos", "r")
-    var selIds = Set.empty[Int]
-    var selected = slim.filter(col("r") === 1)
+    val first = slim.filter(col("r") === 1)
       .select(col("query_id"), col("nid"),
         round(lit(MmrLambda) * col("qcos"), 6).as("score"),
         lit(1L).as("mmr_rank"))
-    for (t <- 2 to MmrK) {
+    graft.SessionMemo.iterate(first, Set.empty, MmrK - 1)(_ => false) { (selected, n) =>
+      val t = n + 1 // the rank this step selects; rank 1 is `first`
       val selSet = selected.select(col("query_id").as("sq"), col("nid").as("snid"))
       val rem = slim.join(selected.select("query_id", "nid"),
         Seq("query_id", "nid"), "left_anti")
@@ -1500,25 +1500,8 @@ object Similarity {
         .filter(col("rr") === 1)
         .select(col("query_id"), col("nid"), col("score"),
           lit(t.toLong).as("mmr_rank"))
-      // selected feeds THREE branches of the next step (the anti-join,
-      // the penalty join's selSet, and the union), so the unrolled
-      // lineage grows geometrically — the final plan reached ~1.3 MB
-      // and ~5 s of driver-side planning PER RUN (the labelProp
-      // re-execution disease, but in planning time). Truncate per
-      // step: the frame is ≤ queries·t rows, the checkpoint is one
-      // trivial job, and the plan stays step-sized. r14 (ADVICE):
-      // tracked/released like the CC fixpoint — each step's blocks
-      // release as the next materializes, the final frame's blocks
-      // go to SessionMemo.onClear instead of waiting on the
-      // ContextCleaner's GC cadence.
-      val (nxt, nxtIds) =
-        graft.SessionMemo.checkpointTracked(selected.unionByName(st))
-      graft.SessionMemo.release(s, selIds)
-      selected = nxt
-      selIds = nxtIds
-    }
-    graft.SessionMemo.onClear(s)(graft.SessionMemo.release(s, selIds))
-    selected
+      selected.unionByName(st)
+    }.frame
       .select(col("query_id"), col("mmr_rank"),
         col("nid").as("neighbor_id"), r4(col("score")).as("score"))
       .orderBy("query_id", "mmr_rank")

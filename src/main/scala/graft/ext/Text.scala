@@ -915,7 +915,7 @@ object Text {
         .groupBy("word").agg(count(lit(1)).as("cnt"))
       val (merges, forms, _) = trainBpeOn(words, BpeMerges)
       (merges, forms)
-    }(_ => ())
+    }(_ => ()) // the forms' blocks release through the round driver
 
   /** Trainer core over a `(word, cnt)` frequency table: learn
     * `nMerges` BPE merges, BATCHING provably-independent merges per
@@ -929,15 +929,15 @@ object Text {
   private[graft] def trainBpeOn(words: DataFrame, nMerges: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame, Int) = {
     import org.apache.spark.sql.expressions.Window
-    var forms = words.select(col("word"), col("cnt"),
-      regexp_extract_all(col("word"), lit("[a-z]"), lit(0)).as("syms"))
-      .localCheckpoint() // truncate lineage per round: plans stay flat
+    val (forms0, forms0Ids) = graft.SessionMemo.checkpointTracked(
+      words.select(col("word"), col("cnt"),
+        regexp_extract_all(col("word"), lit("[a-z]"), lit(0)).as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, String, Long)]
-    var rounds = 0
     val wPos = Window.partitionBy("word").orderBy("pos")
-    while (merges.size < nMerges) {
-      rounds += 1
+    // every round adds at least one merge, so nMerges rounds suffice
+    val run = graft.SessionMemo.iterate(forms0, forms0Ids, nMerges)(
+        _ => merges.size >= nMerges) { (forms, _) =>
       val symRows = forms
         .select(col("word"), col("cnt"), posexplode(col("syms")).as(Seq("pos", "sym")))
         .withColumn("nxt", lead(col("sym"), 1).over(wPos))
@@ -973,7 +973,7 @@ object Text {
       val crk = sum(when(cnd, 1).otherwise(0))
         .over(wPos.rowsBetween(Window.unboundedPreceding, Window.currentRow))
       val wRun = Window.partitionBy("word", "rid")
-      forms = symRows
+      symRows
         .withColumn("cand", cnd)
         .withColumn("rid", when(cnd, col("pos") - crk))
         .withColumn("p0", min(when(col("cand"), col("pos"))).over(wRun))
@@ -987,9 +987,8 @@ object Text {
         .groupBy("word", "cnt")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("out")))),
           x => x.getField("out")).as("syms"))
-        .localCheckpoint()
     }
-    (merges.toSeq, forms, rounds)
+    (merges.toSeq, run.frame, run.rounds)
   }
 
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {

@@ -286,11 +286,6 @@ class DedupSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.size
     val out = Dedup.clustersFromBuckets(buckets).collect()
     assert(out.forall(_.getLong(1) == 0L), "path graph is one component, rep 0")
-    // large-star/small-star contracts the path multiplicatively: a
-    // 24-hop chain must close in O(log n) rounds, where plain
-    // min-label propagation needs O(n) (~12+ here)
-    assert(Dedup.lastCcStats.rounds <= 6,
-      s"expected O(log n) rounds on a path graph, got ${Dedup.lastCcStats.rounds}")
     val after = spark.sparkContext.getPersistentRDDs.size
     // many rounds ran; only the checkpointed RESULT may remain pinned
     assert(after - before <= 1,
@@ -298,6 +293,14 @@ class DedupSpec extends SparkSpec {
     SessionMemo.clear(spark)
     assert(spark.sparkContext.getPersistentRDDs.size <= before,
       "SessionMemo.clear must release the result checkpoint too")
+    // large-star/small-star contracts the path multiplicatively: a
+    // 24-hop chain must close in O(log n) rounds, where plain
+    // min-label propagation needs O(n) (~12+ here). The fixpoint's
+    // input is the path's star contraction: member i+1 → bucket min i.
+    val cc = Dedup.ccFixpoint((0 until n).map(i => ((i + 1).toLong, i.toLong)).toDF("u", "v"))
+    SessionMemo.release(spark, cc.ids)
+    assert(cc.rounds <= 6,
+      s"expected O(log n) rounds on a path graph, got ${cc.rounds}")
   }
 
   test("dedup_clusters covers every minhash-LSH pair in one component") {

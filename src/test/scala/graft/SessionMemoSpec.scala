@@ -104,22 +104,108 @@ class SessionMemoSpec extends SparkSpec {
     assert(builds.size == 1, s"expected one ivf_kmeans build, got $builds")
   }
 
-  test("only SessionMemo declares a concurrent.TrieMap under src/main/scala/graft") {
-    // memo lifetimes are decided in one module: a private TrieMap
-    // elsewhere is a memo that clear() does not know about
+  private def persistentIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** `n` stepped once per round, from a checkpointed 8-row start. */
+  private def counting(maxRounds: Int)(done: org.apache.spark.sql.DataFrame => Boolean)
+      (onRound: Int => Unit): SessionMemo.Rounds = {
+    import org.apache.spark.sql.functions.col
+    val (init, initIds) = SessionMemo.checkpointTracked(spark.range(8).toDF("n"))
+    SessionMemo.iterate(init, initIds, maxRounds)(done) { (f, round) =>
+      onRound(round)
+      f.select((col("n") + 1).as("n"))
+    }
+  }
+
+  test("iterate: stops on done, keeps only the last round pinned until clear") {
+    SessionMemo.clear(spark)
+    val before = persistentIds
+    import org.apache.spark.sql.functions.min
+    val r = counting(10)(_.agg(min("n")).head.getLong(0) >= 3)(_ => ())
+    assert(r.rounds == 3 && r.done)
+    assert(r.frame.collect().map(_.getLong(0)).sorted.toSeq == (3L to 10L))
+    assert(persistentIds -- before == r.ids, "only the last round stays pinned")
+    SessionMemo.clear(spark)
+    assert((persistentIds -- before).isEmpty, "clear releases the last round")
+    val capped = counting(2)(_ => false)(_ => ())
+    assert(capped.rounds == 2 && !capped.done)
+    SessionMemo.clear(spark)
+  }
+
+  test("iterate: a step that throws releases the live round") {
+    SessionMemo.clear(spark)
+    val before = persistentIds
+    val e = intercept[IllegalStateException](counting(5)(_ => false) { round =>
+      if (round == 2) throw new IllegalStateException("boom")
+    })
+    assert(e.getMessage == "boom")
+    assert(persistentIds == before, s"pinned after the throw: ${persistentIds -- before}")
+  }
+
+  test("iterate: a done probe that throws releases the live round") {
+    SessionMemo.clear(spark)
+    val before = persistentIds
+    var probes = 0
+    val e = intercept[IllegalStateException](counting(5) { _ =>
+      probes += 1
+      if (probes == 2) throw new IllegalStateException("probe")
+      false
+    }(_ => ()))
+    assert(e.getMessage == "probe")
+    assert(persistentIds == before, s"pinned after the throw: ${persistentIds -- before}")
+  }
+
+  test("iterative operators pin at most their last round, and clear releases it") {
+    import spark.implicits._
+    val calls: Seq[(String, () => Unit)] = Seq(
+      "labelProp" -> (() => { ext.Dedup.labelProp(spark, sf0001).collect(); () }),
+      "pagerank" -> (() => { ext.Dedup.pagerank(spark, sf0001).collect(); () }),
+      "mmrRerank" -> (() => { ext.Similarity.mmrRerank(spark, sf0001).collect(); () }),
+      "trainBpeOn" -> (() => {
+        ext.Text.trainBpeOn(TextSpec.wideVocab.toSeq.toDF("word", "cnt"), 12); () }))
+    val leaks = calls.flatMap { case (name, call) =>
+      call() // warm: the call's session memos are built here
+      val before = persistentIds
+      call()
+      val created = persistentIds -- before
+      SessionMemo.clear(spark)
+      val left = created & persistentIds
+      (if (created.size > 1) Seq(s"$name pinned ${created.size} RDDs") else Nil) ++
+        (if (left.nonEmpty) Seq(s"$name kept $left after clear") else Nil)
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
+  /** Source files under `src/main/scala/graft`, other than
+    * SessionMemo.scala, whose text contains `needle`. */
+  private def sourcesContaining(needle: String): List[java.nio.file.Path] = {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     assert(java.nio.file.Files.isDirectory(root),
       s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
     val owner = root.resolve("SessionMemo.scala")
     val walk = java.nio.file.Files.walk(root)
-    val offenders = try {
+    try {
       import scala.jdk.CollectionConverters._
       walk.iterator().asScala
         .filter(p => p.toString.endsWith(".scala") && p != owner)
         .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .contains("TrieMap"))
+          .contains(needle))
         .toList
     } finally walk.close()
+  }
+
+  test("only SessionMemo declares a concurrent.TrieMap under src/main/scala/graft") {
+    // memo lifetimes are decided in one module: a private TrieMap
+    // elsewhere is a memo that clear() does not know about
+    val offenders = sourcesContaining("TrieMap")
     assert(offenders.isEmpty, s"TrieMap declared outside SessionMemo: $offenders")
+  }
+
+  test("only SessionMemo calls localCheckpoint under src/main/scala/graft") {
+    // a bare checkpoint elsewhere pins blocks nothing releases; loops
+    // run on SessionMemo.iterate, one-off frames use checkpointTracked
+    val offenders = sourcesContaining("localCheckpoint(")
+    assert(offenders.isEmpty, s"localCheckpoint called outside SessionMemo: $offenders")
   }
 }

@@ -369,10 +369,7 @@ class TextSpec extends SparkSpec {
     // the whole disjoint stretch where canonical greedy pays one
     // serial job per merge
     import spark.implicits._
-    val units = "ab cd ef gh ij kl mn op".split(" ")
-    val vocab: Map[String, Long] =
-      units.zipWithIndex.map { case (w, i) => w -> (400L - 10L * i) }.toMap ++
-        Map("abcdefgh" -> 6L, "ijklmnop" -> 5L)
+    val vocab = TextSpec.wideVocab
     val nMerges = 12
     val want = referenceBpe(vocab, nMerges)
     val wordsDf = vocab.toSeq.toDF("word", "cnt")
@@ -438,5 +435,15 @@ class TextSpec extends SparkSpec {
         s"rank ${r.getLong(0)}: got (${r.getString(1)},${r.getString(2)}," +
           s"${r.getLong(4)}) want ($a,$b,$n)")
     }
+  }
+}
+
+object TextSpec {
+  /** Strictly decreasing, symbol-disjoint frequent units over a
+    * long-tail glue of composite words: 12 merges in few rounds. */
+  val wideVocab: Map[String, Long] = {
+    val units = "ab cd ef gh ij kl mn op".split(" ")
+    units.zipWithIndex.map { case (w, i) => w -> (400L - 10L * i) }.toMap ++
+      Map("abcdefgh" -> 6L, "ijklmnop" -> 5L)
   }
 }
