@@ -29,6 +29,11 @@ import org.apache.spark.sql.SparkSession
   *    files). At cluster scale the same dead state squats on
   *    executor-local disks; a tighter GC cadence is the standard
   *    mitigation and costs one minor driver GC every 2 min.
+  *  - parquet TIMESTAMP(NANOS) read as raw int64: such a footer fails
+  *    the scan outright otherwise, and this is what makes
+  *    [[graft.Tables.normalizeTs]]'s LongType branch reachable (no-op
+  *    for MICROS/NTZ files). Set here, once: a per-read `conf.set`
+  *    mutates conf that concurrent clients of the session share.
   */
 object Sessions {
   def builder(cores: Int): SparkSession.Builder =
@@ -41,4 +46,5 @@ object Sessions {
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.cleaner.periodicGC.interval", "2min")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

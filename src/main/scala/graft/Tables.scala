@@ -43,13 +43,10 @@ object Tables {
         s"events.ts arrived as $other; expected int64 nanos or a timestamp")
     }
 
-  def events(s: SparkSession, dir: String): DataFrame = {
-    // Not dead config: a TIMESTAMP(NANOS) footer fails the scan outright
-    // unless it lands as raw int64 — this is what makes normalizeTs's
-    // LongType branch reachable. No-op for MICROS/NTZ files.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Needs `spark.sql.legacy.parquet.nanosAsLong`, which
+    * [[graft.Sessions.builder]] sets. */
+  def events(s: SparkSession, dir: String): DataFrame =
     normalizeTs(s.read.parquet(s"$dir/events.parquet"))
-  }
   def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/documents.parquet")
   def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/embeddings.parquet")
 

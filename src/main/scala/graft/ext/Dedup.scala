@@ -775,6 +775,13 @@ object Dedup {
       .agg(graft.functions.MinHashSketch
         .minhashSketch(col("tok"), NumPerm).as("sig"))
 
+  /** The corpus's [[signatures]], session-memoized: every MinHash
+    * family (LSH, clusters, graph) reads this one cached frame. */
+  private def minhashSignatures(s: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.cached(s, dir, "minhash_signatures") {
+      signatures(distinctTokens(s, dir))
+    }
+
   /** MinHash + LSH near-dup candidates, est. Jaccard ≥ 0.9 — the
     * 100 TB dedup path. Banding turns all-pairs similarity into an
     * equi-join: explode each signature into (band, hash-of-rows)
@@ -786,9 +793,7 @@ object Dedup {
     // session-memoized: the banded/sa/sb branches would otherwise
     // re-run the signature aggregation three times (ReusedExchange
     // shares the shuffle but each branch re-merges the aggregate)
-    val docs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val docs = minhashSignatures(s, dir)
     // One shuffle, zero pair-stream exchanges: each band row carries
     // the doc's signature (32 longs) plus the 4-long band-key array,
     // estimation runs INSIDE the joined stage, and a FIRST-COLLISION
@@ -857,9 +862,7 @@ object Dedup {
     * with the standing corpus or within itself). Oracle: the same
     * pigeonhole brute-force, restricted. */
   def incrementalLsh(s: SparkSession, dir: String): DataFrame = {
-    val docs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val docs = minhashSignatures(s, dir)
     probePairs(docs.filter(col("doc_id") % DeltaMod === 0),
         docs.withColumn("in_probe", col("doc_id") % DeltaMod === 0))
       .withColumn("pair_kind",
@@ -954,9 +957,7 @@ object Dedup {
     * incrementality readout the oracle restates from the base-only
     * clustering. */
   def incrementalClusters(s: SparkSession, dir: String): DataFrame = {
-    val docs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val docs = minhashSignatures(s, dir)
     val bk = minhashBucketsCached(s, dir, docs)
     val isDelta = col("doc_id") % DeltaMod === 0
     // the standing state a prior pass persisted: the base-only map
@@ -1099,9 +1100,7 @@ object Dedup {
     * queries. All counts are distributed aggregates; only 1-row
     * frames cross-join. */
   def blockingQuality(s: SparkSession, dir: String): DataFrame = {
-    val sigs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val sigs = minhashSignatures(s, dir)
     // One band join, zero pair-stream exchanges (the minhashLsh
     // discipline — the first cut of this query `.distinct()`ed the
     // candidate pair stream and became the bench's most expensive
@@ -1360,9 +1359,7 @@ object Dedup {
     * recursive CTE reachability over the identical md5-derived
     * buckets. */
   def clusters(s: SparkSession, dir: String): DataFrame = {
-    val docs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val docs = minhashSignatures(s, dir)
     // memoized: Curation.pipeline re-reads the cluster map, and the
     // CC fixpoint (several shuffle rounds) must not re-run per query
     graft.SessionMemo.cached(s, dir, "minhash_clusters") {
@@ -1720,9 +1717,7 @@ object Dedup {
     * dangling-mass redistribution (isolated docs keep the
     * teleport-only rank), matching the oracle exactly. */
   def pagerank(s: SparkSession, dir: String): DataFrame = {
-    val sigs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val sigs = minhashSignatures(s, dir)
     val edgesDeg = neardupEdgesDeg(s, dir, sigs)
     val nodes = sigs.select("doc_id")
     val nDocs = nodes.agg(count(lit(1)).as("n"))
@@ -1779,9 +1774,7 @@ object Dedup {
     * BUILDER rather than its memoized cache. */
   private[graft] def pagerankRoundForAudit(s: SparkSession,
       dir: String): DataFrame = {
-    val sigs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val sigs = minhashSignatures(s, dir)
     val edgesDeg = neardupEdgesDeg(s, dir, sigs)
     val nodes = sigs.select("doc_id")
     val nDocs = nodes.agg(count(lit(1)).as("n"))
@@ -1814,9 +1807,7 @@ object Dedup {
     * partial-aggregatable expression, never a window. The oracle
     * unrolls the identical rounds over the identical edge CTE. */
   def labelProp(s: SparkSession, dir: String): DataFrame = {
-    val sigs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val sigs = minhashSignatures(s, dir)
     val edges = neardupStarEdges(s, dir, sigs)
     val nodes = sigs.select("doc_id")
     iterate(
@@ -1869,9 +1860,7 @@ object Dedup {
     * the identical all-pairs-verified edge set (collapse is exact, so
     * the per-doc counts cannot differ). */
   def triangles(s: SparkSession, dir: String): DataFrame = {
-    val sigs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val sigs = minhashSignatures(s, dir)
     // r13: the collapsed graph + triangle stats come from the shared
     // (session, dir) memo — one banded-candidate + verify build and
     // one wedge listing serve this face, the clustering-coefficient
@@ -2066,9 +2055,7 @@ object Dedup {
     * rounding. Docs with degree &lt; 2 have no defined coefficient and
     * drop (matching the oracle's WHERE). */
   def clusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    val sigs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val sigs = minhashSignatures(s, dir)
     val (member, perGroup) = triStatsCached(s, dir, sigs)
     clusteringOut(sigs, member, perGroup)
   }
@@ -2118,9 +2105,7 @@ object Dedup {
     * TakeOrderedAndProject with an (a, b) tie-break. A common
     * neighbor has degree ≥ 2, so 1/ln(deg) is always finite. */
   def adamicAdar(s: SparkSession, dir: String): DataFrame = {
-    val sigs = graft.SessionMemo.cached(s, dir, "minhash_signatures") {
-      signatures(distinctTokens(s, dir))
-    }
+    val sigs = minhashSignatures(s, dir)
     val (_, gEdges) = sigGraphCached(s, dir, sigs)
     adamicAdarOut(gEdges)
   }

@@ -465,17 +465,16 @@ object Similarity {
   def ivfPrunedTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (assign, cents) = kmeansModel(s, dir)
-    val path = graft.sources.Ingest.ingestTmpPath("ivfcells", dir)
     // one-time layout build: vector + norm per row, cell as the
     // partition key (one directory per cell). At 100 TB this is the
     // write-once index-build job; every later probe query reads only
     // its cells. SessionMemo.clear deletes the layout (like the
     // bucketed tables) so a cold bench pass repays the build.
-    graft.SessionMemo.once(s, s"ivf_layout:$dir") {
+    val path = graft.sources.SnapshotFs.layout(s, "ivf", dir) {
       vectors(s, dir).join(assign.hint("shuffle_hash"), Seq("vec_id"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(path)
-    }(_ => graft.sources.SnapshotFs.deleteTree(path))
+        .partitionBy("cell").parquet(_)
+    }
     val fact = s.read.parquet(path)
       .select(col("vec_id").as("neighbor_id"), col("v").as("nv"),
         col("nrm").as("nnrm"), col("cell"))

@@ -13,7 +13,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * filesystem is resolved per-path from the active session's Hadoop
   * configuration (scheme-dispatched: `file:`, `hdfs:`, `s3a:`, …),
   * falling back to a default `Configuration` when no session is up
-  * (shutdown hooks).
+  * (shutdown hooks). It also allocates the process's scratch space
+  * ([[scratch]]).
   *
   * Rename atomicity: `FileSystem.rename` is atomic on HDFS and on
   * `file:`; object stores emulate it. The staged-swap protocol
@@ -66,5 +67,62 @@ private[graft] object SnapshotFs {
   def rename(from: String, to: String): Unit = {
     val p = new Path(from)
     require(fs(p).rename(p, new Path(to)), s"rename $from -> $to failed")
+  }
+
+  // ── Scratch space ──────────────────────────────────────────────
+  // The files graft writes for its own use (layout copies, commit
+  // histories, compaction fixtures) live under ONE root per process,
+  // `<java.io.tmpdir>/graft_<pid>`: the pid isolates concurrent
+  // bench/verify JVMs, a shutdown hook deletes the root on exit, and
+  // the first allocation removes the roots of dead processes (a
+  // crashed JVM cannot delete its own). Pid liveness is only
+  // meaningful on this machine's local disk; pointing scratch at a
+  // shared store only requires replacing this allocator.
+
+  private def self: Long = ProcessHandle.current().pid()
+
+  private def tmpdir: String = System.getProperty("java.io.tmpdir")
+
+  private lazy val root: String = {
+    sweepDeadRoots()
+    val r = s"$tmpdir/graft_$self"
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => deleteTree(r), "graft-scratch-sweep"))
+    r
+  }
+
+  /** Delete every `graft_<pid>` root under `java.io.tmpdir` whose
+    * process is dead. Runs once per process, on the first [[scratch]]
+    * call. */
+  private[graft] def sweepDeadRoots(): Unit =
+    for (st <- list(tmpdir); n = st.getPath.getName
+         if st.isDirectory && n.matches("graft_\\d{1,18}")) {
+      val pid = n.stripPrefix("graft_").toLong
+      val alive = pid == self ||
+        ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
+      if (!alive) deleteTree(st.getPath.toString)
+    }
+
+  /** This process's scratch path for (`kind`, corpus `dir`). The name
+    * keys on the FULL `dir` path, as [[graft.SessionMemo]] does, so two
+    * corpora sharing a last path component never share files. A
+    * writer owns its path through [[layout]], or deletes a per-call
+    * path itself. */
+  private[graft] def scratch(kind: String, dir: String): String = {
+    val leaf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
+    f"$root/${kind}_${leaf}_${dir.hashCode}%08x"
+  }
+
+  /** The [[scratch]] path of a (`kind`, `dir`) layout, written by
+    * `write` once per (session, sf dir): the `<kind>_layout:$dir`
+    * `SessionMemo.once` entry, whose release deletes the files. Layout
+    * data is a pure function of `dir`, so a later call reads the first
+    * call's files instead of overwriting them under a reader whose
+    * file index already listed them. */
+  def layout(s: org.apache.spark.sql.SparkSession, kind: String, dir: String)
+      (write: String => Unit): String = {
+    val path = scratch(kind, dir)
+    graft.SessionMemo.once(s, s"${kind}_layout:$dir")(write(path))(_ => deleteTree(path))
+    path
   }
 }

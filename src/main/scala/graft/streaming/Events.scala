@@ -21,7 +21,6 @@ object Events {
     * has — raw int64 nanos or a typed timestamp (see
     * [[graft.Tables.normalizeTs]] for why both exist). */
   def rawSchema(s: SparkSession, dir: String): StructType = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),

@@ -65,10 +65,6 @@ class EventsStreamSpec extends SparkSpec {
     // join side, impossible user ids) so BOTH watermarks advance past
     // every real purchase and the trailing outer rows flush
     val tmp = java.nio.file.Files.createTempDirectory("pv_outer").toString
-    // nanosAsLong set BEFORE the raw read: a TIMESTAMP(NANOS) footer
-    // fails the scan outright otherwise, and this test must not depend
-    // on another test having set the conf session-wide first
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     raw.write.parquet(s"$tmp/events.parquet")
     // sentinel ts = max(ts) + 10 days, derived from the corpus rows
@@ -119,7 +115,6 @@ class EventsStreamSpec extends SparkSpec {
     // same sentinel staging as the outer-join test: both watermarks
     // must advance past every real purchase so trailing rows flush
     val tmp = java.nio.file.Files.createTempDirectory("asof_stream").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     raw.write.parquet(s"$tmp/events.parquet")
     val tsPlus10d = raw.schema("ts").dataType match {
@@ -371,7 +366,6 @@ class EventsStreamSpec extends SparkSpec {
     // the stream glob picks up both files, the batch twin models the
     // same duplication as corpus ∪ corpus
     val tmp = java.nio.file.Files.createTempDirectory("replay_dedup").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     raw.write.parquet(s"$tmp/events.parquet")
     raw.write.parquet(s"$tmp/events_replay.parquet")
@@ -414,7 +408,6 @@ class EventsStreamSpec extends SparkSpec {
     // the watermark passes every real session's gap-extended end and
     // append mode flushes them all
     val tmp = java.nio.file.Files.createTempDirectory("sess_stream").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     raw.write.parquet(s"$tmp/events.parquet")
     val tsPlus10d = raw.schema("ts").dataType match {

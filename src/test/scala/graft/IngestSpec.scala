@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Date
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Ingest
+import graft.sources.{Ingest, SnapshotFs}
 
 class IngestSpec extends SparkSpec {
   import spark.implicits._
@@ -352,21 +353,59 @@ class IngestSpec extends SparkSpec {
     val mine = spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_b_"))
     assert(mine.length == 2, s"expected the two layout tables, got ${mine.toSeq}")
-    // a leftover directory from a dead process must be swept on next use
-    val wh = new java.io.File(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val stale = new java.io.File(wh, "graft_b_orders_fake_999999999")
+    val dirs = Seq("graft_b_orders", "graft_b_customer").map(SnapshotFs.scratch(_, sf0001))
+    assert(dirs.forall(SnapshotFs.hasChildren), s"layout tables hold no files: $dirs")
+    // a scratch root left by a dead process is swept; the sweep runs
+    // once per process (first scratch allocation), so call it directly
+    val stale = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_999999999/graft_b_orders_x")
     stale.mkdirs()
-    // SessionMemo.clear runs the registered hook: tables + dirs gone
+    SnapshotFs.sweepDeadRoots()
+    assert(!stale.getParentFile.exists, "stale dead-pid root must be swept")
+    // SessionMemo.clear runs the release: tables + dirs gone
     SessionMemo.clear(spark)
     assert(spark.catalog.listTables().collect()
       .forall(!_.name.startsWith("graft_b_")), "clear must drop the layout tables")
-    assert(mine.forall(t => !new java.io.File(wh, t).exists),
-      "managed-table drop must remove the warehouse directories")
-    // re-run recreates the layout (and the sweep removed the stale dir)
+    assert(dirs.forall(!SnapshotFs.exists(_)),
+      "clear must delete the layout tables' directories")
+    // re-run recreates the layout
     val r2 = Ingest.bucketedColocatedJoin(spark, sf0001).collect()
     assert(r2.map(_.toSeq).toSeq == r1.map(_.toSeq).toSeq)
-    assert(!stale.exists, "stale dead-pid directory must be swept")
+  }
+
+  test("a layout query's second call leaves the first call's frame readable") {
+    // each call used to overwrite its files, deleting those the first
+    // frame's file index had already listed (FAILED_READ_FILE)
+    val queries = Seq[(String, (SparkSession, String) => DataFrame)](
+      "upsertRoundtrip" -> Ingest.upsertRoundtrip,
+      "deleteTombstones" -> Ingest.deleteTombstones,
+      "mergeOnRead" -> Ingest.mergeOnRead,
+      "schemaEvolution" -> Ingest.schemaEvolution)
+    SessionMemo.clear(spark)
+    for ((name, q) <- queries) {
+      val first = q(spark, sf0001)
+      val second = q(spark, sf0001)
+      assert(first.collect().toSeq == second.collect().toSeq, name)
+    }
+  }
+
+  test("scratch paths key on the full corpus path") {
+    assert(SnapshotFs.scratch("tt_base", "/a/sf0.01") !=
+      SnapshotFs.scratch("tt_base", "/b/sf0.01"))
+  }
+
+  test("SessionMemo.clear deletes every layout directory of the session") {
+    val queries = Seq[(SparkSession, String) => DataFrame](
+      Ingest.upsertRoundtrip, Ingest.deleteTombstones, Ingest.mergeOnRead,
+      Ingest.timeTravel, Ingest.vacuum, Ingest.schemaEvolution,
+      Ingest.partitionPrunedDrill, Ingest.bucketedColocatedJoin,
+      Ingest.compactionReport, ext.Similarity.ivfPrunedTopK)
+    queries.foreach(_(spark, sf0001).collect())
+    val root = new java.io.File(SnapshotFs.scratch("any", sf0001)).getParent
+    assert(SnapshotFs.hasChildren(root), "the layouts were written elsewhere")
+    SessionMemo.clear(spark)
+    val left = SnapshotFs.list(root).map(_.getPath.getName)
+    assert(left.isEmpty, s"left under the scratch root: $left")
   }
 
   test("retraction IVM drops emptied groups, keeps exact survivor sums") {
@@ -420,7 +459,6 @@ class IngestSpec extends SparkSpec {
   }
 
   test("vacuum: retained reads unchanged, expired commits physically gone") {
-    import graft.sources.SnapshotFs
     val rows = Ingest.vacuum(spark, sf0001).collect()
     // retained reads ≡ the unvacuumed store's v1/v2 (time travel over
     // the same deterministic batches)
@@ -434,10 +472,11 @@ class IngestSpec extends SparkSpec {
     assert(got == tt, "a vacuumed read at/after the horizon diverged")
     // physically reclaimed: the expired base + v1 commits are gone,
     // the checkpoint and the live v2 commit survive
-    assert(!SnapshotFs.hasSuccess(Ingest.ingestTmpPath("vac_base", sf0001)))
-    assert(!SnapshotFs.hasSuccess(Ingest.ingestTmpPath("vac_v1", sf0001)))
-    assert(SnapshotFs.hasSuccess(Ingest.ingestTmpPath("vac_ckpt", sf0001)))
-    assert(SnapshotFs.hasSuccess(Ingest.ingestTmpPath("vac_v2", sf0001)))
+    val vac = SnapshotFs.scratch("vac", sf0001)
+    assert(!SnapshotFs.hasSuccess(s"$vac/base"))
+    assert(!SnapshotFs.hasSuccess(s"$vac/v1"))
+    assert(SnapshotFs.hasSuccess(s"$vac/ckpt"))
+    assert(SnapshotFs.hasSuccess(s"$vac/v2"))
     assert(rows.forall(_.getLong(4) == 2L), "surviving-commit count must be 2")
     // idempotent: a second vacuum pass is a no-op on an already
     // vacuumed store

@@ -177,18 +177,19 @@ class SessionMemoSpec extends SparkSpec {
     assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
-  /** Source files under `src/main/scala/graft`, other than
-    * SessionMemo.scala, whose text contains `needle`. */
-  private def sourcesContaining(needle: String): List[java.nio.file.Path] = {
+  /** Source files under `src/main/scala/graft`, other than `owner`,
+    * whose text contains `needle`. */
+  private def sourcesContaining(needle: String,
+      owner: String = "SessionMemo.scala"): List[java.nio.file.Path] = {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     assert(java.nio.file.Files.isDirectory(root),
       s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
-    val owner = root.resolve("SessionMemo.scala")
+    val ownerPath = root.resolve(owner)
     val walk = java.nio.file.Files.walk(root)
     try {
       import scala.jdk.CollectionConverters._
       walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p != owner)
+        .filter(p => p.toString.endsWith(".scala") && p != ownerPath)
         .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
           .contains(needle))
         .toList
@@ -207,5 +208,12 @@ class SessionMemoSpec extends SparkSpec {
     // run on SessionMemo.iterate, one-off frames use checkpointTracked
     val offenders = sourcesContaining("localCheckpoint(")
     assert(offenders.isEmpty, s"localCheckpoint called outside SessionMemo: $offenders")
+  }
+
+  test("only Sessions sets session conf under src/main/scala/graft") {
+    // a per-call conf.set mutates conf every concurrent client of the
+    // session shares; engine-wide settings belong in Sessions.builder
+    val offenders = sourcesContaining("conf.set(", owner = "Sessions.scala")
+    assert(offenders.isEmpty, s"conf.set called outside Sessions: $offenders")
   }
 }
