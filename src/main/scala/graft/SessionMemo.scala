@@ -220,17 +220,26 @@ object SessionMemo {
     * entry mid-build is released once its build finishes), then run
     * and drop every [[onClear]] hook registered against `s`. After
     * this the session holds no graft-cached frames, models,
-    * checkpoints or layout files. */
+    * checkpoints or layout files. A release or hook that throws does
+    * not stop the others: every one runs, then the first failure is
+    * rethrown with the later ones added as suppressed. */
   def clear(s: SparkSession): Unit = {
+    var first: Throwable = null
+    def attempt(f: => Unit): Unit =
+      try f catch {
+        case e: Throwable =>
+          if (first == null) first = e
+          else if (e ne first) first.addSuppressed(e)
+      }
     entries.keys.filter(_._1 eq s).foreach { k =>
       entries.remove(k).foreach(e => e.synchronized {
         e.dead = true
-        if (e.built) try e.release(e.value) catch { case _: Throwable => () }
+        if (e.built) attempt(e.release(e.value))
       })
     }
     hooks.forEach { h =>
-      if ((h._1 eq s) && hooks.remove(h))
-        try h._2() catch { case _: Throwable => () }
+      if ((h._1 eq s) && hooks.remove(h)) attempt(h._2())
     }
+    if (first != null) throw first
   }
 }

@@ -10,15 +10,44 @@ import org.apache.spark.sql.types
   * footers but the reference's data model is DATE
   * (`/root/reference/etl.py:58-63`), so calendar queries cast through
   * [[Tables.monthlySeries]].
+  *
+  * Corpus files are immutable for a session's lifetime: each table's
+  * footer schema is resolved once per (session, path) — footer
+  * inference is a Spark job of its own — and every later read declares
+  * it, so building a query starts no job. [[SessionMemo.clear]]
+  * forgets the resolved schemas (and the [[rowCount]]s), so a corpus
+  * rewritten in place is read afresh only after a clear.
   */
 object Tables {
-  def region(s: SparkSession, dir: String): DataFrame    = s.read.parquet(s"$dir/region.parquet")
-  def nation(s: SparkSession, dir: String): DataFrame    = s.read.parquet(s"$dir/nation.parquet")
-  def customer(s: SparkSession, dir: String): DataFrame  = s.read.parquet(s"$dir/customer.parquet")
-  def supplier(s: SparkSession, dir: String): DataFrame  = s.read.parquet(s"$dir/supplier.parquet")
-  def part(s: SparkSession, dir: String): DataFrame      = s.read.parquet(s"$dir/part.parquet")
-  def orders(s: SparkSession, dir: String): DataFrame    = s.read.parquet(s"$dir/orders.parquet")
-  def lineitem(s: SparkSession, dir: String): DataFrame  = s.read.parquet(s"$dir/lineitem.parquet")
+  def region(s: SparkSession, dir: String): DataFrame    = read(s, dir, "region")
+  def nation(s: SparkSession, dir: String): DataFrame    = read(s, dir, "nation")
+  def customer(s: SparkSession, dir: String): DataFrame  = read(s, dir, "customer")
+  def supplier(s: SparkSession, dir: String): DataFrame  = read(s, dir, "supplier")
+  def part(s: SparkSession, dir: String): DataFrame      = read(s, dir, "part")
+  def orders(s: SparkSession, dir: String): DataFrame    = read(s, dir, "orders")
+  def lineitem(s: SparkSession, dir: String): DataFrame  = read(s, dir, "lineitem")
+  def documents(s: SparkSession, dir: String): DataFrame = read(s, dir, "documents")
+  def embeddings(s: SparkSession, dir: String): DataFrame = read(s, dir, "embeddings")
+
+  /** The footer schema of `table` under `dir`, inferred once per
+    * (session, path). */
+  private[graft] def schema(s: SparkSession, dir: String, table: String): types.StructType = {
+    val path = s"$dir/$table.parquet"
+    SessionMemo.once(s, s"schema:$path")(s.read.parquet(path).schema)(_ => ())
+  }
+
+  /** A fresh scan of `table` under its memoized schema. Only the schema
+    * is shared: each call plans its own relation with its own
+    * expression ids, so a query that reads one table twice (two
+    * `nation` copies) never self-joins one relation. */
+  private def read(s: SparkSession, dir: String, table: String): DataFrame =
+    s.read.schema(schema(s, dir, table)).parquet(s"$dir/$table.parquet")
+
+  /** `table`'s row count, counted once per (session, dir) — for the
+    * sizing and gating decisions made while a query is built. */
+  private[graft] def rowCount(s: SparkSession, dir: String, table: String): Long =
+    SessionMemo.once(s, s"rows:$dir/$table.parquet")(read(s, dir, table).count())(_ => ())
+
   /** The events corpus has shipped `ts` under two physical parquet
     * types across driver regenerations: TIMESTAMP(NANOS) — which
     * Spark 4 rejects outright unless the legacy conf lands it as raw
@@ -46,9 +75,7 @@ object Tables {
   /** Needs `spark.sql.legacy.parquet.nanosAsLong`, which
     * [[graft.Sessions.builder]] sets. */
   def events(s: SparkSession, dir: String): DataFrame =
-    normalizeTs(s.read.parquet(s"$dir/events.parquet"))
-  def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/documents.parquet")
-  def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/embeddings.parquet")
+    normalizeTs(read(s, dir, "events"))
 
   /** The payroll-shaped monthly time series: one row per month, an
     * integer "level" value — the same (date PK, int value) model as
@@ -74,27 +101,14 @@ object Tables {
     * `df.cache()` on the shared aggregate, memoized per (session, sf
     * dir) via [[SessionMemo]] — every payroll query reuses one
     * in-memory copy (≤ a few hundred rows) instead of re-scanning and
-    * re-aggregating lineitem. */
+    * re-aggregating lineitem. The copy is ONE partition: the series
+    * has a row per month at any scale, and a single-partition scan
+    * satisfies every distribution the payroll windows, sorts,
+    * aggregates and self-joins over it require, so their plans add
+    * no exchange (and AQE no stage boundary) on top of it. */
   def monthlySeriesCached(s: SparkSession, dir: String): DataFrame =
-    SessionMemo.cached(s, dir, "monthly_series")(monthlySeries(s, dir))
+    SessionMemo.cached(s, dir, "monthly_series")(monthlySeries(s, dir).coalesce(1))
 
-  /** Decouple CPU-bound map-stage parallelism from scan split
-    * granularity. A parquet corpus written as a few large row groups
-    * scans as that many tasks no matter how many slots the cluster
-    * has (Spark can split a file, but a split with no row-group start
-    * reads zero rows) — so a tokenize/hash/decode stage fed straight
-    * off such a scan runs on a handful of cores while the rest idle.
-    * This helper round-robins the input across the session's
-    * parallelism ONLY when the scan genuinely underfills it (fewer
-    * partitions than half the slots); on a realistically-laid-out
-    * corpus (row groups ≫ slots — any 100 TB table) it is a no-op and
-    * costs nothing. Callers apply it at the head of per-row-EXPENSIVE
-    * pipelines only — scan-light relational queries keep the bare
-    * scan so pushdown/pruning economics stay untouched — and only
-    * where downstream results are partition-order independent (exact
-    * DECIMAL sums, set/min/max sketches, per-row maps), which is the
-    * repo's determinism discipline everywhere.
-    */
   /** Gate-scale certification sample — the device that keeps exact-
     * certification faces (`pipeline_profile`'s exact ndv, the exact
     * WAU, exact quantiles) from dominating wall time at scale factors
@@ -116,6 +130,23 @@ object Tables {
           concat(lit("cert:"), key.cast("string"))), lit(1000000L)) < keepPerM)
     }
 
+  /** Decouple CPU-bound map-stage parallelism from scan split
+    * granularity. A parquet corpus written as a few large row groups
+    * scans as that many tasks no matter how many slots the cluster
+    * has (Spark can split a file, but a split with no row-group start
+    * reads zero rows) — so a tokenize/hash/decode stage fed straight
+    * off such a scan runs on a handful of cores while the rest idle.
+    * This helper round-robins the input across the session's
+    * parallelism ONLY when the scan genuinely underfills it (fewer
+    * partitions than half the slots); on a realistically-laid-out
+    * corpus (row groups ≫ slots — any 100 TB table) it is a no-op and
+    * costs nothing. Callers apply it at the head of per-row-EXPENSIVE
+    * pipelines only — scan-light relational queries keep the bare
+    * scan so pushdown/pruning economics stay untouched — and only
+    * where downstream results are partition-order independent (exact
+    * DECIMAL sums, set/min/max sketches, per-row maps), which is the
+    * repo's determinism discipline everywhere.
+    */
   def fanOut(s: SparkSession, df: DataFrame): DataFrame = {
     val slots = s.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 < slots) df.repartition(slots) else df

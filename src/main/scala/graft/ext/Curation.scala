@@ -734,7 +734,7 @@ object Curation {
       .select(explode(array(kvs: _*)).as("kv"))
       .select(col("kv.col_name").as("col_name"), col("kv.v").as("v"))
     val li = Tables.fanOut(s, Tables.lineitem(s, dir))
-    val population = Tables.lineitem(s, dir).count()
+    val population = Tables.rowCount(s, dir, "lineitem")
     if (population <= gateRows)
       unpivot(li)
         .groupBy("col_name")

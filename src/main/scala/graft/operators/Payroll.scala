@@ -147,7 +147,7 @@ object Payroll {
       .rollup(yearOf(col("month")).as("year"),
         quarterOf(col("month")).as("quarter"))
       .agg(sum("emp").as("total_emp"))
-      .orderBy(col("year").asc_nulls_first, col("quarter").asc_nulls_first)
+      .transform(byYearQuarter)
 
   /** CUBE over (year, quarter) — completes the grouping-set family
     * next to [[rollupHierarchy]]: all four aggregation levels
@@ -159,7 +159,7 @@ object Payroll {
       .cube(yearOf(col("month")).as("year"),
         quarterOf(col("month")).as("quarter"))
       .agg(sum("emp").as("total_emp"))
-      .orderBy(col("year").asc_nulls_first, col("quarter").asc_nulls_first)
+      .transform(byYearQuarter)
 
   /** Explicit GROUPING SETS — the general member of the grouping-set
     * family next to [[rollupHierarchy]] (ROLLUP) and
@@ -180,8 +180,16 @@ object Payroll {
           .cast("long").as("gid"),
         sum("emp").as("total_emp"))
       .select("year", "quarter", "gid", "total_emp")
-      .orderBy(col("year").asc_nulls_first, col("quarter").asc_nulls_first)
+      .transform(byYearQuarter)
   }
+
+  /** A grouping-set result ordered by (year, quarter), nulls first, on
+    * one partition. `Expand` reports an unknown partitioning, so the
+    * aggregate above it keeps its one exchange; its output is a few
+    * rows per year, and sorting that on one partition spares the range
+    * exchange (and its sampling job) a global sort would add. */
+  private def byYearQuarter(df: DataFrame): DataFrame =
+    df.coalesce(1).orderBy(col("year").asc_nulls_first, col("quarter").asc_nulls_first)
 
   /** Drill Q1 phase 1 (A4+W5+T1, `dashboard_nfp.py:338-342`): the
     * year with the highest absolute annual gain (argmax, deterministic

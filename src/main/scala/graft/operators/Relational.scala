@@ -774,14 +774,17 @@ object Relational {
     // most one (order, n) row per order — far below the full-incidence
     // shuffle the join itself is about to pay), computed over RAW
     // lines (≥ the distinct incidence's baskets), so it only ever
-    // overestimates — which only adds partitions.
-    val liRows = Tables.lineitem(s, dir).count()
-    val pairRow = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("o")).groupBy("o")
-      .agg(count(lit(1)).as("n"))
-      .agg(sum((col("n") * (col("n") - 1) / 2).cast("long")).as("pairs"))
-      .head()
-    val pairEst = if (pairRow.isNullAt(0)) 1L else math.max(pairRow.getLong(0), 1L)
+    // overestimates — which only adds partitions. Both counts are
+    // memoized per (session, dir), so only the first build pays them.
+    val liRows = Tables.rowCount(s, dir, "lineitem")
+    val pairEst = graft.SessionMemo.once(s, s"basket_pairs:$dir") {
+      val pairRow = Tables.lineitem(s, dir)
+        .select(col("l_orderkey").as("o")).groupBy("o")
+        .agg(count(lit(1)).as("n"))
+        .agg(sum((col("n") * (col("n") - 1) / 2).cast("long")).as("pairs"))
+        .head()
+      if (pairRow.isNullAt(0)) 1L else math.max(pairRow.getLong(0), 1L)
+    }(_ => ())
     val par = s.sparkContext.defaultParallelism
     val nJoin = graft.ext.Dedup.arrayJoinPartitions(liRows, 0L, par)
     val nPair = graft.ext.Dedup.arrayJoinPartitions(pairEst, 0L, par)

@@ -439,7 +439,7 @@ object Ingest {
     * through the Hadoop FileSystem API ([[SnapshotFs]]) —
     * object-store-safe. */
   def vacuum(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val root = SnapshotFs.scratch("vac", dir)
+    val root = SnapshotFs.scratch(s, "vac", dir)
     val (basePath, v1Path, v2Path, ckptPath) =
       (s"$root/base", s"$root/v1", s"$root/v2", s"$root/ckpt")
     SnapshotFs.layout(s, "vac", dir) { _ =>
@@ -758,17 +758,22 @@ object Ingest {
     * once at write time, never again per query; bucket count scales
     * with the cluster (8 here only because the bench corpus is
     * small). The tables are external, their files under the
-    * process's scratch root ([[SnapshotFs.scratch]]); the write runs
+    * session's scratch directory ([[SnapshotFs.scratch]]); the write runs
     * once per (session, sf dir) and `SessionMemo.clear` drops both
     * tables and deletes their files. */
   def bucketedColocatedJoin(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import graft.functions.Num._
     val Seq(oPath, cPath) =
-      Seq("graft_b_orders", "graft_b_customer").map(SnapshotFs.scratch(_, dir))
-    // each table is named after its scratch directory, so the name
-    // keys on the full corpus path too
-    def table(path: String): String = new java.io.File(path).getName
+      Seq("graft_b_orders", "graft_b_customer").map(SnapshotFs.scratch(s, _, dir))
+    // each table is named after its scratch directory and the session
+    // directory above it: the catalog is shared by every session of
+    // the process, so the name keys on the session and on the full
+    // corpus path
+    def table(path: String): String = {
+      val f = new java.io.File(path)
+      s"${f.getName}_${f.getParentFile.getName}"
+    }
     def bucketed(df: DataFrame, key: String, path: String): Unit =
       df.repartition(BucketN, col(key))
         .write.mode(SaveMode.Overwrite).option("path", path)
@@ -1006,7 +1011,7 @@ object Ingest {
   def compactionReport(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // a fresh directory per call: compaction rewrites it in place
-    val root = SnapshotFs.scratch(s"compact_${java.util.UUID.randomUUID()}", dir)
+    val root = SnapshotFs.scratch(s, s"compact_${java.util.UUID.randomUUID()}", dir)
     val base = s"$root/snap"
     val series = graft.Tables.monthlySeriesCached(s, dir)
       .withColumn("__part", year(col("month")))

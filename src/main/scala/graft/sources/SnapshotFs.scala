@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{GraftShims, SparkSession}
 
 /** Hadoop-`FileSystem` face of the lakehouse maintenance machinery
   * (staged-swap promotion, crash recovery, compaction, one-time
@@ -27,8 +28,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 private[graft] object SnapshotFs {
 
   private def conf: Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+    SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
@@ -72,8 +73,10 @@ private[graft] object SnapshotFs {
   // ── Scratch space ──────────────────────────────────────────────
   // The files graft writes for its own use (layout copies, commit
   // histories, compaction fixtures) live under ONE root per process,
-  // `<java.io.tmpdir>/graft_<pid>`: the pid isolates concurrent
-  // bench/verify JVMs, a shutdown hook deletes the root on exit, and
+  // `<java.io.tmpdir>/graft_<pid>`, a session's own files under its
+  // `session_<id>` directory there: the pid isolates concurrent
+  // bench/verify JVMs, the session id concurrent sessions of one
+  // process, a shutdown hook deletes the root on exit, and
   // the first allocation removes the roots of dead processes (a
   // crashed JVM cannot delete its own). Pid liveness is only
   // meaningful on this machine's local disk; pointing scratch at a
@@ -103,25 +106,35 @@ private[graft] object SnapshotFs {
       if (!alive) deleteTree(st.getPath.toString)
     }
 
-  /** This process's scratch path for (`kind`, corpus `dir`). The name
-    * keys on the FULL `dir` path, as [[graft.SessionMemo]] does, so two
-    * corpora sharing a last path component never share files. A
-    * writer owns its path through [[layout]], or deletes a per-call
-    * path itself. */
-  private[graft] def scratch(kind: String, dir: String): String = {
+  /** This process's scratch path for (`kind`, corpus `dir`), for
+    * files no session owns: the caller deletes it, or leaves it to the
+    * root's shutdown hook. The name keys on the FULL `dir` path, as
+    * [[graft.SessionMemo]] does, so two corpora sharing a last path
+    * component never share files. */
+  private[graft] def scratch(kind: String, dir: String): String =
+    s"$root/${name(kind, dir)}"
+
+  /** Session `s`'s scratch path for (`kind`, `dir`), under the
+    * session's own directory: a session's [[layout]]s and their
+    * releases never touch another session's files, also when two
+    * sessions of one process build the same layout. */
+  private[graft] def scratch(s: SparkSession, kind: String, dir: String): String =
+    s"$root/session_${GraftShims.sessionId(s).replace("-", "")}/${name(kind, dir)}"
+
+  private def name(kind: String, dir: String): String = {
     val leaf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    f"$root/${kind}_${leaf}_${dir.hashCode}%08x"
+    f"${kind}_${leaf}_${dir.hashCode}%08x"
   }
 
-  /** The [[scratch]] path of a (`kind`, `dir`) layout, written by
-    * `write` once per (session, sf dir): the `<kind>_layout:$dir`
+  /** The session [[scratch]] path of a (`kind`, `dir`) layout, written
+    * by `write` once per (session, sf dir): the `<kind>_layout:$dir`
     * `SessionMemo.once` entry, whose release deletes the files. Layout
     * data is a pure function of `dir`, so a later call reads the first
     * call's files instead of overwriting them under a reader whose
     * file index already listed them. */
-  def layout(s: org.apache.spark.sql.SparkSession, kind: String, dir: String)
+  def layout(s: SparkSession, kind: String, dir: String)
       (write: String => Unit): String = {
-    val path = scratch(kind, dir)
+    val path = scratch(s, kind, dir)
     graft.SessionMemo.once(s, s"${kind}_layout:$dir")(write(path))(_ => deleteTree(path))
     path
   }

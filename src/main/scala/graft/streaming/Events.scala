@@ -16,12 +16,12 @@ import graft.functions.Num._
 object Events {
 
   /** File-source schema for the events stream: a stream can't infer
-    * its schema, so sniff the batch footer once (metadata-only read)
-    * and declare `ts` as whatever physical type the corpus actually
-    * has — raw int64 nanos or a typed timestamp (see
-    * [[graft.Tables.normalizeTs]] for why both exist). */
+    * its schema, so take the batch footer's (resolved once per session
+    * by [[graft.Tables.schema]]) and declare `ts` as whatever physical
+    * type the corpus actually has — raw int64 nanos or a typed
+    * timestamp (see [[graft.Tables.normalizeTs]] for why both exist). */
   def rawSchema(s: SparkSession, dir: String): StructType = {
-    val tsType = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val tsType = Tables.schema(s, dir, "events")("ts").dataType
     StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -217,7 +217,7 @@ object Events {
   private[graft] def valueQuantilesGated(s: SparkSession, dir: String,
       gateRows: Long): DataFrame = {
     val ev = Tables.events(s, dir)
-    val population = ev.count()
+    val population = Tables.rowCount(s, dir, "events")
     // cert_sampled states WHICH REGIME produced the row (r12, advisor
     // ask): above the gate the quantiles are sample-based under the
     // same column names, and a consumer must not need to know the
@@ -752,7 +752,7 @@ object Events {
     // for kept users), so the certification compares like with like
     // at gate-pinned cost; cert_sampled states the regime in-row.
     val evAll = Tables.events(s, dir)
-    val population = evAll.count()
+    val population = Tables.rowCount(s, dir, "events")
     val ev = Tables.certSample(evAll, col("user_id"), population, gateRows)
       .filter(col("event_type").isin("view", "purchase"))
       .select(to_date(col("ts")).as("day"), col("event_type"), col("user_id"))
@@ -841,7 +841,7 @@ object Events {
   private[graft] def dauWauGated(s: SparkSession, dir: String,
       gateRows: Long): DataFrame = {
     val ev = Tables.events(s, dir)
-    val population = ev.count()
+    val population = Tables.rowCount(s, dir, "events")
     val ud = Tables.certSample(ev, col("user_id"), population, gateRows)
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .distinct()
@@ -883,7 +883,7 @@ object Events {
   private[graft] def wauSketchGated(s: SparkSession, dir: String,
       gateRows: Long): DataFrame = {
     val ev = Tables.events(s, dir)
-    val population = ev.count()
+    val population = Tables.rowCount(s, dir, "events")
     val ud = Tables.certSample(ev, col("user_id"), population, gateRows)
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .distinct()

@@ -26,4 +26,8 @@ object GraftShims {
   def dataFrame(s: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
+
+  /** The session's unique id — `sessionUUID` is private[sql]. */
+  def sessionId(s: SparkSession): String =
+    s.asInstanceOf[classic.SparkSession].sessionUUID
 }

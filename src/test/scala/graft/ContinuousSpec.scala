@@ -91,7 +91,7 @@ class ContinuousSpec extends SparkSpec {
 
   test("scd2 sink: 100+ batches, history ∝ versions, touched-partition writes, flat wall") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("cont_scd2").toString +
+    val path = tempDir("cont_scd2") +
       "/hist"
     val nBatches = 100
     val keysPerBatch = 5

@@ -124,7 +124,7 @@ class DedupSpec extends SparkSpec {
     val base = docs.filter(col("doc_id") % 7 =!= 0)
     val delta = docs.filter(col("doc_id") % 7 === 0)
     // stage the delta as TWO files so the stream runs two micro-batches
-    val tmp = java.nio.file.Files.createTempDirectory("cont_dedup").toString
+    val tmp = tempDir("cont_dedup")
     delta.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$tmp/d0")
     delta.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.parquet(s"$tmp/d1")
     var index = ext.Dedup.signaturesOf(base).cache()
@@ -164,7 +164,7 @@ class DedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     val base = docs.filter(col("doc_id") % 7 =!= 0)
     val delta = docs.filter(col("doc_id") % 7 === 0)
-    val tmp = java.nio.file.Files.createTempDirectory("cont_cluster").toString
+    val tmp = tempDir("cont_cluster")
     delta.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$tmp/d0")
     delta.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.parquet(s"$tmp/d1")
     def bucketsOf(d: org.apache.spark.sql.DataFrame) =

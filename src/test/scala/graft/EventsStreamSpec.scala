@@ -64,7 +64,7 @@ class EventsStreamSpec extends SparkSpec {
     // stage the corpus plus two far-future sentinel events (one per
     // join side, impossible user ids) so BOTH watermarks advance past
     // every real purchase and the trailing outer rows flush
-    val tmp = java.nio.file.Files.createTempDirectory("pv_outer").toString
+    val tmp = tempDir("pv_outer")
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     raw.write.parquet(s"$tmp/events.parquet")
     // sentinel ts = max(ts) + 10 days, derived from the corpus rows
@@ -114,7 +114,7 @@ class EventsStreamSpec extends SparkSpec {
 
     // same sentinel staging as the outer-join test: both watermarks
     // must advance past every real purchase so trailing rows flush
-    val tmp = java.nio.file.Files.createTempDirectory("asof_stream").toString
+    val tmp = tempDir("asof_stream")
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     raw.write.parquet(s"$tmp/events.parquet")
     val tsPlus10d = raw.schema("ts").dataType match {
@@ -365,7 +365,7 @@ class EventsStreamSpec extends SparkSpec {
     // stage the corpus twice — an honest at-least-once redelivery:
     // the stream glob picks up both files, the batch twin models the
     // same duplication as corpus ∪ corpus
-    val tmp = java.nio.file.Files.createTempDirectory("replay_dedup").toString
+    val tmp = tempDir("replay_dedup")
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     raw.write.parquet(s"$tmp/events.parquet")
     raw.write.parquet(s"$tmp/events_replay.parquet")
@@ -407,7 +407,7 @@ class EventsStreamSpec extends SparkSpec {
     // corpus + one far-future sentinel event (impossible user id) so
     // the watermark passes every real session's gap-extended end and
     // append mode flushes them all
-    val tmp = java.nio.file.Files.createTempDirectory("sess_stream").toString
+    val tmp = tempDir("sess_stream")
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     raw.write.parquet(s"$tmp/events.parquet")
     val tsPlus10d = raw.schema("ts").dataType match {

@@ -143,7 +143,7 @@ class IngestSpec extends SparkSpec {
 
   test("streaming foreachBatch upsert sink converges to the batch merge") {
     import graft.streaming.Events
-    val path = Files.createTempDirectory("graft_upsert_sink").toString + "/snap"
+    val path = tempDir("graft_upsert_sink") + "/snap"
     // stream the events files; last-write-wins per user keyed by the
     // (unique) event_id as the version — the final snapshot must hold
     // each user's max-event_id row
@@ -174,7 +174,7 @@ class IngestSpec extends SparkSpec {
       .map(f => (f.getName, f.length, f.lastModified)).toSeq.sorted
 
   test("merge rewrites only the year partitions the batch touches") {
-    val snap = Files.createTempDirectory("graft_inc").toString + "/snap"
+    val snap = tempDir("graft_inc") + "/snap"
     val byYear = (c: org.apache.spark.sql.Column) => year(c)
     Ingest.mergeBatch(series(("2020-01-01", 1L, 1L), ("2021-01-01", 2L, 1L)),
       snap, "month", "ingest_v", byYear)
@@ -194,7 +194,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("compaction merges small files per partition and leaves right-sized ones alone") {
-    val snap = Files.createTempDirectory("graft_cmp").toString + "/snap"
+    val snap = tempDir("graft_cmp") + "/snap"
     val byYear = (c: org.apache.spark.sql.Column) => year(c)
     // 12 micro-rows across two years, written with forced parallelism
     // so each partition holds many small files
@@ -225,7 +225,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("compaction leaves right-sized partitions byte-identical while rewriting fragmented ones") {
-    val snap = Files.createTempDirectory("graft_cmp_mix").toString + "/snap"
+    val snap = tempDir("graft_cmp_mix") + "/snap"
     // 2020 fragmented (6 files via forced parallelism); 2021 already
     // right-sized (a single file from a coalesced append)
     series((1 to 6).map(m => (f"2020-$m%02d-01", m.toLong, 1L)): _*)
@@ -249,7 +249,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("snapshot swap survives a crash between the two renames") {
-    val snap = Files.createTempDirectory("graft_crash").toString + "/snap"
+    val snap = tempDir("graft_crash") + "/snap"
     val byYear = (c: org.apache.spark.sql.Column) => year(c)
     Ingest.mergeBatch(series(("2020-01-01", 1L, 1L), ("2021-01-01", 2L, 1L)),
       snap, "month", "ingest_v", byYear)
@@ -271,7 +271,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("an incomplete stage is discarded and a displaced partition restored") {
-    val snap = Files.createTempDirectory("graft_rollback").toString + "/snap"
+    val snap = tempDir("graft_rollback") + "/snap"
     val byYear = (c: org.apache.spark.sql.Column) => year(c)
     Ingest.mergeBatch(series(("2020-01-01", 1L, 1L), ("2021-01-01", 2L, 1L)),
       snap, "month", "ingest_v", byYear)
@@ -292,7 +292,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("recovery is idempotent and the sink keeps merging afterwards") {
-    val snap = Files.createTempDirectory("graft_idem").toString + "/snap"
+    val snap = tempDir("graft_idem") + "/snap"
     val byYear = (c: org.apache.spark.sql.Column) => year(c)
     Ingest.mergeBatch(series(("2020-01-01", 1L, 1L), ("2021-01-01", 2L, 1L)),
       snap, "month", "ingest_v", byYear)
@@ -353,7 +353,7 @@ class IngestSpec extends SparkSpec {
     val mine = spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_b_"))
     assert(mine.length == 2, s"expected the two layout tables, got ${mine.toSeq}")
-    val dirs = Seq("graft_b_orders", "graft_b_customer").map(SnapshotFs.scratch(_, sf0001))
+    val dirs = Seq("graft_b_orders", "graft_b_customer").map(SnapshotFs.scratch(spark, _, sf0001))
     assert(dirs.forall(SnapshotFs.hasChildren), s"layout tables hold no files: $dirs")
     // a scratch root left by a dead process is swept; the sweep runs
     // once per process (first scratch allocation), so call it directly
@@ -392,6 +392,28 @@ class IngestSpec extends SparkSpec {
   test("scratch paths key on the full corpus path") {
     assert(SnapshotFs.scratch("tt_base", "/a/sf0.01") !=
       SnapshotFs.scratch("tt_base", "/b/sf0.01"))
+    assert(SnapshotFs.scratch(spark, "tt_base", "/a/sf0.01") !=
+      SnapshotFs.scratch(spark, "tt_base", "/b/sf0.01"))
+  }
+
+  test("scratch layouts key on the session") {
+    assert(SnapshotFs.scratch(spark, "tt_base", sf0001) !=
+      SnapshotFs.scratch(spark.newSession(), "tt_base", sf0001))
+  }
+
+  test("two sessions' layouts neither overwrite nor clear each other's files") {
+    // one process-wide layout path per (kind, dir) let a second
+    // session's build overwrite the files the first session's frame
+    // had listed (FAILED_READ_FILE), and its clear delete them
+    SessionMemo.clear(spark)
+    val first = Ingest.upsertRoundtrip(spark, sf0001)
+    val other = spark.newSession()
+    val second = Ingest.upsertRoundtrip(other, sf0001)
+    val want = first.collect().toSeq
+    assert(second.collect().toSeq == want)
+    SessionMemo.clear(other)
+    assert(first.collect().toSeq == want, "another session's clear removed this session's layout")
+    SessionMemo.clear(spark)
   }
 
   test("SessionMemo.clear deletes every layout directory of the session") {
@@ -401,7 +423,7 @@ class IngestSpec extends SparkSpec {
       Ingest.partitionPrunedDrill, Ingest.bucketedColocatedJoin,
       Ingest.compactionReport, ext.Similarity.ivfPrunedTopK)
     queries.foreach(_(spark, sf0001).collect())
-    val root = new java.io.File(SnapshotFs.scratch("any", sf0001)).getParent
+    val root = new java.io.File(SnapshotFs.scratch(spark, "any", sf0001)).getParent
     assert(SnapshotFs.hasChildren(root), "the layouts were written elsewhere")
     SessionMemo.clear(spark)
     val left = SnapshotFs.list(root).map(_.getPath.getName)
@@ -472,7 +494,7 @@ class IngestSpec extends SparkSpec {
     assert(got == tt, "a vacuumed read at/after the horizon diverged")
     // physically reclaimed: the expired base + v1 commits are gone,
     // the checkpoint and the live v2 commit survive
-    val vac = SnapshotFs.scratch("vac", sf0001)
+    val vac = SnapshotFs.scratch(spark, "vac", sf0001)
     assert(!SnapshotFs.hasSuccess(s"$vac/base"))
     assert(!SnapshotFs.hasSuccess(s"$vac/v1"))
     assert(SnapshotFs.hasSuccess(s"$vac/ckpt"))
@@ -494,7 +516,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("time-series writer partitions by year and prunes on read") {
-    val dir = Files.createTempDirectory("graft_ts").toString
+    val dir = tempDir("graft_ts")
     Ingest.writeTimeSeries(Tables.monthlySeries(spark, sf0001), dir)
     val back = spark.read.parquet(dir)
     // partition pruning: a year filter must reach the scan as a
@@ -518,7 +540,7 @@ class IngestSpec extends SparkSpec {
     val tomb = base.filter(col("o_orderkey") % 7 === 0)
       .withColumn("o_orderdate", date_add(col("o_orderdate"), 2))
       .withColumn("deleted", lit(true))
-    val root = Files.createTempDirectory("graft_mor_spec").toFile
+    val root = new java.io.File(tempDir("graft_mor_spec"))
     try {
       val basePath = s"${root.getPath}/base"
       val deltaPath = s"${root.getPath}/delta"
@@ -647,7 +669,7 @@ class IngestSpec extends SparkSpec {
 
   test("streaming SCD2 sink converges to the one-shot history build") {
     import graft.streaming.Events
-    val path = Files.createTempDirectory("graft_scd2_sink").toString + "/hist"
+    val path = tempDir("graft_scd2_sink") + "/hist"
     // each event is a version of its user's dimension row: valid_from
     // = event_id (unique, so the chain order is deterministic)
     val stream = spark.readStream.schema(Events.rawSchema(spark, sf0001))

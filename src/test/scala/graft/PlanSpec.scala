@@ -332,6 +332,26 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(c.count() > 0)
   }
 
+  test("payroll queries over the one-partition series plan no shuffle exchange") {
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val payroll = SparkEntry.queries.toSeq.filter(_._1.startsWith("payroll_")).sortBy(_._1)
+    assert(payroll.nonEmpty)
+    val shuffled = payroll.flatMap { case (name, fn) =>
+      val df = fn(spark, sf0001)
+      df.collect() // let AQE finalize the plan
+      val ex = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e }
+      // the one exchange a grouping-set aggregate needs: Expand
+      // reports an unknown partitioning whatever its input's
+      val expands = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: ExpandExec => e }
+      val allowed = if (expands.isEmpty) 0 else 1
+      if (ex.size > allowed) Seq(s"$name: ${ex.size}") else Nil
+    }
+    assert(shuffled.isEmpty, s"payroll plans with a shuffle exchange: $shuffled")
+  }
+
   test("no declared query plans a global window over raw input (lint sweep)") {
     graft.plans.GlobalWindowLint.flagged.clear()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

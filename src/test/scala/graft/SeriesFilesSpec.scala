@@ -6,9 +6,9 @@ import graft.sources.{Ingest, SeriesFiles}
 class SeriesFilesSpec extends SparkSpec {
 
   private def write(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft_land")
-    Files.writeString(dir.resolve(name), content)
-    dir.toString
+    val dir = tempDir("graft_land")
+    Files.writeString(java.nio.file.Paths.get(dir, name), content)
+    dir
   }
 
   test("CSV landing: explicit schema, corrupt rows quarantined not fatal") {
@@ -30,7 +30,7 @@ class SeriesFilesSpec extends SparkSpec {
     // column — the additive-evolution case a long-lived landing zone
     // hits. mergeSchema unions the generations; old rows read the new
     // column as NULL; an explicit-schema read pins the contract.
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = tempDir("graft_evolve")
     val s = spark
     import s.implicits._
     Seq(("2020-01-01", 100L)).toDF("month", "emp")

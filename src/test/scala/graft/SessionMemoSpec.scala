@@ -76,6 +76,26 @@ class SessionMemoSpec extends SparkSpec {
     assert(!SessionMemo.isBuilt(spark, built))
   }
 
+  test("clear runs every release and hook, then rethrows the first failure") {
+    SessionMemo.clear(spark)
+    val keys = (1 to 3).map(i => uniqueKey(s"rel$i"))
+    val released = new AtomicInteger(0)
+    val hookRan = new AtomicInteger(0)
+    keys.foreach(k => SessionMemo.once(spark, k)(k) { v =>
+      released.incrementAndGet()
+      if (v == keys(1)) throw new IllegalStateException("release failed")
+    })
+    SessionMemo.onClear(spark)(throw new IllegalArgumentException("hook failed"))
+    SessionMemo.onClear(spark)(hookRan.incrementAndGet())
+    val e = intercept[RuntimeException](SessionMemo.clear(spark))
+    assert(released.get == 3, "a failing release must not skip the others")
+    assert(hookRan.get == 1, "a failing hook must not skip the others")
+    val all = (e +: e.getSuppressed.toSeq).map(_.getMessage).toSet
+    assert(all == Set("release failed", "hook failed"), s"surfaced: $all")
+    assert(keys.forall(!SessionMemo.isBuilt(spark, _)), "every entry is forgotten")
+    SessionMemo.clear(spark) // nothing left to fail
+  }
+
   test("onClear hooks run on clear of their own session, once") {
     val other = spark.newSession()
     val ran = new AtomicInteger(0)
@@ -177,11 +197,12 @@ class SessionMemoSpec extends SparkSpec {
     assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
-  /** Source files under `src/main/scala/graft`, other than `owner`,
-    * whose text contains `needle`. */
+  /** Source files under `tree`, other than `owner`, whose text
+    * contains `needle`. */
   private def sourcesContaining(needle: String,
-      owner: String = "SessionMemo.scala"): List[java.nio.file.Path] = {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
+      owner: String = "SessionMemo.scala",
+      tree: String = "src/main/scala/graft"): List[java.nio.file.Path] = {
+    val root = java.nio.file.Paths.get(tree)
     assert(java.nio.file.Files.isDirectory(root),
       s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
     val ownerPath = root.resolve(owner)
@@ -215,5 +236,13 @@ class SessionMemoSpec extends SparkSpec {
     // session shares; engine-wide settings belong in Sessions.builder
     val offenders = sourcesContaining("conf.set(", owner = "Sessions.scala")
     assert(offenders.isEmpty, s"conf.set called outside Sessions: $offenders")
+  }
+
+  test("no test allocates its own temp directory under src/test/scala/graft") {
+    // a test's files go under the process's scratch root (SparkSpec.tempDir),
+    // which its shutdown hook deletes; a bare temp directory outlives the run
+    val offenders = sourcesContaining("createTempDirectory",
+      owner = "SessionMemoSpec.scala", tree = "src/test/scala/graft")
+    assert(offenders.isEmpty, s"createTempDirectory called in: $offenders")
   }
 }

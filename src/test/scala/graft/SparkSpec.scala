@@ -7,6 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** A fresh directory under the process's scratch root, whose
+    * shutdown hook deletes it with the root. */
+  def tempDir(prefix: String): String = {
+    val d = graft.sources.SnapshotFs.scratch(s"${prefix}_${java.util.UUID.randomUUID()}", "test")
+    graft.sources.SnapshotFs.mkdirs(d)
+    d
+  }
 }
 
 object SparkSpec {

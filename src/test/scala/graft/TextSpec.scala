@@ -414,7 +414,7 @@ class TextSpec extends SparkSpec {
     // (aa)(aa) — run positions 0,1,2 with 0 and 2 applied — and
     // "aaa" must become (aa)(a); round 2 counts then see the merged
     // symbols, which only the canonical application produces
-    val tmp = java.nio.file.Files.createTempDirectory("bpe_runs").toString
+    val tmp = tempDir("bpe_runs")
     import spark.implicits._
     Seq(
       (1L, "aaaa aaaa aaaa xy", "en", "src0"),
