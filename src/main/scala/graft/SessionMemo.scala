@@ -218,11 +218,12 @@ object SessionMemo {
   /** Release and forget every [[once]] entry belonging to `s` (only
     * entries whose build ran — releasing never forces a build; an
     * entry mid-build is released once its build finishes), then run
-    * and drop every [[onClear]] hook registered against `s`. After
-    * this the session holds no graft-cached frames, models,
-    * checkpoints or layout files. A release or hook that throws does
-    * not stop the others: every one runs, then the first failure is
-    * rethrown with the later ones added as suppressed. */
+    * and drop every [[onClear]] hook registered against `s`, and last
+    * delete the session's scratch directory. After this the session
+    * holds no graft-cached frames, models, checkpoints or layout
+    * files. A release or hook that throws does not stop the others:
+    * every one runs, then the first failure is rethrown with the later
+    * ones added as suppressed. */
   def clear(s: SparkSession): Unit = {
     var first: Throwable = null
     def attempt(f: => Unit): Unit =
@@ -240,6 +241,7 @@ object SessionMemo {
     hooks.forEach { h =>
       if ((h._1 eq s) && hooks.remove(h)) attempt(h._2())
     }
+    attempt(graft.sources.SnapshotFs.dropSession(s))
     if (first != null) throw first
   }
 }

@@ -53,7 +53,7 @@ object Similarity {
         .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     }
 
-  private def vectors(s: SparkSession, dir: String): DataFrame =
+  private[graft] def vectors(s: SparkSession, dir: String): DataFrame =
     labeledVectors(s, dir).drop("label")
 
   /** Native codegen'd dot product (index-order fold; see
@@ -240,25 +240,6 @@ object Similarity {
   private def md5Hash60(c: Column): Column =
     graft.functions.Md5Hash60.md5Hash60(c)
 
-  /** Deterministic Lloyd k-means over the corpus vectors — the IVF
-    * build step. Init is an md5-seeded random partition
-    * (`md5(vec_id) mod k`); each of the [[KmIters]] rounds recomputes
-    * centroids as order-independent DECIMAL elementwise means and
-    * reassigns every vector to its max-cosine centroid (smallest cell
-    * id on ties). Everything is replayable: the init hash, the
-    * decimal means, and the index-order dot folds are computed
-    * identically by DuckDB, so the oracle unrolls the same
-    * iterations and lands on the same model bit-for-bit.
-    *
-    * Scale shape: the per-round driver sync is k × dim doubles (the
-    * classic k-means-on-Spark shape — MLlib does the same); the mean
-    * is one map-side-combined aggregation over (corpus × dim) rows;
-    * the reassignment ships centroids as LITERALS into a map-side
-    * argmax projection — no join, no shuffle. A fixed iteration
-    * budget, not convergence detection: deterministic cost, and Lloyd
-    * improves monotonically so a bounded build is the production
-    * norm. Returns (final assignment (vec_id, cell), final centroids
-    * (cell, cv, cnrm)). */
   /** (session, dir)-memoized model — an IVF index is built once and
     * queried many times; re-invoking the query must not re-run Lloyd.
     * The assignment frame is cached, the centroid literals are tiny.
@@ -277,7 +258,7 @@ object Similarity {
   private[graft] def kmeansModelK(s: SparkSession, dir: String, k: Int,
       iters: Int = KmIters): (DataFrame, Seq[(Int, Seq[Double], Double)]) =
     graft.SessionMemo.once(s, kmeansKey(dir, k, iters)) {
-      val (assign, cents) = buildKmeans(s, dir, k, iters)
+      val (assign, cents) = buildKmeansOf(vectors(s, dir), k, iters)
       (assign.cache(), cents)
     }(_._1.unpersist())
 
@@ -288,13 +269,27 @@ object Similarity {
   private[graft] def kmeansMemoized(s: SparkSession, dir: String): Boolean =
     graft.SessionMemo.isBuilt(s, kmeansKey(dir, KCells, KmIters))
 
-  private def buildKmeans(s: SparkSession, dir: String, k: Int, iters: Int)
-      : (DataFrame, Seq[(Int, Seq[Double], Double)]) =
-    buildKmeansOf(vectors(s, dir), k, iters)
-
-  /** The Lloyd build over an arbitrary (vec_id, v, nrm) frame — the
-    * (session, dir) form above trains on the whole corpus; the
-    * index-upsert face trains on the standing BASE only. */
+  /** Deterministic Lloyd k-means over the corpus vectors — the IVF
+    * build step. Init is an md5-seeded random partition
+    * (`md5(vec_id) mod k`); each of the [[KmIters]] rounds recomputes
+    * centroids as order-independent DECIMAL elementwise means and
+    * reassigns every vector to its max-cosine centroid (smallest cell
+    * id on ties). Everything is replayable: the init hash, the
+    * decimal means, and the index-order dot folds are computed
+    * identically by DuckDB, so the oracle unrolls the same
+    * iterations and lands on the same model bit-for-bit.
+    *
+    * Scale shape: the per-round driver sync is k × dim doubles (the
+    * classic k-means-on-Spark shape — MLlib does the same); the mean
+    * is one map-side-combined aggregation over (corpus × dim) rows;
+    * at model-sized k the reassignment ships centroids as LITERALS
+    * into a map-side argmax projection — no join, no shuffle
+    * ([[assignToNearestAny]]). A fixed iteration budget, not
+    * convergence detection: deterministic cost, and Lloyd improves
+    * monotonically so a bounded build is the production norm. Returns
+    * (final assignment (vec_id, cell), final centroids (cell, cv,
+    * cnrm)). The (session, dir) form above trains on the whole corpus;
+    * the index-upsert face trains on the standing BASE only. */
   private[graft] def buildKmeansOf(vs: DataFrame, k: Int, iters: Int)
       : (DataFrame, Seq[(Int, Seq[Double], Double)]) = {
     // the assignment frames CARRY (v, nrm): every per-round frame is
@@ -305,46 +300,66 @@ object Similarity {
     var assign = vs.select(col("vec_id"), col("v"), col("nrm"),
       pmod(md5Hash60(col("vec_id").cast("string")), lit(k))
         .cast("int").as("cell"))
-    // Centroid step: posexplode + groupBy(cell, pos) + davg — kept
-    // DELIBERATELY after an r14 experiment went the other way. The
-    // element-wise alternative (64 per-element decimal sums keyed by
-    // cell, no explode) looked like it should win — 64× fewer row
-    // materializations and aggregation-hash probes — but measured
-    // ~2× SLOWER at the 100× leg (ivf kmeans builds 7.1 → 16.2 s,
-    // 7.2 → 11.5 s at sf10p) and ~+0.2 s/round at bench scale: a
-    // 64-update aggregate blows the whole-stage-codegen method
-    // budget, so the update path runs de-optimized, where the
-    // exploded form is one tiny tight-codegen aggregate fed by a
-    // generate loop. The explode never shuffles (partial aggregation
-    // reduces each partition to ≤ cells×dim rows before the
-    // exchange), so the wide stream is map-side-only work that the
-    // codegen wins back. Negative result recorded in
-    // OPTIMIZATION_r14.md; revisit only with a single custom
-    // vector-sum aggregate that is provably decimal-bit-identical.
-    import graft.functions.Num.davg
     var cents: Seq[(Int, Seq[Double], Double)] = Nil
     for (_ <- 0 until iters) {
-      val rows = assign
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cell", "pos")
-        .agg(davg(col("x")).as("cx"))
-        .collect()
-      cents = rows.groupBy(_.getInt(0)).toSeq.map { case (cell, rs) =>
-        val cv = rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-        var ss = 0.0
-        cv.foreach(x => ss += x * x) // index-order fold == list_dot_product
-        (cell, cv, math.sqrt(ss))
-      }.sortBy(_._1)
+      cents = collectCentroids(centroidMeans(assign, col("cell"), col("pos")))
+        .map { case (key, cv, cnrm) => (key.head, cv, cnrm) }
       assign = assignToNearestAny(vs, cents)
     }
     (assign.select("vec_id", "cell"), cents)
+  }
+
+  /** The Lloyd centroid step of every k-means build here: the DECIMAL
+    * elementwise mean ([[graft.functions.Num.davg]] — exact sums, so
+    * order-independent and replayed bit-for-bit by the oracle CTEs) of
+    * the vectors `v` of `assign`, grouped by `keys`. The keys are
+    * evaluated over `assign` with each vector exploded into (`pos`,
+    * `x`) rows, so the caller's cell keys may derive from the element
+    * position `pos`; the last key is the position within the
+    * centroid. One map-side-combined aggregate per round, rows
+    * (keys…, cx).
+    *
+    * The exploded form is kept DELIBERATELY after an r14 experiment
+    * went the other way. The element-wise alternative (64 per-element
+    * decimal sums keyed by cell, no explode) looked like it should
+    * win — 64× fewer row materializations and aggregation-hash probes
+    * — but measured ~2× SLOWER at the 100× leg (ivf kmeans builds
+    * 7.1 → 16.2 s, 7.2 → 11.5 s at sf10p) and ~+0.2 s/round at bench
+    * scale: a 64-update aggregate blows the whole-stage-codegen method
+    * budget, so the update path runs de-optimized, where the exploded
+    * form is one tiny tight-codegen aggregate fed by a generate loop.
+    * The explode never shuffles (partial aggregation reduces each
+    * partition to ≤ cells×dim rows before the exchange), so the wide
+    * stream is map-side-only work that the codegen wins back. Negative
+    * result recorded in OPTIMIZATION_r14.md; revisit only with a
+    * single custom vector-sum aggregate that is provably
+    * decimal-bit-identical. */
+  private def centroidMeans(assign: DataFrame, keys: Column*): DataFrame =
+    assign.select(col("*"), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(keys: _*)
+      .agg(graft.functions.Num.davg(col("x")).as("cx"))
+
+  /** Driver-side assembly of [[centroidMeans]] rows (cell keys…,
+    * position, cx): per cell key, the means in position order and
+    * their norm, folded in index order (== `list_dot_product`), sorted
+    * by key. */
+  private def collectCentroids(means: DataFrame)
+      : Seq[(Seq[Int], Seq[Double], Double)] = {
+    val nk = means.columns.length - 2
+    means.collect().toSeq.groupBy(r => (0 until nk).map(r.getInt)).toSeq
+      .map { case (key, rs) =>
+        val cv = rs.sortBy(_.getInt(nk)).map(_.getDouble(nk + 1))
+        var ss = 0.0
+        cv.foreach(x => ss += x * x)
+        (key, cv, math.sqrt(ss))
+      }.sortBy(_._1)(Ordering.Implicits.seqOrdering)
   }
 
   /** Map-side nearest-centroid assignment: each centroid is a literal
     * array in a codegen'd dot; the argmax is a struct `array_max` on
     * (cos, −cell) — max cosine, then smallest cell id. One projection
     * over the corpus, no shuffle. */
-  private def assignToNearest(vs: DataFrame,
+  private[graft] def assignToNearest(vs: DataFrame,
       cents: Seq[(Int, Seq[Double], Double)]): DataFrame = {
     val scored = array(cents.map { case (c, cv, cnrm) =>
       struct(
@@ -355,48 +370,52 @@ object Similarity {
       (-array_max(scored).getField("negc")).cast("int").as("cell"))
   }
 
-  /** Join-form nearest-centroid assignment for large k: the literal
-    * form above inlines k × dim doubles into generated code, which
-    * blows past codegen method limits once k is corpus-derived (the
-    * near-dup cell count grows with the corpus). Same arithmetic —
-    * one codegen'd dot per (vector, centroid) row against a broadcast
-    * model-sized centroid table, argmax as a partial-aggregatable
-    * `max(struct(cos, −cell))` (max cosine, then smallest cell id) —
-    * so the assignment is bit-identical to the literal form and to
-    * the oracle's `row_number` replay. */
-  private def assignByJoin(vs: DataFrame,
-      cents: Seq[(Int, Seq[Double], Double)]): DataFrame = {
-    val s = vs.sparkSession
-    import s.implicits._
-    val centDF = broadcast(cents.toDF("cell", "cv", "cnrm"))
-    // Score SKINNY, join the winner back. The r8–r11 form rode v/nrm
-    // INSIDE the max struct to skip the join back — which put the
-    // whole corpus into the aggregation BUFFERS: every per-task hash
-    // map held its vec_ids' full vectors, O(corpus/partitions) bytes
-    // per task at the session's fixed shuffle width, and the
-    // 1000×-scale probe OOMed the 8 GiB heap right here (in the
-    // SECOND Lloyd round — the first reads the md5 init, no
-    // reassignment). Skinny (vec_id, cos, −cell) buffers are 24 B
-    // fixed-width; the winner joins back to the cached corpus
-    // shuffle-hash — one extra linear exchange per round, the classic
-    // k-means-on-Spark trade, and the memory shape survives any
-    // corpus size.
-    val picked = vs.crossJoin(centDF)
+  /** Join-form nearest-centroid assignment, for centroid tables too
+    * large to inline: the literal form above inlines k × dim doubles
+    * into generated code, which blows past codegen method limits once
+    * k is corpus-derived. `pairs` holds each vector of `vs` next to
+    * every centroid it may take — columns `vec_id`, `v`, `nrm`, `cv`,
+    * `cnrm` and the centroid id `id`; the result is `vs` plus the
+    * winning `id`. Same arithmetic as the literal form — one
+    * codegen'd dot per (vector, centroid) row, argmax as a
+    * partial-aggregatable `max(struct(cos, −id))` (max cosine, then
+    * smallest id) — so the assignment is bit-identical to it and to
+    * the oracle's `row_number` replay.
+    *
+    * Score SKINNY, join the winner back. The r8–r11 form rode v/nrm
+    * INSIDE the max struct to skip the join back — which put the
+    * whole corpus into the aggregation BUFFERS: every per-task hash
+    * map held its vec_ids' full vectors, O(corpus/partitions) bytes
+    * per task at the session's fixed shuffle width, and the
+    * 1000×-scale probe OOMed the 8 GiB heap here (in the SECOND Lloyd
+    * round — the first reads the md5 init, no reassignment). Skinny
+    * (vec_id, cos, −id) buffers are 24 B fixed-width; the winner joins
+    * back to the cached corpus shuffle-hash — one extra linear
+    * exchange per round, the classic k-means-on-Spark trade, and the
+    * memory shape survives any corpus size. */
+  private def assignByJoin(vs: DataFrame, pairs: DataFrame, id: String): DataFrame = {
+    val picked = pairs
       .select(col("vec_id"),
         struct((dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))).as("cos"),
-          (-col("cell")).as("negc")).as("sc"))
+          (-col(id)).as("negid")).as("sc"))
       .groupBy("vec_id").agg(max(col("sc")).as("m"))
-      .select(col("vec_id"), (-col("m.negc")).cast("int").as("cell"))
+      .select(col("vec_id"), (-col("m.negid")).cast("int").as(id))
     vs.join(picked.hint("shuffle_hash"), Seq("vec_id"))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
+      .select((vs.columns :+ id).map(col).toSeq: _*)
   }
 
   /** Literal scoring for model-sized k (fully codegen'd, zero
-    * shuffle), join scoring once k is corpus-derived. */
+    * shuffle), join scoring against a broadcast centroid table above
+    * that. */
   private[graft] def assignToNearestAny(vs: DataFrame,
       cents: Seq[(Int, Seq[Double], Double)]): DataFrame =
     if (cents.size <= 16) assignToNearest(vs, cents)
-    else assignByJoin(vs, cents)
+    else {
+      val s = vs.sparkSession
+      import s.implicits._
+      assignByJoin(vs, vs.crossJoin(broadcast(cents.toDF("cell", "cv", "cnrm"))),
+        "cell")
+    }
 
   /** IVF approximate kNN — the other canonical ANN scale path next to
     * [[lshAnn]]: cells come from the deterministic [[kmeansModel]]
@@ -624,47 +643,35 @@ object Similarity {
 
   private def buildPq(s: SparkSession, dir: String)
       : (DataFrame, Seq[Seq[(Int, Seq[Double])]]) = {
-    import graft.functions.Num.davg
     val vs = vectors(s, dir)
     // All M subspaces train TOGETHER, one corpus scan per Lloyd
-    // round: the assignment frame carries M cell columns, the full
-    // vector posexplodes ONCE and each element routes to its
+    // round: the assignment frame carries `v` and M cell columns, the
+    // full vector explodes ONCE and each element routes to its
     // (subspace, cell, sub-position) group. Per-subspace sequential
     // loops cost M× the scans/collects for identical means (grouping
     // by subspace keeps every decimal mean bit-for-bit what the
     // per-subspace build — and the oracle's unrolled replay —
     // computes); fusing cut the model build from M·iters to iters
     // corpus passes.
-    var assigns = vs.select(col("vec_id") +: (0 until PqM).map(m =>
+    def cells(cell: Int => Column): Seq[Column] =
+      col("vec_id") +: col("v") +: (0 until PqM).map(m => cell(m).as(s"cell$m"))
+    var assigns = vs.select(cells(m =>
       pmod(md5Hash60(concat(col("vec_id").cast("string"), lit(s":pq$m"))),
-        lit(PqCodes)).cast("int").as(s"cell$m")): _*)
+        lit(PqCodes)).cast("int")): _*)
+    val subspace = (col("pos") / PqSubDim).cast("int")
+    val cellOfSubspace = element_at(
+      array((0 until PqM).map(m => col(s"cell$m")): _*), subspace + 1)
     var books: Seq[Seq[(Int, Seq[Double])]] = Nil
     for (_ <- 0 until PqIters) {
-      val cellOfM = element_at(
-        array((0 until PqM).map(m => col(s"cell$m")): _*), col("m") + 1)
-      val rows = vs.join(assigns, Seq("vec_id"))
-        .select(col("vec_id") +:
-          (0 until PqM).map(m => col(s"cell$m")) :+
-          posexplode(col("v")).as(Seq("pos", "x")): _*)
-        .withColumn("m", (col("pos") / PqSubDim).cast("int"))
-        .groupBy(col("m"), cellOfM.as("cell"),
-          pmod(col("pos"), lit(PqSubDim)).as("spos"))
-        .agg(davg(col("x")).as("cx"))
-        .collect()
-      books = (0 until PqM).map { m =>
-        rows.filter(_.getInt(0) == m).groupBy(_.getInt(1)).toSeq
-          .map { case (cell, rs) =>
-            (cell, rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq)
-          }.sortBy(_._1)
-      }
-      assigns = vs.select(col("vec_id") +: (0 until PqM).map(m =>
-        l2ArgminCell(subVec(col("v"), m), books(m)).as(s"cell$m")): _*)
+      val cents = collectCentroids(centroidMeans(assigns, subspace.as("m"),
+        cellOfSubspace.as("cell"), pmod(col("pos"), lit(PqSubDim)).as("spos")))
+      books = (0 until PqM).map(m =>
+        cents.collect { case (Seq(`m`, cell), cv, _) => (cell, cv) })
+      assigns = vs.select(cells(m => l2ArgminCell(subVec(col("v"), m), books(m))): _*)
     }
-    // the last reassignment of each subspace, fused into ONE map-side
-    // projection over the corpus — the 4 codes per vector
-    val codeCols = (0 until PqM).map(m =>
-      l2ArgminCell(subVec(col("v"), m), books(m)).as(s"c$m"))
-    (vs.select(col("vec_id") +: codeCols: _*), books)
+    // the last round's assignment IS the codes: 4 per vector
+    (assigns.select(col("vec_id") +:
+      (0 until PqM).map(m => col(s"cell$m").as(s"c$m")): _*), books)
   }
 
   /** Min-L2 cell id: `array_min` over (distance, cell) structs — the
@@ -968,56 +975,25 @@ object Similarity {
         scn = subCentroids(cur)
         // the probes use the final CENTROIDS; the trailing assignment
         // they would induce is never consumed — skip it
-        if (i < SubKmIters - 1) cur = assignSubByJoin(scn, cur)
+        if (i < SubKmIters - 1) {
+          val vsc = cur.select("vec_id", "v", "nrm", "coarse")
+          cur = assignByJoin(vsc, vsc.join(scn.hint("shuffle_hash"), Seq("coarse")), "sub")
+        }
       }
       NearDupModel(k, k1, k2, coarseCents, scn.cache())
     }(_.subCents.unpersist())
 
-  /** (coarse, sub) decimal elementwise-mean centroids of the current
-    * sub assignment — the distributed twin of [[buildKmeans]]'s
-    * centroid step: one map-side-combined aggregation, then the
-    * per-cell mean vector reassembled with a deterministic
-    * pos-ordered sort (`list(cx ORDER BY pos)` on the oracle side).
-    * Kept in the exploded form for the same measured reason as
-    * [[buildKmeansOf]] (the r14 element-wise experiment de-optimized
-    * codegen and ran ~2× slower at the 100× leg). */
+  /** (coarse, sub) centroids of the current sub assignment: the
+    * shared [[centroidMeans]] step, then each cell's mean vector
+    * reassembled DISTRIBUTED with a deterministic pos-ordered sort
+    * (`list(cx ORDER BY pos)` on the oracle side), so the sub build
+    * never syncs with the driver. */
   private def subCentroids(cur: DataFrame): DataFrame =
-    cur.select(col("coarse"), col("sub"),
-        posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy("coarse", "sub", "pos")
-      .agg(graft.functions.Num.davg(col("x")).as("cx"))
+    centroidMeans(cur, col("coarse"), col("sub"), col("pos"))
       .groupBy("coarse", "sub")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
         p => p.getField("cx")).as("cv"))
       .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
-
-  /** Sub-cell reassignment: vectors equi-join their OWN coarse cell's
-    * sub-centroids (shuffle-hash — the centroid table is corpus-scaled
-    * overall but each vector sees only k2 rows), argmax as a
-    * partial-aggregatable `max(struct(cos, −sub))` — max cosine, then
-    * smallest sub id — over a SKINNY 24-byte fixed-width buffer; the
-    * winning sub id then joins back to the cached corpus shuffle-hash
-    * to restore v/nrm for the next round. One extra linear exchange
-    * per round, bought deliberately: r8–r11 carried v/nrm inside the
-    * max struct to skip the join-back, which made per-task aggregation
-    * state O(corpus/partitions) bytes at fixed shuffle width and
-    * OOMed the second Lloyd round at sf100. */
-  private def assignSubByJoin(scn: DataFrame, cur: DataFrame): DataFrame = {
-    // Same skinny-score/join-back shape as [[assignByJoin]], same
-    // reason: a max-struct buffer carrying v/nrm is corpus-sized
-    // aggregation state per task at fixed shuffle width.
-    val picked = cur.select("vec_id", "v", "nrm", "coarse")
-      .join(scn.hint("shuffle_hash"), Seq("coarse"))
-      .select(col("vec_id"), col("coarse"),
-        struct((dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))).as("cos"),
-          (-col("sub")).as("negs")).as("sc"))
-      .groupBy("vec_id", "coarse").agg(max(col("sc")).as("m"))
-      .select(col("vec_id"), col("coarse").as("pcoarse"),
-        (-col("m.negs")).cast("int").as("sub"))
-    cur.select("vec_id", "v", "nrm", "coarse")
-      .join(picked.hint("shuffle_hash"), Seq("vec_id"))
-      .select(col("vec_id"), col("v"), col("nrm"), col("coarse"), col("sub"))
-  }
 
   /** Top-[[NearProbe]] cell assignment per vector under the two-level
     * model: rank the √k coarse centroids (broadcast — the one bounded

@@ -219,31 +219,20 @@ object Ingest {
       (batch: DataFrame, _: Long) => scd2MergeBatch(batch, path, key)
     }
 
-  /** One micro-batch of the SCD2 sink: recover, merge touched
-    * partitions through [[scd2Merge]], stage, swap. */
+  /** One micro-batch of the SCD2 sink: [[stageTouched]] through
+    * [[scd2Merge]], then swap. A first batch's empty history gains
+    * the interval columns the snapshot carries. */
   private[graft] def scd2MergeBatch(batch: DataFrame, path: String,
       key: String): Unit = {
-    recoverSnapshot(path)
-    val s = batch.sparkSession
-    val keyed = batch.withColumn("__part", defaultPartition(col(key)).cast("int"))
-    keyed.persist()
-    try {
-      val touched = keyed.select("__part").distinct().collect()
-        .map(_.getInt(0)).toSeq
-      if (touched.isEmpty) return
-      val vfType = keyed.schema(keyed.schema.fieldIndex("valid_from")).dataType
-      val hist =
-        if (SnapshotFs.hasChildren(path))
-          s.read.parquet(path)
-            .filter(col("__part").isin(touched: _*)) // partition-pruned scan
-        else keyed.limit(0)
-          .withColumn("valid_to", lit(null).cast(vfType))
+    val staged = stageTouched(batch, path, key, defaultPartition) { (hist, keyed) =>
+      val vfType = keyed.schema("valid_from").dataType
+      val full =
+        if (hist.columns.contains("is_current")) hist
+        else hist.withColumn("valid_to", lit(null).cast(vfType))
           .withColumn("is_current", lit(true))
-      scd2Merge(hist, keyed, key)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("__part").parquet(path + ".next")
-      swapStaged(path)
-    } finally { keyed.unpersist(); () }
+      scd2Merge(full, keyed, key)
+    }
+    if (staged) swapStaged(path)
   }
 
   /** Merge-on-read view — the other half of the lakehouse write/read
@@ -623,15 +612,28 @@ object Ingest {
       : Unit =
     if (stageMerge(batch, path, key, version, partitionOf)) swapStaged(path)
 
-  /** Recover any interrupted swap, then write the merged form of every
-    * partition the batch touches to `path + ".next"`. Returns false
-    * (nothing staged) for an empty batch. */
+  /** Recover any interrupted swap, then write the upserted form of
+    * every partition the batch touches to `path + ".next"`. Returns
+    * false (nothing staged) for an empty batch. */
   private[graft] def stageMerge(batch: DataFrame, path: String, key: String,
       version: String,
       partitionOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column = defaultPartition)
-      : Boolean = {
+      : Boolean =
+    stageTouched(batch, path, key, partitionOf) { (existing, keyed) =>
+      upsert(existing.select(keyed.columns.map(col).toSeq: _*), keyed, key, version)
+    }
+
+  /** The staging path of every partition-scoped sink: recover any
+    * interrupted swap, key the batch by `__part = partitionOf(key)`,
+    * and write `merge(existing, keyed)` to `path + ".next"`, where
+    * `existing` is the snapshot pruned to the partitions the batch
+    * touches (an empty frame of the keyed batch's schema before the
+    * first commit). Returns false (nothing staged) for an empty
+    * batch. */
+  private def stageTouched(batch: DataFrame, path: String, key: String,
+      partitionOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      (merge: (DataFrame, DataFrame) => DataFrame): Boolean = {
     recoverSnapshot(path)
-    val s = batch.sparkSession
     val keyed = batch.withColumn("__part", partitionOf(col(key)).cast("int"))
     keyed.persist()
     try {
@@ -641,12 +643,10 @@ object Ingest {
       if (touched.isEmpty) return false
       val existing =
         if (SnapshotFs.hasChildren(path))
-          s.read.parquet(path)
+          keyed.sparkSession.read.parquet(path)
             .filter(col("__part").isin(touched: _*)) // partition-pruned scan
-            .select(keyed.columns.map(col): _*)
-        else s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], keyed.schema)
-      upsert(existing, keyed, key, version)
+        else keyed.limit(0)
+      merge(existing, keyed)
         .write.mode(SaveMode.Overwrite)
         .partitionBy("__part").parquet(path + ".next")
       true

@@ -119,7 +119,17 @@ private[graft] object SnapshotFs {
     * releases never touch another session's files, also when two
     * sessions of one process build the same layout. */
   private[graft] def scratch(s: SparkSession, kind: String, dir: String): String =
-    s"$root/session_${GraftShims.sessionId(s).replace("-", "")}/${name(kind, dir)}"
+    s"${sessionDir(s)}/${name(kind, dir)}"
+
+  private def sessionDir(s: SparkSession): String =
+    s"$root/session_${GraftShims.sessionId(s).replace("-", "")}"
+
+  /** Delete session `s`'s scratch directory, with whatever its
+    * releases left there: [[graft.SessionMemo.clear]] runs this last,
+    * so a process that cycles sessions keeps no directory per
+    * session. */
+  private[graft] def dropSession(s: SparkSession): Unit =
+    deleteTree(sessionDir(s))
 
   private def name(kind: String, dir: String): String = {
     val leaf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")

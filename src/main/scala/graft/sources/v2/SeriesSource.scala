@@ -58,13 +58,6 @@ object SeriesSource {
   /** Epoch days of `startDay` advanced by i months. */
   def monthEpochDay(startDay: Long, i: Long): Long =
     java.time.LocalDate.ofEpochDay(startDay).plusMonths(i).toEpochDay
-
-  /** Test observability: splits planned by the most recent scan. */
-  @volatile var lastPlannedSplits: Int = -1
-
-  /** Test observability: micro-batches planned by the most recent
-    * streaming read. */
-  @volatile var lastStreamBatches: Int = 0
 }
 
 private[v2] class SeriesTable(options: CaseInsensitiveStringMap)
@@ -175,14 +168,11 @@ private[v2] class SeriesScan(startDay: Long, lo: Long, hi: Long,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SeriesMicroBatchStream(startDay, lo, hi, perSplit, perBatch, required)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val parts = Iterator.range(lo, hi, perSplit.toLong)
+  override def planInputPartitions(): Array[InputPartition] =
+    Iterator.range(lo, hi, perSplit.toLong)
       .map(f => SeriesRange(startDay, f, math.min(hi, f + perSplit),
         required.fieldNames): InputPartition)
       .toArray
-    SeriesSource.lastPlannedSplits = parts.length
-    parts
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     SeriesReaderFactory
@@ -238,7 +228,6 @@ private[v2] class SeriesMicroBatchStream(startDay: Long, lo: Long, hi: Long,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[MonthOffset].i
     val e = end.asInstanceOf[MonthOffset].i
-    if (e > s) SeriesSource.lastStreamBatches += 1
     Iterator.range(s, e, perSplit.toLong)
       .map(f => SeriesRange(startDay, f, math.min(e, f + perSplit),
         required.fieldNames): InputPartition)

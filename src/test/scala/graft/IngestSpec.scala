@@ -428,6 +428,7 @@ class IngestSpec extends SparkSpec {
     SessionMemo.clear(spark)
     val left = SnapshotFs.list(root).map(_.getPath.getName)
     assert(left.isEmpty, s"left under the scratch root: $left")
+    assert(!SnapshotFs.exists(root), s"the session directory outlived clear: $root")
   }
 
   test("retraction IVM drops emptied groups, keeps exact survivor sums") {

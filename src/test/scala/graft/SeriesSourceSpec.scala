@@ -14,6 +14,17 @@ class SeriesSourceSpec extends SparkSpec {
       .option("months", months).option("monthsPerSplit", perSplit)
       .load()
 
+  /** Input partitions the scan of `df`'s executed plan planned. */
+  private def plannedSplits(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b.inputPartitions.size
+      }
+    assert(scans.size == 1, s"expected one batch scan:\n${df.queryExecution.executedPlan}")
+    scans.head
+  }
+
   test("generator rows match the driver-side formula (short name resolves)") {
     val got = read(500).orderBy("month").collect()
     assert(got.length == 500)
@@ -28,22 +39,22 @@ class SeriesSourceSpec extends SparkSpec {
   test("month-range filters prune generator splits at planning time") {
     val all = read(1200, perSplit = 100)
     assert(all.count() == 1200)
-    assert(SeriesSource.lastPlannedSplits == 12, "unfiltered scan plans all splits")
+    assert(plannedSplits(all) == 12, "unfiltered scan plans all splits")
 
     // 1200 months from 1990-01 end in 2089-12; keep 2080-01 onward =
     // the last 120 months = 2 splits of 100 (one partial)
     val tail = read(1200, perSplit = 100)
       .filter(col("month") >= lit(java.sql.Date.valueOf("2080-01-01")))
     assert(tail.count() == 120)
-    assert(SeriesSource.lastPlannedSplits == 2,
-      s"pushed lower bound should prune to 2 splits, planned ${SeriesSource.lastPlannedSplits}")
+    assert(plannedSplits(tail) == 2,
+      s"pushed lower bound should prune to 2 splits, planned ${plannedSplits(tail)}")
 
     val band = read(1200, perSplit = 100)
       .filter(col("month") >= lit(java.sql.Date.valueOf("2000-01-01")) &&
         col("month") < lit(java.sql.Date.valueOf("2010-01-01")))
     assert(band.count() == 120)
-    assert(SeriesSource.lastPlannedSplits <= 3,
-      s"band should plan <= 3 splits, planned ${SeriesSource.lastPlannedSplits}")
+    assert(plannedSplits(band) <= 3,
+      s"band should plan <= 3 splits, planned ${plannedSplits(band)}")
     // residual re-application keeps exact semantics at split edges
     val bounds = band.agg(min("month"), max("month")).head()
     assert(bounds.getDate(0) == java.sql.Date.valueOf("2000-01-01"))
@@ -59,7 +70,6 @@ class SeriesSourceSpec extends SparkSpec {
   }
 
   test("streaming face: micro-batches admit monthsPerBatch at a time, total equals batch") {
-    SeriesSource.lastStreamBatches = 0
     val q = spark.readStream.format("graft-series")
       .option("months", 300).option("monthsPerBatch", 100)
       .load()
@@ -70,8 +80,8 @@ class SeriesSourceSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("series_stream_out").orderBy("month").collect()
       assert(got.length == 300)
-      assert(SeriesSource.lastStreamBatches >= 3,
-        s"expected >= 3 micro-batches, got ${SeriesSource.lastStreamBatches}")
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      assert(batches >= 3, s"expected >= 3 micro-batches, got $batches")
       val batch = read(300).orderBy("month").collect()
       assert(got.map(_.toSeq).toSeq == batch.map(_.toSeq).toSeq,
         "stream total must equal the batch read")

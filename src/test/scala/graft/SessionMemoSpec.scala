@@ -231,6 +231,17 @@ class SessionMemoSpec extends SparkSpec {
     assert(offenders.isEmpty, s"localCheckpoint called outside SessionMemo: $offenders")
   }
 
+  test("only the shared Lloyd centroid step explodes vectors under src/main/scala/graft") {
+    // the k-means builds share Similarity.centroidMeans; a second
+    // posexplode of `v` is a hand-copied centroid step
+    val needle = "posexplode(col(\"v\"))"
+    val sites = sourcesContaining(needle, owner = "").map { p =>
+      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      p.getFileName.toString -> text.sliding(needle.length).count(_ == needle)
+    }
+    assert(sites == List("Similarity.scala" -> 1), s"$needle sites: $sites")
+  }
+
   test("only Sessions sets session conf under src/main/scala/graft") {
     // a per-call conf.set mutates conf every concurrent client of the
     // session shares; engine-wide settings belong in Sessions.builder

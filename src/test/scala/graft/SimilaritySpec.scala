@@ -189,6 +189,20 @@ class SimilaritySpec extends SparkSpec {
     assert(gotDelta == expect, s"delta routing diverges: $gotDelta vs $expect")
   }
 
+  test("join-form assignment equals the literal form for the same centroids") {
+    // every model the fixtures build has k <= 16 and runs the literal
+    // form; k = 24 takes the join form in the Lloyd rounds
+    val vs = Similarity.vectors(spark, sf0001)
+    val (assign, cents) = Similarity.buildKmeansOf(vs, 24, 2)
+    assert(cents.size > 16, s"k = 24 kept only ${cents.size} cells: literal form ran")
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
+      df.select("vec_id", "cell").as[(Long, Int)].collect().toSeq.sorted
+    val literal = pairs(Similarity.assignToNearest(vs, cents))
+    assert(literal.size == vs.count())
+    assert(pairs(assign) == literal, "the last round's join-form assignment")
+    assert(pairs(Similarity.assignToNearestAny(vs, cents)) == literal)
+  }
+
   test("mutual-kNN clusters == JVM union-find over the mutual edge set") {
     val edges = Similarity.knnGraph(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
