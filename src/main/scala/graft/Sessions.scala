@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The engine's blessed `SparkSession` recipe — one place that
   * encodes the at-scale execution defaults every entry point
-  * (Verify / Bench / Profile, and a library user) should run with:
+  * (Verify / Bench, and a library user) should run with:
   *
   *  - the Graft planner extensions (as-of join strategy)
   *  - AQE on: runtime re-plan, skew-join splitting, coalesced

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SessionMemo.{Rounds, checkpointTracked, iterate, release}
 import graft.Tables
+import graft.functions.Md5Hash60.md5Hash60
 import graft.functions.Num.r4
 
 /** Deduplication operators over `documents` — the dedup ladder of a
@@ -27,12 +28,6 @@ import graft.functions.Num.r4
   * sketch query here is reproducible by the driver's SQL oracle.
   */
 object Dedup {
-
-  /** 60-bit cross-engine hash: first 15 hex digits of md5 as a
-    * base-16 integer. DuckDB equivalent:
-    * `CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT)`. */
-  private def md5Hash60(c: Column): Column =
-    graft.functions.Md5Hash60.md5Hash60(c)
 
   /** Distinct (doc_id, tok) rows — the shared input of the Jaccard /
     * MinHash / SimHash family. Cached + memoized per (session, dir)
@@ -716,7 +711,7 @@ object Dedup {
     * 3-gram shingle, slide a window of [[WinnowW]] hashes, keep each
     * window's minimum — a position-robust sketch whose size is
     * ~|doc|/w. Docs sharing ≥ 3 fingerprints are near-dup candidates.
-    * Hashes are md5-based ([[md5Hash60]]) → the DuckDB oracle
+    * Hashes are md5-based (`md5Hash60`) → the DuckDB oracle
     * recomputes the fingerprints exactly; `DedupSpec` additionally
     * asserts the candidates cover the shingle-Jaccard pairs.
     *
@@ -1438,7 +1433,7 @@ object Dedup {
   private val SimHammingT = 5     // ≤ SimBands − 1 ⇒ pigeonhole holds
 
   /** 60-bit SimHash per document: each distinct token votes ±1 on
-    * every bit of its hash ([[md5Hash60]] — oracle-reproducible); the
+    * every bit of its hash (`md5Hash60` — oracle-reproducible); the
     * sketch sign-thresholds the vote vector. Computed as explode → 60
     * conditional sums → bit recombination (pure aggregates, map-side
     * combinable). 60 bits (up from 32 in round 2, per the round-2

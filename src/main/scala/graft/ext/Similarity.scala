@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Md5Hash60.md5Hash60
 import graft.functions.Num.r4
 
 /** Similarity search over the `embeddings` table
@@ -234,11 +235,6 @@ object Similarity {
   private val NProbe = 2
   private val KCells = 8
   private val KmIters = 5
-
-  /** 60-bit md5 hash (first 15 hex digits as base-16 int) — computed
-    * identically by DuckDB, used to seed the k-means init. */
-  private def md5Hash60(c: Column): Column =
-    graft.functions.Md5Hash60.md5Hash60(c)
 
   /** (session, dir)-memoized model — an IVF index is built once and
     * queried many times; re-invoking the query must not re-run Lloyd.

@@ -101,13 +101,6 @@ object SortedIntersectSize {
     GraftShims.column(SortedIntersectSize(
       GraftShims.expression(a), GraftShims.expression(b)))
 
-  /** Column-API entry point for the threshold form. */
-  def sortedIntersectAtLeast(a: Column, b: Column, required: Column,
-      counter: Option[org.apache.spark.util.LongAccumulator] = None): Column =
-    GraftShims.column(SortedIntersectAtLeast(
-      GraftShims.expression(a), GraftShims.expression(b),
-      GraftShims.expression(required), counter))
-
   /** Column-API entry point for the minimal-witness containment
     * verify. */
   def sortedContainMinimal(a: Column, b: Column, required: Column,
@@ -119,114 +112,10 @@ object SortedIntersectSize {
       GraftShims.expression(jb), counter))
 }
 
-/** Threshold verify: `|A ∩ B|` when it reaches `required`, else −1 —
-  * the early-exit form of [[SortedIntersectSize]] for similarity
-  * verification under a KNOWN bound (containment needs
-  * |x∩y| ≥ ⌈t·|x|⌉): the merge scan abandons a pair the moment the
-  * unseen remainder of EITHER side cannot close the gap
-  * (`c + min(n1−i, n2−j) < required`), so a failing candidate costs
-  * ~its mismatch prefix instead of a full O(|A|+|B|) walk — at a 0.9
-  * threshold most candidates die in the first few percent of the
-  * arrays. For passing pairs the returned size equals
-  * [[SortedIntersectSize]] exactly, so any filter `≥ required` and
-  * any downstream arithmetic is value-identical to the unbounded
-  * form (what the oracle replays).
-  *
-  * `counter`, when set, counts VERIFY ATTEMPTS (per-row evaluations)
-  * into a [[org.apache.spark.util.LongAccumulator]] — the
-  * candidate-volume gauge the bench artifact reports so candidate
-  * growth across scale legs is attributable. Diagnostic only: the
-  * count is plan-dependent (re-evaluation, speculative tasks) and
-  * never feeds a result. */
-case class SortedIntersectAtLeast(first: Expression, second: Expression,
-    third: Expression,
-    counter: Option[org.apache.spark.util.LongAccumulator])
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val arraysOk = Seq(IntegerType, LongType).exists(et =>
-      Seq(first, second).forall(_.dataType match {
-        case ArrayType(`et`, _) => true
-        case _ => false
-      }))
-    if (arraysOk && third.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect_at_least requires two sorted arrays + int " +
-        s"threshold, got ${first.dataType.catalogString}, " +
-        s"${second.dataType.catalogString}, ${third.dataType.catalogString}")
-  }
-
-  private def isLong: Boolean =
-    first.dataType.asInstanceOf[ArrayType].elementType == LongType
-
-  override def nullSafeEval(a: Any, b: Any, req: Any): Any = {
-    counter.foreach(_.add(1L))
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val required = req.asInstanceOf[Int]
-    val n1 = x.numElements()
-    val n2 = y.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < n1 && j < n2 &&
-        c + math.min(n1 - i, n2 - j) >= required) {
-      if (isLong) {
-        val xi = x.getLong(i); val yj = y.getLong(j)
-        if (xi == yj) { c += 1; i += 1; j += 1 }
-        else if (xi < yj) i += 1
-        else j += 1
-      } else {
-        val xi = x.getInt(i); val yj = y.getInt(j)
-        if (xi == yj) { c += 1; i += 1; j += 1 }
-        else if (xi < yj) i += 1
-        else j += 1
-      }
-    }
-    if (c >= required) c else -1
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, req) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val n1 = ctx.freshName("n1"); val n2 = ctx.freshName("n2")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val rem = ctx.freshName("rem")
-      val (jt, getter) = if (isLong) ("long", "getLong") else ("int", "getInt")
-      val count = counter.map { acc =>
-        val ref = ctx.addReferenceObj("verifyCounter", acc,
-          "org.apache.spark.util.LongAccumulator")
-        s"$ref.add(1L);"
-      }.getOrElse("")
-      s"""
-         |$count
-         |int $i = 0, $j = 0, $c = 0;
-         |final int $n1 = $a.numElements();
-         |final int $n2 = $b.numElements();
-         |while ($i < $n1 && $j < $n2) {
-         |  final int $rem = ($n1 - $i < $n2 - $j) ? ($n1 - $i) : ($n2 - $j);
-         |  if ($c + $rem < $req) { break; }
-         |  final $jt $x = $a.$getter($i);
-         |  final $jt $y = $b.$getter($j);
-         |  if ($x == $y) { $c++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = ($c >= $req) ? $c : -1;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): SortedIntersectAtLeast =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** Minimal-witness containment verify — the per-PAIR form of
-  * [[SortedIntersectAtLeast]] for prefix-filtered candidate joins
-  * that emit one row per SHARED PREFIX ORDINAL: a pair sharing k
+/** Minimal-witness containment verify: `|A ∩ B|` when it reaches
+  * `required` (containment needs |A∩B| ≥ ⌈t·|A|⌉), else −1, counted
+  * ONCE per candidate pair. Prefix-filtered candidate joins emit one
+  * row per SHARED PREFIX ORDINAL: a pair sharing k
   * bounded-prefix ordinals reaches the verify k times, and for true
   * containments (which share their whole prefix) that multiplied the
   * r11 verify volume by ~the prefix length. Inputs: the two
@@ -249,10 +138,13 @@ case class SortedIntersectAtLeast(first: Expression, second: Expression,
   *     bounds (the prefix-filter theorem puts the smallest common
   *     ordinal inside A's prefix, and the positional cap holds
   *     there), so gating to it never drops a qualifying pair.
-  *  3. The threshold merge scan of [[SortedIntersectAtLeast]], but
-  *     started AT (ia, jb) with the witness pre-counted — the heads
-  *     are disjoint by (2), so no match is skipped and the heads are
-  *     never rescanned.
+  *  3. A threshold merge scan started AT (ia, jb) with the witness
+  *     pre-counted: it abandons the pair the moment the unseen
+  *     remainder of EITHER side cannot close the gap
+  *     (`c + min(n1−i, n2−j) < required`), so a failing candidate
+  *     costs ~its mismatch prefix, not a full O(|A|+|B|) walk. The
+  *     heads are disjoint by (2), so no match is skipped and the
+  *     heads are never rescanned.
   *
   * For the surviving (minimal, qualifying) row the returned count
   * equals the plain full-array intersect exactly — downstream

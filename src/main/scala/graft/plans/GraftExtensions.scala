@@ -1,10 +1,8 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Window => WindowNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -17,14 +15,13 @@ import graft.functions.{ArrayAgreeCount, BpeTokenCount, DotProduct,
   * when the input is a calendar-grain aggregate (≤ a few thousand
   * rows), catastrophic when someone orders 100 TB of raw facts.
   *
-  * The rule rewrites nothing: it flags global windows whose child is
-  * *not* an aggregation (the only shape where the input is provably
-  * pre-reduced in this engine) so the pattern is visible in logs and
-  * assertable in tests.
+  * The rule rewrites nothing: it logs a warning for each global
+  * window whose child is *not* an aggregation (the only shape where
+  * the input is provably pre-reduced in this engine). [[findings]]
+  * states the same check as a pure function of a plan, so tests
+  * assert on a query's optimized plan.
   */
 object GlobalWindowLint extends Rule[LogicalPlan] {
-  /** Flagged plan fragments (test/observability hook). */
-  val flagged = new ConcurrentLinkedQueue[String]()
 
   private def isPreReduced(p: LogicalPlan): Boolean = p match {
     case _: Aggregate => true
@@ -61,16 +58,17 @@ object GlobalWindowLint extends Rule[LogicalPlan] {
     case other => other.children.exists(physPreReduced)
   }
 
+  /** One message per global window over non-aggregated input in
+    * `plan`, its subqueries included. */
+  def findings(plan: LogicalPlan): Seq[String] = plan.collectWithSubqueries {
+    case w: WindowNode if w.partitionSpec.isEmpty && !isPreReduced(w.child) =>
+      s"global window over non-aggregated input: " +
+        s"${w.windowExpressions.map(_.sql).mkString(", ")}"
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    plan.foreach {
-      case w: WindowNode if w.partitionSpec.isEmpty && !isPreReduced(w.child) =>
-        val msg = s"global window over non-aggregated input: " +
-          s"${w.windowExpressions.map(_.sql).mkString(", ")}"
-        flagged.add(msg)
-        logWarning(s"[graft-lint] $msg — single-task execution; " +
-          "partition the window or pre-aggregate its input")
-      case _ =>
-    }
+    findings(plan).foreach(msg => logWarning(s"[graft-lint] $msg — " +
+      "single-task execution; partition the window or pre-aggregate its input"))
     plan
   }
 }
@@ -85,80 +83,32 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => GlobalWindowLint)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    e.injectFunction((
-      FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName,
-        "sorted_intersect_size"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SortedIntersectSize(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("array_agree_count"),
-      new ExpressionInfo(classOf[ArrayAgreeCount].getName,
-        "array_agree_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ArrayAgreeCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        JaroWinkler(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("md5_hash60"),
-      new ExpressionInfo(classOf[Md5Hash60].getName, "md5_hash60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Md5Hash60(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("fingerprint_norm"),
-      new ExpressionInfo(classOf[FingerprintNorm].getName, "fingerprint_norm"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FingerprintNorm(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "bpe_token_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BpeTokenCount(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("ngram_hash60"),
-      new ExpressionInfo(classOf[NgramHash60].getName, "ngram_hash60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val n = exprs.lift(1)
-          .filter(_.foldable).map(_.eval()).collect {
-            case i: Int => i
-            case l: Long => l.toInt
-          }.getOrElse(throw new IllegalArgumentException(
-            "ngram_hash60(toks, n): n must be an integer literal"))
-        NgramHash60(exprs(0), n)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketch].getName, "kmv_sketch"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val k = exprs.lift(1)
-          .filter(_.foldable).map(_.eval()).collect {
-            case i: Int => i
-            case l: Long => l.toInt
-          }.getOrElse(throw new IllegalArgumentException(
-            "kmv_sketch(v, k): k must be an integer literal"))
-        KmvSketch(exprs(0), k).toAggregateExpression()
-      }))
-    e.injectFunction((
-      FunctionIdentifier("minhash_sketch"),
-      new ExpressionInfo(classOf[MinHashSketch].getName, "minhash_sketch"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // numPerms must be a foldable non-null integral literal; fail
-        // with a sensible message rather than a raw cast/NPE
-        val n = exprs.lift(1)
-          .filter(_.foldable).map(_.eval()).collect {
-            case i: Int => i
-            case l: Long => l.toInt
-          }.getOrElse(throw new IllegalArgumentException(
-            "minhash_sketch(tok, numPerms): numPerms must be an integer literal"))
-        MinHashSketch(exprs(0), n).toAggregateExpression()
-      }))
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    // the size argument of the parameterized kernels: a foldable,
+    // non-null integral literal, else `usage` rather than a raw
+    // cast/NPE
+    def sizeArg(exprs: Seq[Expression], usage: String): Int =
+      exprs.lift(1)
+        .filter(_.foldable).map(_.eval()).collect {
+          case i: Int => i
+          case l: Long => l.toInt
+        }.getOrElse(throw new IllegalArgumentException(usage))
+    fn("sorted_intersect_size", classOf[SortedIntersectSize])(
+      x => SortedIntersectSize(x(0), x(1)))
+    fn("array_agree_count", classOf[ArrayAgreeCount])(x => ArrayAgreeCount(x(0), x(1)))
+    fn("dot_product", classOf[DotProduct])(x => DotProduct(x(0), x(1)))
+    fn("jaro_winkler", classOf[JaroWinkler])(x => JaroWinkler(x(0), x(1)))
+    fn("md5_hash60", classOf[Md5Hash60])(x => Md5Hash60(x(0)))
+    fn("fingerprint_norm", classOf[FingerprintNorm])(x => FingerprintNorm(x(0)))
+    fn("bpe_token_count", classOf[BpeTokenCount])(x => BpeTokenCount(x(0)))
+    fn("ngram_hash60", classOf[NgramHash60])(x => NgramHash60(x(0),
+      sizeArg(x, "ngram_hash60(toks, n): n must be an integer literal")))
+    fn("kmv_sketch", classOf[KmvSketch])(x => KmvSketch(x(0),
+      sizeArg(x, "kmv_sketch(v, k): k must be an integer literal")).toAggregateExpression())
+    fn("minhash_sketch", classOf[MinHashSketch])(x => MinHashSketch(x(0),
+      sizeArg(x, "minhash_sketch(tok, numPerms): numPerms must be an integer literal"))
+      .toAggregateExpression())
   }
 }

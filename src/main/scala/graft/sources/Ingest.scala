@@ -19,13 +19,18 @@ object Ingest {
     * via the key ordering below). Mirrors `ON CONFLICT (date) DO
     * UPDATE SET value = EXCLUDED.value` applied in version order. */
   def upsert(existing: DataFrame, incoming: DataFrame,
-      key: String, version: String): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(col(version).desc)
-    existing.unionByName(incoming)
-      .withColumn("__rn", row_number().over(w))
+      key: String, version: String): DataFrame =
+    newestPerKey(existing.unionByName(incoming), key, col(version).desc)
+
+  /** The one resolve step of every last-write-wins path: per `key`,
+    * keep the first row under `order` (newest first). A filter on a
+    * non-key column belongs ABOVE this step: Spark pushes only
+    * partition-key predicates through a `Window`. */
+  private def newestPerKey(rows: DataFrame, key: String,
+      order: org.apache.spark.sql.Column*): DataFrame =
+    rows.withColumn("__rn", row_number().over(Window.partitionBy(key).orderBy(order: _*)))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
 
   /** Snapshot writer for the monthly series table: partitioned by
     * year so calendar-sliced queries prune whole directories (the
@@ -49,13 +54,8 @@ object Ingest {
     * The DuckDB oracle recomputes the same merge relationally, so the
     * write→read path (not just the merge plan) is hash-checked. */
   def upsertRoundtrip(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = graft.Tables.orders(s, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
-        col("o_totalprice"), col("o_orderstatus"))
-    val incoming = base.filter(col("o_orderkey") % 10 === 0)
-      .withColumn("o_orderdate", date_add(col("o_orderdate"), 1))
-      .withColumn("o_orderstatus", lit("R"))
-    val merged = upsert(base, incoming, "o_orderkey", "o_orderdate")
+    val base = orders(s, dir)
+    val merged = upsert(base, updates(base).drop("deleted"), "o_orderkey", "o_orderdate")
     val path = SnapshotFs.layout(s, "roundtrip", dir)(writeTimeSeries(merged, _, "o_orderdate"))
     s.read.parquet(path)
       .select("o_orderkey", "o_orderdate", "o_totalprice", "o_orderstatus")
@@ -72,14 +72,39 @@ object Ingest {
     * at 100 TB a delete batch costs O(batch ∪ touched partitions)
     * exactly like an upsert batch. */
   def upsertWithTombstones(existing: DataFrame, incoming: DataFrame,
-      key: String, version: String, isDelete: String): DataFrame = {
-    val w = Window.partitionBy(key)
-      .orderBy(col(version).desc, col(isDelete).desc)
-    existing.withColumn(isDelete, lit(false)).unionByName(incoming)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && !col(isDelete))
-      .drop("__rn", isDelete)
-  }
+      key: String, version: String, isDelete: String): DataFrame =
+    newestPerKey(existing.withColumn(isDelete, lit(false)).unionByName(incoming),
+        key, col(version).desc, col(isDelete).desc)
+      .filter(!col(isDelete))
+      .drop(isDelete)
+
+  /** The orders projection every change-log query starts from. */
+  private def orders(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.Tables.orders(s, dir)
+      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
+        col("o_totalprice"), col("o_orderstatus"))
+
+  /** The change log's update batch: every 10th order re-arrives one
+    * day later with status 'R'. */
+  private def updates(base: DataFrame): DataFrame =
+    base.filter(col("o_orderkey") % 10 === 0)
+      .withColumn("o_orderdate", date_add(col("o_orderdate"), 1))
+      .withColumn("o_orderstatus", lit("R"))
+      .withColumn("deleted", lit(false))
+
+  /** The change log's tombstone batch: every 7th order is deleted two
+    * days later. */
+  private def tombstones(base: DataFrame): DataFrame =
+    base.filter(col("o_orderkey") % 7 === 0)
+      .withColumn("o_orderdate", date_add(col("o_orderdate"), 2))
+      .withColumn("deleted", lit(true))
+
+  /** The per-status rollup the merged-view queries report. */
+  private def statusRollup(df: DataFrame): DataFrame =
+    df.groupBy("o_orderstatus")
+      .agg(count(lit(1)).as("n_rows"),
+        round(sum(col("o_totalprice").cast("decimal(25,8)")).cast("double"), 4)
+          .as("total_price"))
 
   /** Declared query: deletes propagate through the snapshot round
     * trip. Every 10th order re-arrives updated (status 'R', one day
@@ -91,18 +116,9 @@ object Ingest {
     * resolves by version: the later tombstone wins), and untouched
     * keys are untouched ([[upsertRoundtrip]] covers them in full). */
   def deleteTombstones(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = graft.Tables.orders(s, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
-        col("o_totalprice"), col("o_orderstatus"))
-    val upd = base.filter(col("o_orderkey") % 10 === 0)
-      .withColumn("o_orderdate", date_add(col("o_orderdate"), 1))
-      .withColumn("o_orderstatus", lit("R"))
-      .withColumn("deleted", lit(false))
-    val tomb = base.filter(col("o_orderkey") % 7 === 0)
-      .withColumn("o_orderdate", date_add(col("o_orderdate"), 2))
-      .withColumn("deleted", lit(true))
-    val merged = upsertWithTombstones(
-      base, upd.unionByName(tomb), "o_orderkey", "o_orderdate", "deleted")
+    val base = orders(s, dir)
+    val merged = upsertWithTombstones(base, updates(base).unionByName(tombstones(base)),
+      "o_orderkey", "o_orderdate", "deleted")
     val path = SnapshotFs.layout(s, "tombstones", dir)(writeTimeSeries(merged, _, "o_orderdate"))
     s.read.parquet(path)
       .filter(col("o_orderkey") % 10 === 0 || col("o_orderkey") % 7 === 0)
@@ -127,24 +143,21 @@ object Ingest {
     * driver-side "compare against yesterday's dim" loop it replaces.
     *
     * Declared query: orders is the change log — every 10th key
-    * re-arrives a day later (status 'R'), every 100th a THIRD time
+    * re-arrives a day later (status 'R': the [[updates]] batch),
+    * every 100th a THIRD time
     * two days later (status 'F'), so the history holds 1-, 2- and
     * 3-version chains and the hash check pins interval chaining
     * (each `valid_to` equals the successor's `valid_from`), the
     * open-ended current row, and single-version keys staying
     * current. */
   def scd2Build(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = graft.Tables.orders(s, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("valid_from"),
-        col("o_totalprice"), col("o_orderstatus"))
-    val chg1 = base.filter(col("o_orderkey") % 10 === 0)
-      .withColumn("valid_from", date_add(col("valid_from"), 1))
-      .withColumn("o_orderstatus", lit("R"))
+    val base = orders(s, dir)
     val chg2 = base.filter(col("o_orderkey") % 100 === 0)
-      .withColumn("valid_from", date_add(col("valid_from"), 2))
+      .withColumn("o_orderdate", date_add(col("o_orderdate"), 2))
       .withColumn("o_orderstatus", lit("F"))
     val w = Window.partitionBy("o_orderkey").orderBy("valid_from")
-    base.unionByName(chg1).unionByName(chg2)
+    base.unionByName(updates(base).drop("deleted")).unionByName(chg2)
+      .withColumnRenamed("o_orderdate", "valid_from")
       .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
       .withColumn("is_current", col("valid_to").isNull)
       .select("o_orderkey", "valid_from", "valid_to", "is_current",
@@ -257,42 +270,22 @@ object Ingest {
     * `IngestSpec` additionally asserts base files are byte-untouched
     * by the delta commit and MOR ≡ COW row-for-row. */
   def mergeOnRead(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = graft.Tables.orders(s, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
-        col("o_totalprice"), col("o_orderstatus"))
-    val upd = base.filter(col("o_orderkey") % 10 === 0)
-      .withColumn("o_orderdate", date_add(col("o_orderdate"), 1))
-      .withColumn("o_orderstatus", lit("R"))
-      .withColumn("deleted", lit(false))
-    val tomb = base.filter(col("o_orderkey") % 7 === 0)
-      .withColumn("o_orderdate", date_add(col("o_orderdate"), 2))
-      .withColumn("deleted", lit(true))
+    val base = orders(s, dir)
     val path = SnapshotFs.layout(s, "mor", dir) { p =>
       base.write.mode("overwrite").parquet(s"$p/base")
-      upd.unionByName(tomb).write.mode("overwrite").parquet(s"$p/delta")
+      updates(base).unionByName(tombstones(base)).write.mode("overwrite").parquet(s"$p/delta")
     }
-    mergeOnReadView(s, s"$path/base", s"$path/delta")
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_rows"),
-        round(sum(col("o_totalprice").cast("decimal(25,8)")).cast("double"), 4)
-          .as("total_price"))
+    statusRollup(mergeOnReadView(s, s"$path/base", s"$path/delta"))
       .orderBy("o_orderstatus")
   }
 
-  /** The read-time merge itself: base ∪ delta resolved per key by the
-    * [[upsertWithTombstones]] rule (newest version wins, tombstones
-    * outrank data at equal version, winning tombstones drop the key). */
+  /** The read-time merge itself: base ∪ delta resolved per key by
+    * [[upsertWithTombstones]] (newest version wins, tombstones outrank
+    * data at equal version, winning tombstones drop the key). */
   private[graft] def mergeOnReadView(s: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaPath: String): DataFrame = {
-    val b = s.read.parquet(basePath).withColumn("deleted", lit(false))
-    val d = s.read.parquet(deltaPath)
-    val w = Window.partitionBy("o_orderkey")
-      .orderBy(col("o_orderdate").desc, col("deleted").desc)
-    b.unionByName(d)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && !col("deleted"))
-      .drop("__rn", "deleted")
-  }
+      basePath: String, deltaPath: String): DataFrame =
+    upsertWithTombstones(s.read.parquet(basePath), s.read.parquet(deltaPath),
+      "o_orderkey", "o_orderdate", "deleted")
 
   /** Data-quality EXPECTATIONS — the constraint gate an ingest
     * pipeline evaluates per batch before committing (Delta Live
@@ -348,28 +341,43 @@ object Ingest {
   }
 
   /** The commit history [[timeTravel]] and [[vacuum]] read: `base` as
-    * is, v1 = every 10th key re-arriving with status 'R', v2 = every
-    * 7th key tombstoned; each commit carries its version in `__v`. */
+    * is, v1 = the [[updates]] batch, v2 = the [[tombstones]] batch;
+    * each commit carries its version in `__v`, the column the as-of
+    * read resolves on (the batches' shifted dates are never read). */
   private def writeCommits(base: DataFrame, basePath: String,
       v1Path: String, v2Path: String): Unit = {
     base.write.mode("overwrite").parquet(basePath)
-    base.filter(col("o_orderkey") % 10 === 0)
-      .withColumn("o_orderstatus", lit("R"))
-      .withColumn("deleted", lit(false))
-      .withColumn("__v", lit(1))
-      .write.mode("overwrite").parquet(v1Path)
-    base.filter(col("o_orderkey") % 7 === 0)
-      .withColumn("deleted", lit(true))
-      .withColumn("__v", lit(2))
-      .write.mode("overwrite").parquet(v2Path)
+    updates(base).withColumn("__v", lit(1)).write.mode("overwrite").parquet(v1Path)
+    tombstones(base).withColumn("__v", lit(2)).write.mode("overwrite").parquet(v2Path)
   }
+
+  /** A base commit (version `baseV`) plus the given delta commits,
+    * resolved per key by [[upsertWithTombstones]] on the commit
+    * version `__v`. With no delta the base is read as is: a base
+    * commit holds one row per key. */
+  private def resolveCommits(s: org.apache.spark.sql.SparkSession,
+      basePath: String, baseV: Int, deltaPaths: Seq[String]): DataFrame = {
+    val base = s.read.parquet(basePath).withColumn("__v", lit(baseV))
+    if (deltaPaths.isEmpty) base
+    else upsertWithTombstones(base, deltaPaths.map(s.read.parquet(_)).reduce(_ unionByName _),
+      "o_orderkey", "__v", "deleted")
+  }
+
+  /** The as-of read [[timeTravel]] and [[vacuum]] share: the base
+    * commit plus every delta commit up to version `v`, rolled up per
+    * status and labelled `version = v`. */
+  private def asOfRollup(s: org.apache.spark.sql.SparkSession, basePath: String,
+      baseV: Int, deltas: Seq[(Int, String)], v: Int): DataFrame =
+    statusRollup(resolveCommits(s, basePath, baseV,
+        deltas.collect { case (dv, p) if dv <= v => p }))
+      .withColumn("version", lit(v.toLong))
 
   /** Snapshot versioning + TIME TRAVEL — the lakehouse read axis next
     * to [[mergeOnRead]]: every commit lands as an ordered DELTA
     * directory carrying its commit id IN the files (v1 = the update
     * batch, v2 = the tombstone batch — the same deterministic batches
     * as [[mergeOnRead]]); reading AS OF version v resolves
-    * base ∪ {deltas ≤ v} with the LWW+tombstone window, so ANY
+    * base ∪ {deltas ≤ v} with the LWW+tombstone rule, so ANY
     * historical state reconstructs without rewriting a single data
     * file (Iceberg/Delta snapshot semantics: commits are additive,
     * reads pick a prefix). The declared query reads all three
@@ -379,31 +387,10 @@ object Ingest {
     * is a manifest-prefix walk at planning time; the data read is the
     * same pruned MOR scan. */
   def timeTravel(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = graft.Tables.orders(s, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
-        col("o_totalprice"), col("o_orderstatus"))
     val root = SnapshotFs.layout(s, "tt", dir)(p =>
-      writeCommits(base, s"$p/base", s"$p/v1", s"$p/v2"))
-    val (basePath, v1Path, v2Path) = (s"$root/base", s"$root/v1", s"$root/v2")
-    def asOf(v: Int): DataFrame = {
-      val b = s.read.parquet(basePath)
-        .withColumn("deleted", lit(false)).withColumn("__v", lit(0))
-      val merged = Seq(1 -> v1Path, 2 -> v2Path)
-        .filter(_._1 <= v)
-        .map { case (_, p) => s.read.parquet(p) }
-        .foldLeft(b)(_.unionByName(_))
-      val w = Window.partitionBy("o_orderkey")
-        .orderBy(col("__v").desc, col("deleted").desc)
-      merged
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && !col("deleted"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum(col("o_totalprice").cast("decimal(25,8)")).cast("double"), 4)
-            .as("total_price"))
-        .withColumn("version", lit(v.toLong))
-    }
-    (0 to 2).map(asOf).reduce(_.unionByName(_))
+      writeCommits(orders(s, dir), s"$p/base", s"$p/v1", s"$p/v2"))
+    val deltas = Seq(1 -> s"$root/v1", 2 -> s"$root/v2")
+    (0 to 2).map(asOfRollup(s, s"$root/base", 0, deltas, _)).reduce(_.unionByName(_))
       .select(col("version"), col("o_orderstatus"), col("n_rows"),
         col("total_price"))
       .orderBy("version", "o_orderstatus")
@@ -416,7 +403,7 @@ object Ingest {
     * into a checkpointed base (one LWW resolve of the expired prefix,
     * written once) and their commit directories are DELETED — Delta's
     * VACUUM / Iceberg's expire_snapshots. Reads at or after the
-    * horizon are unchanged (the fold is exactly the window those
+    * horizon are unchanged (the fold is exactly the resolve those
     * reads were running); versions before it stop being
     * reconstructable — that is the storage the pass reclaims. The
     * declared query builds its own commit history (the [[timeTravel]]
@@ -432,21 +419,11 @@ object Ingest {
     val (basePath, v1Path, v2Path, ckptPath) =
       (s"$root/base", s"$root/v1", s"$root/v2", s"$root/ckpt")
     SnapshotFs.layout(s, "vac", dir) { _ =>
-      val base = graft.Tables.orders(s, dir)
-        .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
-          col("o_totalprice"), col("o_orderstatus"))
-      writeCommits(base, basePath, v1Path, v2Path)
+      writeCommits(orders(s, dir), basePath, v1Path, v2Path)
       // the vacuum itself: fold the expired prefix (base, v1) into
-      // ONE checkpointed base at the horizon — the same LWW window
-      // every read was already resolving, paid once at write time
-      val w = Window.partitionBy("o_orderkey")
-        .orderBy(col("__v").desc, col("deleted").desc)
-      s.read.parquet(basePath)
-        .withColumn("deleted", lit(false)).withColumn("__v", lit(0))
-        .unionByName(s.read.parquet(v1Path))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && !col("deleted"))
-        .drop("__rn", "deleted", "__v")
+      // ONE checkpointed base at the horizon — the same resolve every
+      // read was already running, paid once at write time
+      resolveCommits(s, basePath, 0, Seq(v1Path)).drop("__v")
         .write.mode("overwrite").parquet(ckptPath)
     }
     // ... then reclaim the expired commits. UNCONDITIONAL once the
@@ -460,22 +437,7 @@ object Ingest {
     // measured from the store, not assumed: checkpoint + live v2
     val remaining = Seq(basePath, v1Path, v2Path, ckptPath)
       .count(SnapshotFs.hasSuccess).toLong
-    def asOf(v: Int): DataFrame = {
-      val ck = s.read.parquet(ckptPath)
-        .withColumn("deleted", lit(false)).withColumn("__v", lit(1))
-      val merged =
-        if (v >= 2) ck.unionByName(s.read.parquet(v2Path)) else ck
-      val w = Window.partitionBy("o_orderkey")
-        .orderBy(col("__v").desc, col("deleted").desc)
-      merged.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && !col("deleted"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum(col("o_totalprice").cast("decimal(25,8)")).cast("double"), 4)
-            .as("total_price"))
-        .withColumn("version", lit(v.toLong))
-    }
-    (1 to 2).map(asOf).reduce(_.unionByName(_))
+    (1 to 2).map(asOfRollup(s, ckptPath, 1, Seq(2 -> v2Path), _)).reduce(_.unionByName(_))
       .select(col("version"), col("o_orderstatus"), col("n_rows"),
         col("total_price"), lit(remaining).as("remaining_commits"))
       .orderBy("version", "o_orderstatus")
@@ -514,9 +476,7 @@ object Ingest {
     * columns, INSERT/UPDATE the next-image — the convention a
     * merge-applying consumer needs. */
   def snapshotDiffQuery(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val base = graft.Tables.orders(s, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
-        col("o_totalprice"), col("o_orderstatus"))
+    val base = orders(s, dir)
     val updated = base
       .withColumn("o_orderdate",
         when(col("o_orderkey") % 10 === 0, date_add(col("o_orderdate"), 1))
@@ -548,9 +508,7 @@ object Ingest {
     * planning time; the scan itself is unchanged. */
   def schemaEvolution(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import graft.functions.Num.{dsum, r4}
-    val base = graft.Tables.orders(s, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
-        col("o_totalprice"), col("o_orderstatus"))
+    val base = orders(s, dir)
     val path = SnapshotFs.layout(s, "evolution", dir) { p =>
       base.filter(col("o_orderkey") % 2 === 0)
         .drop("o_orderstatus").withColumn("batch", lit(1L))
@@ -668,8 +626,7 @@ object Ingest {
       s"refusing to swap an incomplete stage: $next")
     val old = path + ".old"
     SnapshotFs.mkdirs(path); SnapshotFs.mkdirs(old)
-    for (p <- SnapshotFs.list(next)
-         if p.isDirectory && p.getPath.getName.startsWith("__part=")) {
+    for (p <- partitionDirs(next)) {
       val name = p.getPath.getName
       val livePart = s"$path/$name"
       if (SnapshotFs.exists(livePart))
@@ -679,6 +636,21 @@ object Ingest {
     SnapshotFs.deleteTree(old)
     SnapshotFs.deleteTree(next)
   }
+
+  /** The `__part=` directories of a snapshot (or of its stage): one
+    * listing, bounded by the partition count, never by data volume. */
+  private def partitionDirs(path: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    SnapshotFs.list(path)
+      .filter(p => p.isDirectory && p.getPath.getName.startsWith("__part="))
+
+  /** Every partition of a snapshot with its parquet files. */
+  private def partitionFiles(path: String)
+      : Seq[(Int, Seq[org.apache.hadoop.fs.FileStatus])] =
+    partitionDirs(path).map { p =>
+      p.getPath.getName.stripPrefix("__part=").toInt ->
+        SnapshotFs.list(p.getPath.toString)
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    }
 
   /** Startup/pre-batch recovery: finish or roll back an interrupted
     * swap so the snapshot is whole before the next merge reads it. */
@@ -719,20 +691,14 @@ object Ingest {
   def compactSnapshot(s: org.apache.spark.sql.SparkSession, path: String,
       maxBytesPerFile: Long = 128L << 20): Int = {
     recoverSnapshot(path)
-    // partition-directory listing via the Hadoop FileSystem API —
-    // bounded by #partitions, and valid against an object store
-    val plan = SnapshotFs.list(path)
-      .filter(p => p.isDirectory && p.getPath.getName.startsWith("__part="))
-      .flatMap { p =>
-        val files = SnapshotFs.list(p.getPath.toString)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        val bytes = files.map(_.getLen).sum
-        val k = math.max(1L,
-          math.ceil(bytes.toDouble / maxBytesPerFile).toLong).toInt
-        if (files.length > k)
-          Some(p.getPath.getName.stripPrefix("__part=").toInt -> k)
-        else None
-      }
+    // listing via the Hadoop FileSystem API — valid against an
+    // object store
+    val plan = partitionFiles(path).flatMap { case (part, files) =>
+      val bytes = files.map(_.getLen).sum
+      val k = math.max(1L,
+        math.ceil(bytes.toDouble / maxBytesPerFile).toLong).toInt
+      if (files.length > k) Some(part -> k) else None
+    }
     if (plan.isEmpty) return 0
     val full = s.read.parquet(path)
     plan.map { case (part, k) =>
@@ -832,9 +798,7 @@ object Ingest {
   def partitionPrunedDrill(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import graft.functions.Num._
-    val base = graft.Tables.orders(s, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"),
-        col("o_totalprice"))
+    val base = orders(s, dir).drop("o_orderstatus")
     // the partitioned fact copy: a layout, so a cold bench pass
     // (after SessionMemo.clear) repays the build
     val path = SnapshotFs.layout(s, "dpp", dir)(writeTimeSeries(base, _, "o_orderdate"))
@@ -1020,13 +984,8 @@ object Ingest {
       series.filter(col("__b") === b).drop("__b").coalesce(1)
         .write.mode(SaveMode.Append).partitionBy("__part").parquet(base)
     }
-    def filesPer: Map[Int, Long] = SnapshotFs.list(base)
-      .filter(p => p.isDirectory && p.getPath.getName.startsWith("__part="))
-      .map(p => p.getPath.getName.stripPrefix("__part=").toInt ->
-        SnapshotFs.list(p.getPath.toString)
-          .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .toLong)
-      .toMap
+    def filesPer: Map[Int, Long] =
+      partitionFiles(base).map { case (p, files) => p -> files.length.toLong }.toMap
     val before = filesPer
     compactSnapshot(s, base, Long.MaxValue)
     val after = filesPer

@@ -23,31 +23,6 @@ class ExpressionsSpec extends SparkSpec {
     got.foreach(r => assert(r.getInt(0) == r.getInt(1), r.toString))
   }
 
-  test("sorted_intersect_at_least: size when reaching the bound, -1 below it") {
-    import graft.functions.SortedIntersectSize.sortedIntersectAtLeast
-    val df = Seq(
-      (Seq(1, 3, 5, 7), Seq(3, 4, 5, 8), 2),   // |∩| = 2, passes
-      (Seq(1, 3, 5, 7), Seq(3, 4, 5, 8), 3),   // |∩| = 2, early-exits
-      (Seq(1, 2), Seq(3, 4), 1),               // disjoint
-      (Seq(2, 4, 6), Seq(2, 4, 6), 3),         // full containment
-      (Seq.empty[Int], Seq(1), 0),             // degenerate bound
-    ).toDF("a", "b", "req")
-    val got = df.select(
-      sortedIntersectAtLeast(col("a"), col("b"), col("req")).as("thr"),
-      sortedIntersectSize(col("a"), col("b")).as("ref"),
-      col("req")).collect()
-    got.foreach { r =>
-      val (thr, ref, req) = (r.getInt(0), r.getInt(1), r.getInt(2))
-      if (ref >= req) assert(thr == ref, s"passing pair must return size: $r")
-      else assert(thr == -1, s"failing pair must return -1: $r")
-    }
-    // verify-attempt counter counts per-row evaluations
-    val acc = spark.sparkContext.longAccumulator("test_verify")
-    df.select(sortedIntersectAtLeast(col("a"), col("b"), col("req"),
-      Some(acc))).collect()
-    assert(acc.value == 5L, s"counter saw ${acc.value} of 5 rows")
-  }
-
   test("sorted_contain_minimal: one canonical verify per pair, value == brute force") {
     import graft.functions.SortedIntersectSize.sortedContainMinimal
     // randomized pairs: for EVERY shared-value witness row of a pair,

@@ -58,34 +58,49 @@ class ExtensionsSpec extends SparkSpec {
     assert(sig == viaCol)
   }
 
+  test("sized SQL functions reject a non-literal size with their usage") {
+    Seq(
+      "SELECT ngram_hash60(array('a', 'b'), n) FROM VALUES (2) v(n)" ->
+        "ngram_hash60(toks, n): n must be an integer literal",
+      "SELECT kmv_sketch(t, n) FROM VALUES ('a', 8) v(t, n)" ->
+        "kmv_sketch(v, k): k must be an integer literal",
+      "SELECT minhash_sketch(t, n) FROM VALUES ('a', 4) v(t, n)" ->
+        "minhash_sketch(tok, numPerms): numPerms must be an integer literal"
+    ).foreach { case (sql, usage) =>
+      val e = intercept[Exception](spark.sql(sql).collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).toList
+      assert(messages.exists(m => m != null && m.contains(usage)),
+        s"$sql: expected '$usage', got $messages")
+    }
+  }
+
+  private def lintFindings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    GlobalWindowLint.findings(df.queryExecution.optimizedPlan)
+
   test("lint flags a global window over raw (non-aggregated) input") {
-    GlobalWindowLint.flagged.clear()
-    Seq((Date.valueOf("2020-01-01"), 1L), (Date.valueOf("2020-02-01"), 2L))
+    val df = Seq((Date.valueOf("2020-01-01"), 1L), (Date.valueOf("2020-02-01"), 2L))
       .toDF("d", "v")
       .withColumn("l", lag("v", 1).over(Window.orderBy("d")))
-      .collect()
-    assert(!GlobalWindowLint.flagged.isEmpty)
+    assert(lintFindings(df).nonEmpty)
   }
 
   test("lint sees through the cache: flags a cached NON-aggregated frame") {
     // Regression for the toString.contains("Aggregate") version: a
     // cached raw frame whose rendering happens to mention "Aggregate"
     // (here via a column literally named so) must still flag.
-    GlobalWindowLint.flagged.clear()
     val cached = Seq((Date.valueOf("2020-01-01"), 1L), (Date.valueOf("2020-02-01"), 2L))
       .toDF("d", "AggregateExpressionHolder").cache()
     try {
       cached.count() // materialize the cache
-      cached
+      val df = cached
         .withColumn("l", lag("AggregateExpressionHolder", 1).over(Window.orderBy("d")))
-        .collect()
-      assert(!GlobalWindowLint.flagged.isEmpty,
+      assert(lintFindings(df).nonEmpty,
         "cached non-aggregated input under a global window must flag")
     } finally cached.unpersist()
   }
 
   test("lint stays quiet for a CACHED pre-aggregated frame (AQE leaf)") {
-    GlobalWindowLint.flagged.clear()
     val agg = Seq((Date.valueOf("2020-01-01"), 1L), (Date.valueOf("2020-01-15"), 2L))
       .toDF("d", "v")
       .groupBy(date_trunc("month", col("d")).as("m"))
@@ -93,21 +108,14 @@ class ExtensionsSpec extends SparkSpec {
       .cache()
     try {
       agg.count() // materialize: cachedPlan is an AdaptiveSparkPlanExec leaf
-      agg.withColumn("l", lag("s", 1).over(Window.orderBy("m"))).collect()
-      assert(GlobalWindowLint.flagged.isEmpty,
-        s"flagged a cached aggregate-fed global window: ${GlobalWindowLint.flagged}")
+      val found = lintFindings(agg.withColumn("l", lag("s", 1).over(Window.orderBy("m"))))
+      assert(found.isEmpty, s"flagged a cached aggregate-fed global window: $found")
     } finally agg.unpersist()
   }
 
   test("lint stays quiet for windows over pre-aggregated input") {
-    val before = {
-      GlobalWindowLint.flagged.clear()
-      Tables.monthlySeries(spark, sf0001)
-        .withColumn("l", lag("emp", 1).over(Window.orderBy("month")))
-        .collect()
-      GlobalWindowLint.flagged.size()
-    }
-    assert(before == 0,
-      s"flagged an aggregate-fed global window: ${GlobalWindowLint.flagged}")
+    val found = lintFindings(Tables.monthlySeries(spark, sf0001)
+      .withColumn("l", lag("emp", 1).over(Window.orderBy("month"))))
+    assert(found.isEmpty, s"flagged an aggregate-fed global window: $found")
   }
 }

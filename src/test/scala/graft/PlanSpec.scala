@@ -353,10 +353,10 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("no declared query plans a global window over raw input (lint sweep)") {
-    graft.plans.GlobalWindowLint.flagged.clear()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      fn(spark, sf0001).queryExecution.executedPlan // plan only, no run
-      val flags = graft.plans.GlobalWindowLint.flagged
+      // plan only, no run
+      val flags = graft.plans.GlobalWindowLint.findings(
+        fn(spark, sf0001).queryExecution.optimizedPlan)
       assert(flags.isEmpty,
         s"$name planned a raw-input global window: ${flags}")
     }

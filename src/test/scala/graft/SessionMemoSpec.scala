@@ -242,6 +242,17 @@ class SessionMemoSpec extends SparkSpec {
     assert(sites == List("Similarity.scala" -> 1), s"$needle sites: $sites")
   }
 
+  test("Ingest resolves last-write-wins in one row_number window") {
+    // upsert and upsertWithTombstones share one newest-per-key step;
+    // a second window is a hand-copied resolve (the oracle SQL strings
+    // write `row_number() OVER` and do not count)
+    val needle = "row_number().over("
+    val path = java.nio.file.Paths.get("src/main/scala/graft/sources/Ingest.scala")
+    val text = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+    val n = text.sliding(needle.length).count(_ == needle)
+    assert(n == 1, s"$needle calls in $path: $n")
+  }
+
   test("only Sessions sets session conf under src/main/scala/graft") {
     // a per-call conf.set mutates conf every concurrent client of the
     // session shares; engine-wide settings belong in Sessions.builder
