@@ -172,14 +172,8 @@ object Bench {
           .distinct.sorted.mkString("[", ",", "]")
         "\"" + q + "\":{\"built\":" + built + ",\"reused\":" + reused + "}"
       }.mkString("{", ",", "}")
-    // Diagnostic gauges (candidate-volume counters etc.): polled once
-    // after both passes — the value is the LAST invocation's count,
-    // which is what makes candidate growth attributable across legs.
-    val gaugeJson = SessionMemo.gaugeSnapshot().toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
     val full = line.dropRight(1) +
-      s""","pass_pairs":$passPairs,"gauges":$gaugeJson,"memo_pass1":${attrJson(attr1)},"memo_pass2":${attrJson(attr2)}}"""
+      s""","pass_pairs":$passPairs,"memo_pass1":${attrJson(attr1)},"memo_pass2":${attrJson(attr2)}}"""
     val out = java.nio.file.Paths.get("target", "bench_full.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out,

@@ -195,26 +195,6 @@ object SessionMemo {
     b.result()
   }
 
-  // ── Diagnostic gauges ──────────────────────────────────────────
-  // Named numeric readouts operators publish for the bench artifact
-  // (candidate-volume counters, pruning bounds) — the numbers that
-  // make cross-scale-leg growth attributable. Purely diagnostic:
-  // nothing reads a gauge to produce a result.
-
-  private val gauges = scala.collection.concurrent.TrieMap
-    .empty[String, () => Double]
-
-  /** Publish (or replace) a named gauge; `f` is polled at snapshot
-    * time, so accumulator-backed gauges report post-action values. */
-  def setGauge(name: String)(f: () => Double): Unit = {
-    gauges.put(name, f); ()
-  }
-
-  /** Current value of every published gauge. */
-  def gaugeSnapshot(): Map[String, Double] =
-    gauges.readOnlySnapshot().toMap.map { case (k, f) =>
-      k -> (try f() catch { case _: Throwable => -1.0 }) }
-
   /** Release and forget every [[once]] entry belonging to `s` (only
     * entries whose build ran — releasing never forces a build; an
     * entry mid-build is released once its build finishes), then run

@@ -307,7 +307,7 @@ object Curation {
       Text.hitRatio(t, Text.stopFr).as("s_fr"),
       Text.hitRatio(t, Text.stopEs).as("s_es"))
     val eligible = scored.filter(
-      col("n_tokens").between(10, 1000) && col("stopword_ratio") > 0.01 &&
+      Text.qualityOk(col("n_tokens"), col("stopword_ratio")) &&
         col("s_en") >= col("s_de") && col("s_en") >= col("s_fr") &&
         col("s_en") >= col("s_es"))
     val reps = Dedup.clusters(s, dir)

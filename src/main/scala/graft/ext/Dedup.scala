@@ -385,35 +385,22 @@ object Dedup {
     // establish whether THIS row holds the pair's smallest common
     // ordinal (every other witness row of the pair dies in ~one
     // binary search), and exactly the minimal row runs the threshold
-    // merge — started at the witness, heads never rescanned. The
-    // LongAccumulator gauge counts those canonical verifies: it now
-    // reads candidate PAIRS (one verify per distinct candidate pair),
-    // not witness rows — 42.0 M → 11.3 M at sf0.1 by measurement. For
-    // survivors the returned size equals the plain full-array
-    // intersect exactly, so the result — and the oracle's brute-force
-    // replay — is unchanged.
-    val verifyAcc = sorted.sparkSession.sparkContext
-      .longAccumulator("containment_verify_candidates")
-    graft.SessionMemo.setGauge("containment_verify_candidates")(() =>
-      verifyAcc.value.toDouble)
+    // merge — started at the witness, heads never rescanned: one
+    // verify per distinct candidate pair, not per witness row (42.0 M
+    // → 11.3 M verifies at sf0.1 by measurement). For survivors the
+    // returned size equals the plain full-array intersect exactly, so
+    // the result — and the oracle's brute-force replay — is unchanged.
     val required = ceil(lit(ContainT) * col("na")).cast("int")
     val csize = graft.functions.SortedIntersectSize
       .sortedContainMinimal(col("ords_a"), col("ords_b"), required,
-        col("ia"), col("jb"), Some(verifyAcc))
-    // the survivor-column recompute is gauge-SILENT (counter = None):
-    // with the shared accumulator it re-counted every qualifying row
-    // a second time (+59% on this corpus's near-dup density),
-    // polluting the candidate readout
-    val csizeOut = graft.functions.SortedIntersectSize
-      .sortedContainMinimal(col("ords_a"), col("ords_b"), required,
-        col("ia"), col("jb"), None)
+        col("ia"), col("jb"))
     pa.join(pb,
         pa("ord") === pb("ord") && pa("salt") === pb("salt") &&
           col("na") < col("nb") &&
           lit(1) + least(col("na") - col("ia") - 1,
             col("nb") - col("jb") - 1) >= ceil(lit(ContainT) * col("na")) &&
           csize >= required)
-      .withColumn("c", csizeOut)
+      .withColumn("c", csize)
       .withColumn("containment", col("c") / col("na"))
       // argmax container per contained doc: lexicographic struct max
       // on (containment, −nb, −doc_b) — a map-side-combining hash
@@ -784,7 +771,6 @@ object Dedup {
     * Jaccard = fraction of agreeing signature positions
     * (`zip_with` + filter + size). */
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val rowsPerBand = NumPerm / Bands
     // session-memoized: the banded/sa/sb branches would otherwise
     // re-run the signature aggregation three times (ReusedExchange
     // shares the shuffle but each branch re-merges the aggregate)
@@ -804,29 +790,20 @@ object Dedup {
     // corpus-sized, a forced broadcast dies at 100 TB, and unhinted
     // the array column defeats Catalyst's size estimate into a
     // ~30×-slower sort-merge.
-    val withKeys = docs.select(col("doc_id"), col("sig"),
-      array((0 until Bands).map(b =>
-        xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)
-        .as("bks"))
-    val banded = withKeys.select(col("doc_id"), col("sig"), col("bks"),
-      posexplode(col("bks")).as(Seq("band", "bucket")))
+    val banded = bandedRows(docs)
     val a = banded.toDF("doc_a", "sig_a", "bks_a", "band", "bucket")
     val b = banded.toDF("doc_b", "sig_b", "bks_b", "band", "bucket")
       .hint("shuffle_hash")
-    val firstCollision = (0 until Bands - 1).map { bp =>
-      (a("band") <= lit(bp)) ||
-        (element_at(col("bks_a"), bp + 1) =!= element_at(col("bks_b"), bp + 1))
-    }.reduce(_ && _)
     // full predicate authored in the join condition, cheap conjuncts
     // first (see ppPairsInline: a filter left above the join is
     // pushed in AT THE FRONT and the per-pair array scan then runs on
     // every raw bucket pair); survivors recompute the estimate for
     // the output column at near-dup density — free
-    val est = graft.functions.ArrayAgreeCount
-      .arrayAgreeCount(col("sig_a"), col("sig_b")) / lit(NumPerm)
+    val est = estJaccard(col("sig_a"), col("sig_b"))
     a.join(b,
         a("band") === b("band") && a("bucket") === b("bucket") &&
-          col("doc_a") < col("doc_b") && firstCollision && est >= lit(0.9))
+          col("doc_a") < col("doc_b") &&
+          firstCollision(a("band"), col("bks_a"), col("bks_b")) && est >= lit(0.9))
       .withColumn("est_jaccard", est)
       .select(col("doc_a"), col("doc_b"), r4(col("est_jaccard")).as("est_jaccard"))
       .orderBy("doc_a", "doc_b")
@@ -866,9 +843,9 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Banded rows of a signature frame (the [[minhashLsh]] band keys,
-    * shared with the probe faces): (doc_id, sig, bks, band, bucket),
-    * plus any extra columns `sigs` carries. */
+  /** Banded rows of a signature frame, the xxhash64 band keys that
+    * [[minhashLsh]] and the probe faces join on: (doc_id, sig, bks,
+    * band, bucket), plus any extra columns `sigs` carries. */
   private def bandedRows(sigs: DataFrame): DataFrame = {
     val rowsPerBand = NumPerm / Bands
     val extra = sigs.columns.filterNot(Set("doc_id", "sig")).map(col).toSeq
@@ -879,6 +856,19 @@ object Dedup {
       .select(Seq(col("doc_id"), col("sig"), col("bks")) ++ extra :+
         posexplode(col("bks")).as(Seq("band", "bucket")): _*)
   }
+
+  /** The exactly-once gate of a band join: keep a pair only in the
+    * first band where it collides, i.e. where no earlier band's keys
+    * (`bksA`, `bksB`) also agree — so no pair `.distinct()` is needed. */
+  private def firstCollision(band: Column, bksA: Column, bksB: Column): Column =
+    (0 until Bands - 1).map { bp =>
+      (band <= lit(bp)) || (element_at(bksA, bp + 1) =!= element_at(bksB, bp + 1))
+    }.reduce(_ && _)
+
+  /** Estimated Jaccard of two MinHash signatures: the fraction of
+    * agreeing positions. */
+  private def estJaccard(sigA: Column, sigB: Column): Column =
+    graft.functions.ArrayAgreeCount.arrayAgreeCount(sigA, sigB) / lit(NumPerm)
 
   /** The index-probe primitive both incremental faces share: the
     * probe batch's banded rows equi-join the standing index's banded
@@ -896,17 +886,13 @@ object Dedup {
     val index = bandedRows(indexSigs)
       .toDF("doc_i", "sig_i", "bks_i", "in_probe", "band", "bucket")
       .hint("shuffle_hash")
-    val firstCollision = (0 until Bands - 1).map { bp =>
-      (probe("band") <= lit(bp)) ||
-        (element_at(col("bks_p"), bp + 1) =!= element_at(col("bks_i"), bp + 1))
-    }.reduce(_ && _)
-    val est = graft.functions.ArrayAgreeCount
-      .arrayAgreeCount(col("sig_p"), col("sig_i")) / lit(NumPerm)
+    val est = estJaccard(col("sig_p"), col("sig_i"))
     probe.join(index,
         probe("band") === index("band") && probe("bucket") === index("bucket") &&
           col("doc_p") =!= col("doc_i") &&
           (!col("in_probe") || col("doc_p") < col("doc_i")) &&
-          firstCollision && est >= lit(0.9))
+          firstCollision(probe("band"), col("bks_p"), col("bks_i")) &&
+          est >= lit(0.9))
       .select(least(col("doc_p"), col("doc_i")).as("doc_a"),
         greatest(col("doc_p"), col("doc_i")).as("doc_b"),
         r4(est).as("est_jaccard"))
@@ -956,7 +942,7 @@ object Dedup {
     val bk = minhashBucketsCached(s, dir, docs)
     val isDelta = col("doc_id") % DeltaMod === 0
     // the standing state a prior pass persisted: the base-only map
-    val baseMap = graft.SessionMemo.cached(s, dir, "minhash_clusters_base") {
+    val baseMap = clusterMap(s, dir, "minhash_clusters_base") {
       clustersFromBuckets(bk.filter(!isDelta))
     }
     foldClusterBatch(bk.filter(!isDelta), baseMap, bk.filter(isDelta))
@@ -1032,7 +1018,7 @@ object Dedup {
     * (and the bench) they are built once and REUSED here. Output one
     * row per document: (doc_id, cluster_rep, cluster_size). */
   def crossModalClusters(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cached(s, dir, "crossmodal_clusters") {
+    clusterMap(s, dir, "crossmodal_clusters") {
       // each family map emits (rep → member) star edges; rep is the
       // component-MIN member id, so rep < doc orients every edge the
       // way the fixpoint expects (h_a < h_b), and singleton rows
@@ -1075,7 +1061,7 @@ object Dedup {
       // left join on the finished node→root map
       val ids = graft.Tables.documents(s, dir)
         .select(col("doc_id"), col("doc_id").as("node"))
-      clustersFromHashGraph(ids, edges).orderBy("doc_id")
+      clustersFromHashGraph(ids, edges, "doc_id")
     }
 
   /** Blocking-quality report — the dedup machinery measuring ITSELF
@@ -1118,15 +1104,11 @@ object Dedup {
     val a = banded.toDF("doc_a", "sig_a", "bks_a", "band", "bucket")
     val b = banded.toDF("doc_b", "sig_b", "bks_b", "band", "bucket")
       .hint("shuffle_hash")
-    val firstCollision = (0 until Bands - 1).map { bp =>
-      (a("band") <= lit(bp)) ||
-        (element_at(col("bks_a"), bp + 1) =!= element_at(col("bks_b"), bp + 1))
-    }.reduce(_ && _)
-    val est = graft.functions.ArrayAgreeCount
-      .arrayAgreeCount(col("sig_a"), col("sig_b")) / lit(NumPerm)
+    val est = estJaccard(col("sig_a"), col("sig_b"))
     val counts = a.join(b,
         a("band") === b("band") && a("bucket") === b("bucket") &&
-          col("doc_a") < col("doc_b") && firstCollision)
+          col("doc_a") < col("doc_b") &&
+          firstCollision(a("band"), col("bks_a"), col("bks_b")))
       .agg(count(lit(1)).as("candidate_pairs"),
         sum(when(est >= lit(0.9), 1L).otherwise(0L)).as("true_pairs"))
     val nDocs = sigs.agg(count(lit(1)).as("n_docs"))
@@ -1207,72 +1189,66 @@ object Dedup {
 
   /** Connected components over a bipartite (doc_id, bucket) graph.
     * Returns one row per doc: (doc_id, cluster_rep = component-min
-    * doc_id, cluster_size).
-    *
-    * Algorithm: star-contract each bucket to edges (member →
-    * bucket-min member), then alternate LARGE-STAR / SMALL-STAR
-    * (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond"): large-star re-points every neighbor LARGER than a node
-    * at the minimum of its closed neighborhood; small-star re-points
-    * the node and its SMALLER neighbors at that minimum. The
-    * alternation contracts path length multiplicatively, converging
-    * in O(log d) rounds where plain min-label propagation needs O(d)
-    * rounds on diameter-d components — chained near-dups (doc A ~ B ~
-    * C ... sharing successive band buckets) are exactly the long-path
-    * regime, and at 100 TB the round count is the serial bottleneck.
-    *
-    * 100 TB shape: every round shuffles only (long, long) edges —
-    * never documents; edge count never grows (large-star emits
-    * exactly one edge per input edge, small-star at most one per edge
-    * plus one per center). Rounds run on [[graft.SessionMemo.iterate]]
-    * (per-round `localCheckpoint`; swap for reliable `checkpoint` on a
-    * real cluster), so executor storage is O(1) in rounds.
-    * Convergence is the star-forest test (unique parent + no chains),
-    * checked on the just-checkpointed edges. At the fixpoint each
-    * component is one star rooted at its minimum member — both
-    * transforms preserve connectivity, so the roots ARE the
-    * component minima. Output is LINEAR in corpus size where the
-    * `dedup_*_pairs` queries are quadratic in duplicate-cluster size
-    * — the form a pipeline can actually act on (keep rep, drop the
-    * rest). */
+    * doc_id, cluster_size). The buckets star-contract ([[starEdges]]:
+    * member → bucket-min member) into the [[clustersFromHashGraph]]
+    * assembly with identity nodes: every doc is its own node, so the
+    * forest root IS the component-min doc and "min id per root" is the
+    * root. Docs whose buckets are all singletons have no edge and
+    * re-enter as their own node. Output is LINEAR in corpus size where
+    * the `dedup_*_pairs` queries are quadratic in duplicate-cluster
+    * size — the form a pipeline can actually act on (keep rep, drop
+    * the rest). */
   private[graft] def clustersFromBuckets(bucketsIn: DataFrame): DataFrame = {
     val sess = bucketsIn.sparkSession
-    // Materialize the bucket graph ONCE — its lineage may be a whole
-    // candidate-generation pipeline (the embedding variant feeds the
-    // verified near-dup pairs in), which must not re-run per access.
+    // Materialize the bucket graph ONCE: it feeds both the edges and
+    // the node set, and its lineage may be a whole evidence pipeline
+    // ([[foldClusterBatch]]'s union of batch, touched and membership
+    // buckets), which must not re-run per access.
     val (buckets, bucketIds) = checkpointTracked(bucketsIn)
-    val universe = buckets.select("doc_id").distinct()
-    // star contraction: every bucket member points at the bucket min;
-    // singleton-bucket docs drop out here and return via `universe`
-    val bmin = buckets.groupBy("bucket").agg(min("doc_id").as("v"))
-    val forest = ccFixpoint(
-      buckets.join(bmin.hint("shuffle_hash"), Seq("bucket"))
-        .select(col("doc_id").as("u"), col("v"))
-        .where(col("u") =!= col("v")).distinct())
-    // star forest: edges = (member → component-min root); singletons
-    // re-enter as their own rep via the left join on the universe
-    val rep = universe
-      .join(forest.frame.toDF("doc_id", "r").hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("r"), col("doc_id")).as("rep"))
-    val sizes = rep.groupBy("rep").agg(count(lit(1)).as("cluster_size"))
-    val (out, outIds) = checkpointTracked(
-      rep.join(sizes.hint("shuffle_hash"), Seq("rep"))
-        .select(col("doc_id"), col("rep").as("cluster_rep"), col("cluster_size"))
-        .orderBy("doc_id"))
-    // the result stands alone now — drop the loop's working set; the
-    // result's own blocks release on SessionMemo.clear
-    release(sess, bucketIds ++ forest.ids)
-    graft.SessionMemo.onClear(sess)(release(sess, outIds))
+    val nodes = buckets.select("doc_id").distinct()
+      .select(col("doc_id"), col("doc_id").as("node"))
+    val out = clustersFromHashGraph(nodes, starEdges(buckets, "h_b", "h_a"), "doc_id")
+    release(sess, bucketIds)
     out
   }
 
-  /** The large-star/small-star fixpoint itself (Kiveris et al.),
-    * shared by [[clustersFromBuckets]] and [[clustersFromHashGraph]]:
-    * takes an oriented exactly-once edge frame (u, v; v < u), returns
+  /** Star contraction of a (doc_id, bucket) membership frame: one
+    * edge per bucket member → the bucket's min member, exactly once;
+    * self edges drop, so singleton buckets contribute nothing. `u`
+    * names the member column, `v` the min. The cluster maps and the
+    * PageRank/LPA star graph share it. */
+  private def starEdges(buckets: DataFrame, u: String, v: String): DataFrame = {
+    val bmin = buckets.groupBy("bucket").agg(min("doc_id").as("m"))
+    buckets.join(bmin.hint("shuffle_hash"), Seq("bucket"))
+      .filter(col("doc_id") =!= col("m"))
+      .select(col("doc_id").as(u), col("m").as(v)).distinct()
+  }
+
+  /** The large-star/small-star fixpoint (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond"): large-star re-points every
+    * neighbor LARGER than a node at the minimum of its closed
+    * neighborhood; small-star re-points the node and its SMALLER
+    * neighbors at that minimum. The alternation contracts path length
+    * multiplicatively, converging in O(log d) rounds where plain
+    * min-label propagation needs O(d) rounds on diameter-d components
+    * — chained near-dups (doc A ~ B ~ C ... sharing successive band
+    * buckets) are exactly the long-path regime, and at 100 TB the
+    * round count is the serial bottleneck.
+    *
+    * Takes an oriented exactly-once edge frame (u, v; v < u), returns
     * the converged star forest (member u → component-min v) as a
     * checkpointed frame with its tracked RDD ids — the CALLER releases
     * those once its derived result is materialized — and the round
-    * count. Edge count never grows round-over-round. */
+    * count. Every round shuffles only (long, long) edges, and the edge
+    * count never grows (large-star emits exactly one edge per input
+    * edge, small-star at most one per edge plus one per center).
+    * Rounds run on [[graft.SessionMemo.iterate]] (per-round
+    * `localCheckpoint`; swap for reliable `checkpoint` on a real
+    * cluster), so executor storage is O(1) in rounds. Convergence is
+    * the star-forest test (unique parent + no chains), checked on the
+    * just-checkpointed edges. At the fixpoint each component is one
+    * star rooted at its minimum member — both transforms preserve
+    * connectivity, so the roots ARE the component minima. */
   private[graft] def ccFixpoint(initialEdges: DataFrame): Rounds = {
     val sess = initialEdges.sparkSession
     val (edges0, edgeIds0) = checkpointTracked(initialEdges)
@@ -1315,33 +1291,46 @@ object Dedup {
     * ~33M-row string-keyed bucket frame whose contraction join OOMed
     * a 32-partition shuffled-hash build. Here the fixpoint runs over
     * (long, long) edges only — the graph family's proven sf10 shape —
-    * and the docs join the finished hash→root map once. Reachability,
-    * hence the cluster map, is identical to the doc-level pair
-    * graph's: same-sketch docs collapse into one node, verified pairs
-    * bridge nodes. `idHash`: 2 columns, (id, hash). Output (doc_id,
-    * cluster_rep = component-min id, cluster_size). */
+    * and the ids join the finished hash→root map once. Reachability,
+    * hence the cluster map, is identical to the id-level pair
+    * graph's: same-sketch ids collapse into one node, verified pairs
+    * bridge nodes.
+    *
+    * The one assembly of every cluster map: `idHash` has 2 columns,
+    * (id, hash); the output is (`idCol`, cluster_rep = component-min
+    * id, cluster_size), ordered by `idCol`. It is a checkpoint that
+    * stays pinned until [[graft.SessionMemo.clear]] — exactly the
+    * frame consumers read. */
   private[graft] def clustersFromHashGraph(idHash: DataFrame,
-      hashPairs: DataFrame): DataFrame = {
+      hashPairs: DataFrame, idCol: String): DataFrame = {
     val sess = idHash.sparkSession
-    val (hs, hsIds) = checkpointTracked(idHash.toDF("doc_id", "hash"))
     val forest = ccFixpoint(
       hashPairs.select(col("h_b").as("u"), col("h_a").as("v")))
     // hash → component-min hash; absent hashes are singleton nodes
-    val withRoot = hs
+    val withRoot = idHash.toDF(idCol, "hash")
       .join(forest.frame.toDF("hash", "root").hint("shuffle_hash"), Seq("hash"), "left")
-      .select(col("doc_id"), coalesce(col("root"), col("hash")).as("root"))
-    // component-min DOC id is the rep the pair-graph oracle states —
-    // one aggregate + one join over the id space, all long keys
+      .select(col(idCol), coalesce(col("root"), col("hash")).as("root"))
+    // component-min id is the rep the pair-graph oracle states — one
+    // aggregate + one join over the id space, all long keys
     val reps = withRoot.groupBy("root").agg(
-      min("doc_id").as("cluster_rep"), count(lit(1)).as("cluster_size"))
+      min(idCol).as("cluster_rep"), count(lit(1)).as("cluster_size"))
     val (out, outIds) = checkpointTracked(
       withRoot.join(reps.hint("shuffle_hash"), Seq("root"))
-        .select(col("doc_id"), col("cluster_rep"), col("cluster_size"))
-        .orderBy("doc_id"))
-    release(sess, hsIds ++ forest.ids)
+        .select(col(idCol), col("cluster_rep"), col("cluster_size"))
+        .orderBy(idCol))
+    release(sess, forest.ids)
     graft.SessionMemo.onClear(sess)(release(sess, outIds))
     out
   }
+
+  /** A session-memoized cluster map, keyed `<name>:<dir>` like every
+    * cached memo. `build` returns a [[clustersFromHashGraph]]
+    * checkpoint, which is the map's one pinned copy: the assembly's
+    * `onClear` hook releases it, so the memo puts no cache on top and
+    * releases nothing itself. */
+  private[graft] def clusterMap(s: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame =
+    graft.SessionMemo.once(s, s"$name:$dir")(build)(_ => ())
 
   /** Cluster-representative dedup — the usable form of near-dup
     * detection at scale: instead of emitting candidate PAIRS
@@ -1357,7 +1346,7 @@ object Dedup {
     val docs = minhashSignatures(s, dir)
     // memoized: Curation.pipeline re-reads the cluster map, and the
     // CC fixpoint (several shuffle rounds) must not re-run per query
-    graft.SessionMemo.cached(s, dir, "minhash_clusters") {
+    clusterMap(s, dir, "minhash_clusters") {
       clustersFromBuckets(minhashBucketsCached(s, dir, docs))
     }
   }
@@ -1410,8 +1399,7 @@ object Dedup {
       col("doc_id"),
       size(t).cast("long").as("n_tokens"),
       r4(Text.hitRatio(t, Text.stopEn)).as("stop_ratio"))
-      .withColumn("quality_ok",
-        col("n_tokens").between(10, 1000) && col("stop_ratio") > 0.01)
+      .withColumn("quality_ok", Text.qualityOk(col("n_tokens"), col("stop_ratio")))
       .drop("stop_ratio")
     val scored = clusters(s, dir)
       .join(perDoc.hint("shuffle_hash"), Seq("doc_id"))
@@ -1532,10 +1520,9 @@ object Dedup {
     * identical to the pair graph's, which is what the brute-force
     * oracle states. */
   def simhashClusters(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cached(s, dir, "simhash_clusters") {
+    clusterMap(s, dir, "simhash_clusters") {
       clustersFromHashGraph(simhashSketch(s, dir).select("doc_id", "simhash"),
-          simhashHashPairs(s, dir))
-        .orderBy("doc_id")
+        simhashHashPairs(s, dir), "doc_id")
     }
 
   private val EditMaxDist = 10  // absolute char-edit budget
@@ -1686,11 +1673,7 @@ object Dedup {
   private def neardupStarEdges(s: SparkSession, dir: String,
       sigs: DataFrame): DataFrame =
     graft.SessionMemo.cached(s, dir, "neardup_star_edges") {
-      val buckets = minhashBucketsCached(s, dir, sigs)
-      val bmin = buckets.groupBy("bucket").agg(min("doc_id").as("m"))
-      val e0 = buckets.join(bmin.hint("shuffle_hash"), Seq("bucket"))
-        .filter(col("doc_id") =!= col("m"))
-        .select(col("doc_id").as("src"), col("m").as("dst")).distinct()
+      val e0 = starEdges(minhashBucketsCached(s, dir, sigs), "src", "dst")
       e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(col("dst"))
     }

@@ -788,12 +788,10 @@ object Multimodal {
     * components. Output (media_id, cluster_rep, cluster_size) — the
     * form a curation pipeline acts on (keep rep, drop the rest). */
   def imageClusters(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cached(s, dir, "image_clusters") {
+    Dedup.clusterMap(s, dir, "image_clusters") {
       Dedup.clustersFromHashGraph(
-          imageHashFrame(s, dir).select(col("media_id"), col("dhash")),
-          imageHashPairs(s, dir))
-        .withColumnRenamed("doc_id", "media_id")
-        .orderBy("media_id")
+        imageHashFrame(s, dir).select(col("media_id"), col("dhash")),
+        imageHashPairs(s, dir), "media_id")
     }
 
   // DuckDB replay of the dHash bits on the 9×8 raster: BYTE p of the

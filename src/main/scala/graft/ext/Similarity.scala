@@ -1191,17 +1191,15 @@ object Similarity {
     * (`sim_knn_graph`) closed under mutuality + recursive
     * reachability. */
   def knnClusters(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cached(s, dir, "knn_clusters") {
+    Dedup.clusterMap(s, dir, "knn_clusters") {
       val e = knnEdges(s, dir).select("vec_id", "neighbor_id")
       val mutual = e.toDF("a", "b")
         .join(e.toDF("b", "a").hint("shuffle_hash"), Seq("a", "b"), "left_semi")
       val pairs = mutual.filter(col("a") < col("b"))
         .select(col("a").as("h_a"), col("b").as("h_b"))
       val ids = vectors(s, dir)
-        .select(col("vec_id").as("doc_id"), col("vec_id").as("hash"))
-      Dedup.clustersFromHashGraph(ids, pairs)
-        .withColumnRenamed("doc_id", "vec_id")
-        .orderBy("vec_id")
+        .select(col("vec_id"), col("vec_id").as("hash"))
+      Dedup.clustersFromHashGraph(ids, pairs, "vec_id")
     }
 
   /** Candidate volume probe for `SimilaritySpec`'s linearity bound:
@@ -1251,14 +1249,12 @@ object Similarity {
   def embeddingClusters(s: SparkSession, dir: String): DataFrame =
     // memoized like the text-side cluster map: the CC fixpoint must
     // not re-run per invocation (Curation-style consumers re-read it)
-    graft.SessionMemo.cached(s, dir, "embedding_clusters") {
+    Dedup.clusterMap(s, dir, "embedding_clusters") {
       val pairs = verifiedNearDupPairs(s, dir)
         .select(col("vec_a").as("h_a"), col("vec_b").as("h_b"))
       val ids = vectors(s, dir)
-        .select(col("vec_id").as("doc_id"), col("vec_id").as("hash"))
-      Dedup.clustersFromHashGraph(ids, pairs)
-        .withColumnRenamed("doc_id", "vec_id")
-        .orderBy("vec_id")
+        .select(col("vec_id"), col("vec_id").as("hash"))
+      Dedup.clustersFromHashGraph(ids, pairs, "vec_id")
     }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,

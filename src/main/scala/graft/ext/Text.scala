@@ -48,6 +48,11 @@ object Text {
   private def fannedDocs(s: SparkSession, dir: String): DataFrame =
     Tables.fanOut(s, Tables.documents(s, dir))
 
+  /** The text-quality acceptance rule: 10 to 1000 tokens, and a
+    * stopword ratio (rounded to 4 decimals) above 0.01. */
+  private[ext] def qualityOk(nTokens: Column, stopRatio: Column): Column =
+    nTokens.between(10, 1000) && stopRatio > 0.01
+
   /** Quality scoring: length, token stats, punctuation + stopword
     * ratios, and a simple acceptance flag — the filters a pretraining
     * data pipeline runs before anything expensive. */
@@ -63,8 +68,7 @@ object Text {
         r4(length(regexp_replace(col("text"), "[^.,;:!?]", "")) /
           length(col("text"))).as("punct_ratio"),
         r4(hitRatio(t, stopEn)).as("stopword_ratio"))
-      .withColumn("quality_ok",
-        col("n_tokens").between(10, 1000) && col("stopword_ratio") > 0.01)
+      .withColumn("quality_ok", qualityOk(col("n_tokens"), col("stopword_ratio")))
       .orderBy("doc_id")
   }
 
@@ -341,39 +345,19 @@ object Text {
       .orderBy("doc_id")
   }
 
-  private val CmsEps = 0.001   // over-estimate ≤ ε·N with prob 1−δ
-  private val CmsConf = 0.99   // 1−δ
-  private val CmsSeed = 42
-
   /** Count–min sketch heavy hitters — the sketch form of [[termFreq]]
     * for 100 TB: token counts live in a fixed d×w counter grid built
     * in one `treeAggregate` pass (map-side partial sketches merge
     * pairwise; the driver holds kilobytes, never the vocabulary —
     * where the exact groupBy shuffles one row per distinct token,
     * unbounded as the vocabulary grows). Like the self-certifying
-    * `percentile_approx` query, the sketch is CERTIFIED in-plan: for
-    * each exact top-20 term the CMS point estimate must satisfy the
-    * one-sided guarantee exact ≤ est ≤ exact + ε·N (a count-min
-    * sketch never under-counts; it over-counts by at most ε·N at the
-    * declared confidence). The oracle expects TRUE, so a broken
-    * sketch hash-mismatches. Only the exact counts and the
-    * certification are output — the estimates themselves are
-    * engine-specific. The 20-term collect is bounded by the top-k
-    * size, not the corpus. */
-  def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    val toks = fannedDocs(s, dir)
-      .select(explode(tokens(col("text"))).as("token"))
-    val cms = toks.stat.countMinSketch("token", CmsEps, CmsConf, CmsSeed)
-    val top = termFreq(s, dir)
-    val terms = top.select("token").collect().map(_.getString(0))
-    val est = terms.map(t => t -> cms.estimateCount(t)).toMap
-    val slack = math.ceil(CmsEps * cms.totalCount()).toLong
-    top
-      .withColumn("est", element_at(typedlit(est), col("token")))
-      .withColumn("within_bound",
-        col("est") >= col("n") && col("est") <= col("n") + lit(slack))
-      .select(col("token"), col("n"), col("within_bound"))
-  }
+    * `percentile_approx` query, the sketch is CERTIFIED in-plan
+    * against the exact top-20 terms
+    * ([[graft.operators.Relational.cmsCertifiedTop]]). */
+  def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Relational.cmsCertifiedTop[String](
+      fannedDocs(s, dir).select(explode(tokens(col("text"))).as("token")),
+      termFreq(s, dir))
 
   /** Unigram language-model scoring — quality scoring v2: per-doc
     * cross-entropy (nats/token) and perplexity under the corpus's own
@@ -473,8 +457,7 @@ object Text {
         col("source"),
         size(t).cast("long").as("n_tokens"),
         r4(hitRatio(t, stopEn)).as("stopword_ratio"))
-      .withColumn("ok",
-        col("n_tokens").between(10, 1000) && col("stopword_ratio") > 0.01)
+      .withColumn("ok", qualityOk(col("n_tokens"), col("stopword_ratio")))
       .groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),

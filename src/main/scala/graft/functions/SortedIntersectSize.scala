@@ -104,16 +104,15 @@ object SortedIntersectSize {
   /** Column-API entry point for the minimal-witness containment
     * verify. */
   def sortedContainMinimal(a: Column, b: Column, required: Column,
-      ia: Column, jb: Column,
-      counter: Option[org.apache.spark.util.LongAccumulator] = None): Column =
+      ia: Column, jb: Column): Column =
     GraftShims.column(SortedContainMinimal(
       GraftShims.expression(a), GraftShims.expression(b),
       GraftShims.expression(required), GraftShims.expression(ia),
-      GraftShims.expression(jb), counter))
+      GraftShims.expression(jb)))
 }
 
 /** Minimal-witness containment verify: `|A ∩ B|` when it reaches
-  * `required` (containment needs |A∩B| ≥ ⌈t·|A|⌉), else −1, counted
+  * `required` (containment needs |A∩B| ≥ ⌈t·|A|⌉), else −1, verified
   * ONCE per candidate pair. Prefix-filtered candidate joins emit one
   * row per SHARED PREFIX ORDINAL: a pair sharing k
   * bounded-prefix ordinals reaches the verify k times, and for true
@@ -151,12 +150,9 @@ object SortedIntersectSize {
   * arithmetic and the oracle's brute-force replay are unchanged; the
   * only difference is each pair yields ONE verified row instead of k
   * identical ones (the consumer's argmax was already
-  * duplicate-insensitive). `counter` counts CANONICAL verify attempts
-  * — one per distinct candidate pair that reaches step 3 — so the
-  * gauge now reads candidate PAIRS, not witness rows. */
+  * duplicate-insensitive). */
 case class SortedContainMinimal(aArr: Expression, bArr: Expression,
-    required: Expression, ia: Expression, jb: Expression,
-    counter: Option[org.apache.spark.util.LongAccumulator])
+    required: Expression, ia: Expression, jb: Expression)
     extends Expression {
 
   override def children: Seq[Expression] = Seq(aArr, bArr, required, ia, jb)
@@ -212,7 +208,6 @@ case class SortedContainMinimal(aArr: Expression, bArr: Expression,
       if (lo < wj && by(lo) == v) return -1
       p += 1
     }
-    counter.foreach(_.add(1L))
     // threshold merge from the witness, witness pre-counted
     var i = wi + 1; var j = wj + 1; var c = 1
     while (i < n1 && j < n2 &&
@@ -237,11 +232,6 @@ case class SortedContainMinimal(aArr: Expression, bArr: Expression,
     val j = ctx.freshName("j"); val c = ctx.freshName("c")
     val x = ctx.freshName("x"); val y = ctx.freshName("y")
     val rem = ctx.freshName("rem"); val done = ctx.freshName("done")
-    val count = counter.map { acc =>
-      val ref = ctx.addReferenceObj("verifyCounter", acc,
-        "org.apache.spark.util.LongAccumulator")
-      s"$ref.add(1L);"
-    }.getOrElse("")
     val body =
       s"""
          |final int $n1 = ${aC.value}.numElements();
@@ -268,7 +258,6 @@ case class SortedContainMinimal(aArr: Expression, bArr: Expression,
          |  }
          |}
          |if (!$done) {
-         |  $count
          |  int $i = ${iC.value} + 1, $j = ${jC.value} + 1;
          |  $c = 1;
          |  while ($i < $n1 && $j < $n2) {

@@ -917,12 +917,17 @@ object Relational {
     * certification term, dropped at 100 TB exactly like the certified
     * profiler's exact ndv) and `within_bound`, with the upper bound
     * stated in pure integers (`3·|A|·|B| / W` ≥ the e/W bound). */
-  /** CMS bucket-count sketch of a key frame (column `k`): each key
-    * lands in [[JcmsD]] (row, md5-bucket) cells; the bucket counts
-    * are the count-min rows the join-cardinality inner product reads.
-    * md5-seeded, so DuckDB replays the identical cells.
+  /** CMS bucket-count sketches of every column of a key frame, in ONE
+    * scan: each key lands in [[JcmsD]] (key index, depth, md5-bucket)
+    * cells per column; the bucket counts are the count-min rows the
+    * join-cardinality inner product reads. md5-seeded, so DuckDB
+    * replays the identical cells; the seed never involves the
+    * column's NAME or index, so a key's cells are the same whether it
+    * is sketched alone or beside others. r12 collected `l_orderkey`
+    * and `l_partkey` as two separate lineitem aggregates, so the
+    * statistics pass cost 2× the fact I/O it exists to optimize.
     *
-    * ONE md5 per key row, not one per depth (r13): the [[JcmsD]]
+    * ONE md5 per key value, not one per depth (r13): the [[JcmsD]]
     * depth buckets are DISJOINT 9-bit windows of the single 60-bit
     * hash (`(h >> 9d) mod 512`, 36 of 60 bits used) — the
     * Kirsch–Mitzenmacher trick of deriving a hash family from one
@@ -930,54 +935,29 @@ object Relational {
     * string-concats + md5 digests per input row, which made the
     * statistics pass — not the joins it prices — the dominant term of
     * `rel_cbo_join_order` at sf10. */
-  private def cmsKeySketch(df: DataFrame): DataFrame =
-    df.select(graft.functions.Md5Hash60.md5Hash60(
-        concat(lit("jcms:"), col("k").cast("string"))).as("h"))
-      .select(explode(array((0 until JcmsD).map(d =>
-        struct(lit(d).as("d"),
-          pmod(shiftright(col("h"), 9 * d), lit(JcmsW)).as("b"))): _*))
-        .as("db"))
-      .groupBy(col("db.d").as("d"), col("db.b").as("b"))
-      .agg(count(lit(1)).as("c"))
-
-  /** A side's CMS sketch collected to the driver — ≤ [[JcmsD]]·
-    * [[JcmsW]] (d, bucket, count) cells, the J2 bounded-driver-data
-    * pattern: ONE scan of the side yields every statistic the CBO
-    * reads (join-cardinality inner products against any other sketch,
-    * and the side's own row count), exactly how a planner holds
-    * per-table sketch state at 100 TB. */
-  private[graft] def cmsCollect(keys: DataFrame): Array[(Int, Long, Long)] =
-    cmsKeySketch(keys).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-
-  /** TWO key sketches of the same frame in ONE scan (columns `k0`,
-    * `k1`) — r12 collected `l_orderkey` and `l_partkey` as two
-    * separate lineitem aggregates, so the statistics pass cost 2× the
-    * fact I/O it exists to optimize. Each row lands in 2·[[JcmsD]]
-    * (key, depth, md5-bucket) cells; one pre-combined groupBy carries
-    * ≤ 2·[[JcmsD]]·[[JcmsW]] cells to the driver. Cell hashes are
-    * identical to [[cmsKeySketch]]'s (the seed never involved the
-    * key's NAME), so the estimates — and the oracle's replay — are
-    * unchanged. */
-  private[graft] def cmsKeySketchBoth(df: DataFrame): DataFrame =
-    df.select((0 until 2).map(ki =>
-        graft.functions.Md5Hash60.md5Hash60(
-          concat(lit("jcms:"), col(s"k$ki").cast("string"))).as(s"h$ki")): _*)
+  private[graft] def cmsKeySketch(df: DataFrame): DataFrame = {
+    val keys = df.columns.indices
+    df.select(keys.map(ki => graft.functions.Md5Hash60.md5Hash60(
+        concat(lit("jcms:"), col(df.columns(ki)).cast("string"))).as(s"h$ki")): _*)
       .select(explode(array((for {
-        ki <- 0 until 2; d <- 0 until JcmsD
+        ki <- keys; d <- 0 until JcmsD
       } yield struct(lit(ki).as("ki"), lit(d).as("d"),
-        pmod(shiftright(col(s"h$ki"), 9 * d), lit(JcmsW)).as("b")))
-        .toSeq: _*)).as("kdb"))
+        pmod(shiftright(col(s"h$ki"), 9 * d), lit(JcmsW)).as("b"))): _*)).as("kdb"))
       .groupBy(col("kdb.ki").as("ki"), col("kdb.d").as("d"),
         col("kdb.b").as("b"))
       .agg(count(lit(1)).as("c"))
+  }
 
-  private[graft] def cmsCollect2(df: DataFrame)
-      : (Array[(Int, Long, Long)], Array[(Int, Long, Long)]) = {
-    val cells = cmsKeySketchBoth(df).collect()
+  /** The [[cmsKeySketch]] of each column of `df`, collected to the
+    * driver — ≤ [[JcmsD]]·[[JcmsW]] (d, bucket, count) cells per
+    * column, the J2 bounded-driver-data pattern: ONE scan yields every
+    * statistic the CBO reads (join-cardinality inner products against
+    * any other sketch, and each side's own row count), exactly how a
+    * planner holds per-table sketch state at 100 TB. */
+  private[graft] def cmsCollect(df: DataFrame): IndexedSeq[Array[(Int, Long, Long)]] = {
+    val cells = cmsKeySketch(df).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-    (cells.collect { case (0, d, b, c) => (d, b, c) },
-      cells.collect { case (1, d, b, c) => (d, b, c) })
+    df.columns.indices.map(ki => cells.collect { case (`ki`, d, b, c) => (d, b, c) })
   }
 
   /** The CMS join-cardinality estimate from two collected sketches:
@@ -1002,6 +982,41 @@ object Relational {
   private[graft] def cmsSideRows(a: Array[(Int, Long, Long)]): Long =
     a.iterator.filter(_._1 == 0).map(_._3).sum
 
+  private val CmsEps = 0.001   // over-estimate ≤ ε·N with prob 1−δ
+  private val CmsConf = 0.99   // 1−δ
+  private val CmsSeed = 42
+
+  /** One-pass count–min sketch of a one-column key frame — a fixed d×w
+    * counter grid built by `treeAggregate` (map-side partials merge
+    * pairwise; the driver holds kilobytes, never the key universe).
+    * Linear: per-batch sketches merged with `mergeInPlace` equal the
+    * one-shot sketch exactly. */
+  private[graft] def countMin(keys: DataFrame): org.apache.spark.util.sketch.CountMinSketch =
+    keys.stat.countMinSketch(keys.columns.head, CmsEps, CmsConf, CmsSeed)
+
+  /** Count–min heavy hitters CERTIFIED in-plan: `top` holds the exact
+    * top-k (key, n) of the one-column key frame `keys`, and for each
+    * row the [[countMin]] point estimate must satisfy the one-sided
+    * guarantee exact ≤ est ≤ exact + ε·N (a count-min sketch never
+    * under-counts; it over-counts by at most ε·N at the declared
+    * confidence). Output (key, n, within_bound): the oracle expects
+    * TRUE, so a broken sketch hash-mismatches, and the estimates
+    * themselves, which are engine-specific, stay out. The collect is
+    * bounded by k, not the key universe. */
+  private[graft] def cmsCertifiedTop[K: scala.reflect.runtime.universe.TypeTag](
+      keys: DataFrame, top: DataFrame): DataFrame = {
+    val k = keys.columns.head
+    val cms = countMin(keys)
+    val est = top.select(k).collect()
+      .map(r => r.getAs[K](0) -> cms.estimateCount(r.get(0))).toMap
+    val slack = math.ceil(CmsEps * cms.totalCount()).toLong
+    top
+      .withColumn("est", element_at(typedlit(est), col(k)))
+      .withColumn("within_bound",
+        col("est") >= col("n") && col("est") <= col("n") + lit(slack))
+      .select(col(k), col("n"), col("within_bound"))
+  }
+
   /** Above this `lineitem` population [[joinSizeEst]]'s EXACT join —
     * the certification term, a full two-sided shuffle that grows with
     * the corpus while the sketch stays one map-combine pass per side
@@ -1022,8 +1037,8 @@ object Relational {
       gateRows: Long): DataFrame = {
     val li = Tables.lineitem(s, dir).select(col("l_orderkey").as("k"))
     val or = Tables.orders(s, dir).select(col("o_orderkey").as("k"))
-    val skL = cmsCollect(li)
-    val skR = cmsCollect(or)
+    val skL = cmsCollect(li).head
+    val skR = cmsCollect(or).head
     val population = cmsSideRows(skL)
     val gated = population > gateRows
     val (liC, orC) =
@@ -1034,7 +1049,7 @@ object Relational {
     // certification terms: below the gate these ARE the full sketches
     // (zero extra work); above it, cohort sketches of the same frames
     // the cohort join reads
-    val (skLc, skRc) = if (gated) (cmsCollect(liC), cmsCollect(orC))
+    val (skLc, skRc) = if (gated) (cmsCollect(liC).head, cmsCollect(orC).head)
       else (skL, skR)
     val estC = cmsJoinRowsEst(skLc, skRc)
     val exact = liC.join(orC.hint("shuffle_hash"), Seq("k"))
@@ -1095,10 +1110,9 @@ object Relational {
     val ordersF = Tables.orders(s, dir)
       .filter(col("o_orderpriority") === CboPriority)
     val partF = Tables.part(s, dir).filter(col("p_size") <= CboMaxSize)
-    val (skLiO, skLiP) = cmsCollect2(li.select(
-      col("l_orderkey").as("k0"), col("l_partkey").as("k1")))
-    val skO = cmsCollect(ordersF.select(col("o_orderkey").as("k")))
-    val skP = cmsCollect(partF.select(col("p_partkey").as("k")))
+    val Seq(skLiO, skLiP) = cmsCollect(li.select("l_orderkey", "l_partkey"))
+    val skO = cmsCollect(ordersF.select("o_orderkey")).head
+    val skP = cmsCollect(partF.select("p_partkey")).head
     cboJoinOrderOf(li, ordersF, partF,
       cmsJoinRowsEst(skLiO, skO), cmsJoinRowsEst(skLiP, skP),
       cmsSideRows(skLiO), cmsSideRows(skO), cmsSideRows(skP))

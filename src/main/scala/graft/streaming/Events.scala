@@ -419,22 +419,17 @@ object Events {
         ((col("bucket") + 1) * HistW).as("hi"), col("n"))
       .orderBy("event_type", "bucket")
 
-  private val CmsEps = 0.001
-  private val CmsConf = 0.99
-  private val CmsSeed = 42
   private val TopUsers = 20
 
-  /** One-pass count–min sketch over the user key — a fixed d×w
-    * counter grid built by `treeAggregate` (map-side partials merge
-    * pairwise; the driver holds kilobytes, never the user universe). */
+  /** One-pass count–min sketch over the user key
+    * ([[graft.operators.Relational.countMin]]). */
   private[graft] def userCms(df: DataFrame): org.apache.spark.util.sketch.CountMinSketch =
-    df.stat.countMinSketch("user_id", CmsEps, CmsConf, CmsSeed)
+    graft.operators.Relational.countMin(df.select("user_id"))
 
   /** Count–min heavy hitters over the event stream's user key,
     * certified in-plan like [[valueQuantilesApprox]]: every exact
-    * top-20 user count must satisfy exact ≤ est ≤ exact + ε·N (a CMS
-    * never under-counts), and only the exact counts plus the
-    * certification flag are output — the oracle expects TRUE.
+    * top-20 user count must satisfy exact ≤ est ≤ exact + ε·N
+    * ([[graft.operators.Relational.cmsCertifiedTop]]).
     *
     * This is also the STREAMING sketch story: CMS is linear (counters
     * add), so per-micro-batch partial sketches merged with
@@ -445,17 +440,9 @@ object Events {
     * streaming job needs to keep. */
   def cmsHeavyUsers(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select("user_id")
-    val cms = userCms(ev)
     val top = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("user_id").asc).limit(TopUsers)
-    val users = top.select("user_id").collect().map(_.getLong(0)) // top-k-bounded
-    val est = users.map(u => u -> cms.estimateCount(java.lang.Long.valueOf(u))).toMap
-    val slack = math.ceil(CmsEps * cms.totalCount()).toLong
-    top
-      .withColumn("est", element_at(typedlit(est), col("user_id")))
-      .withColumn("within_bound",
-        col("est") >= col("n") && col("est") <= col("n") + lit(slack))
-      .select(col("user_id"), col("n"), col("within_bound"))
+    graft.operators.Relational.cmsCertifiedTop[Long](ev, top)
   }
 
   case class FunnelState(t1: Option[java.sql.Timestamp],

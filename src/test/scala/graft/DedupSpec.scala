@@ -736,4 +736,51 @@ class DedupSpec extends SparkSpec {
     assert(got(4L)._2 == 8 && got(5L)._2 == 8, "exact dups must fully scrub")
     assert(got(6L)._2 == 0, "sub-gram doc must pass untouched")
   }
+
+  /** The seven memoized cluster maps, each built through its public
+    * face; `minhash_clusters_base` has none (it is the standing map
+    * inside `dedup_incremental_clusters`), so the memo hands back the
+    * map that query built. */
+  private def clusterMaps(): Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    Dedup.incrementalClusters(spark, sf0001)
+    Seq(
+      "minhash_clusters" -> Dedup.clusters(spark, sf0001),
+      "minhash_clusters_base" -> Dedup.clusterMap(spark, sf0001,
+        "minhash_clusters_base")(sys.error("minhash_clusters_base was not built")),
+      "simhash_clusters" -> Dedup.simhashClusters(spark, sf0001),
+      "crossmodal_clusters" -> Dedup.crossModalClusters(spark, sf0001),
+      "image_clusters" -> ext.Multimodal.imageClusters(spark, sf0001),
+      "knn_clusters" -> ext.Similarity.knnClusters(spark, sf0001),
+      "embedding_clusters" -> ext.Similarity.embeddingClusters(spark, sf0001))
+  }
+
+  private def pinnedRdd(map: org.apache.spark.sql.DataFrame): Int =
+    map.queryExecution.analyzed.collectLeaves() match {
+      case Seq(l: org.apache.spark.sql.execution.LogicalRDD) => l.rdd.id
+      case leaves => fail(s"expected one checkpoint (LogicalRDD) leaf, got $leaves")
+    }
+
+  test("each memoized cluster map is one pinned checkpoint, with no cache on top") {
+    SessionMemo.clear(spark)
+    clusterMaps().foreach { case (name, map) =>
+      assert(map.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        s"$name is cached on top of its checkpoint: ${map.storageLevel}")
+      assert(spark.sparkContext.getPersistentRDDs.contains(pinnedRdd(map)),
+        s"$name: its checkpoint is not pinned")
+    }
+    SessionMemo.clear(spark)
+  }
+
+  test("reading the seven cluster maps pins no second copy; clear returns to baseline") {
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    SessionMemo.clear(spark)
+    val baseline = pinned
+    val maps = clusterMaps()
+    val built = pinned
+    assert(maps.map(m => pinnedRdd(m._2)).toSet.subsetOf(built -- baseline))
+    maps.foreach { case (_, map) => map.count() }
+    assert(pinned == built, s"reading the maps pinned ${pinned -- built} on top")
+    SessionMemo.clear(spark)
+    assert(pinned == baseline, "SessionMemo.clear left cluster-map blocks pinned")
+  }
 }

@@ -158,18 +158,16 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("cbo statistics pass: both fact-key sketches fold into ONE scan") {
     import org.apache.spark.sql.functions.col
     val li = Tables.lineitem(spark, sf0001)
-    val both = operators.Relational.cmsKeySketchBoth(
-      li.select(col("l_orderkey").as("k0"), col("l_partkey").as("k1")))
+    val both = operators.Relational.cmsKeySketch(
+      li.select(col("l_orderkey"), col("l_partkey")))
     val s = executed(both).toString
     assert(s.linesIterator.count(_.contains("Scan parquet")) == 1,
       s"two-key sketch reads more than one scan:\n$s")
     // the folded cells equal the two separate single-key collections
-    val (sO, sP) = operators.Relational.cmsCollect2(
-      li.select(col("l_orderkey").as("k0"), col("l_partkey").as("k1")))
-    val oneO = operators.Relational.cmsCollect(
-      li.select(col("l_orderkey").as("k")))
-    val oneP = operators.Relational.cmsCollect(
-      li.select(col("l_partkey").as("k")))
+    val Seq(sO, sP) = operators.Relational.cmsCollect(
+      li.select(col("l_orderkey"), col("l_partkey")))
+    val oneO = operators.Relational.cmsCollect(li.select(col("l_orderkey"))).head
+    val oneP = operators.Relational.cmsCollect(li.select(col("l_partkey"))).head
     assert(sO.sorted.sameElements(oneO.sorted) &&
       sP.sorted.sameElements(oneP.sorted),
       "folded sketches drifted from the single-key collections")
